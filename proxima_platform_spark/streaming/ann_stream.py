@@ -2,9 +2,8 @@
 per micro-batch — approximate nearest-neighbor queries over an unbounded,
 growing corpus without rebuilding.
 
-The ``ContinuousRollup``/``ContinuousHeavyHitters`` manifest pattern
-applied to the ANN family: each micro-batch's vectors are bucket-assigned
-by the SAME integer-exact Arrow stage the batch operators use
+A ``GenerationStore`` over the ANN family: each micro-batch's vectors are
+bucket-assigned by the SAME integer-exact Arrow stage the batch operators use
 (``similarity.sign_lsh_buckets_arrow``), appended as a delta parquet
 generation, and compacted every N generations. A query hashes itself with
 the identical integer math (mirrored in pure Python — the plane family is
@@ -13,10 +12,9 @@ executors agree bit-for-bit), reads ONLY its buckets (predicate pushed to
 the parquet scan), and ranks candidates by exact cosine.
 
 Consistency contract: ids are append-only across the stream (the corpus
-ingestion shape); ``update`` is idempotent on replayed micro-batches via
-the max-committed-batch_id guard — the standard foreachBatch
-at-least-once discipline. State per generation is O(rows·num_tables) —
-the index IS the data plus its bucket keys; no driver-side structure.
+ingestion shape); ``update`` is idempotent on replayed micro-batches.
+State per generation is O(rows·num_tables) — the index IS the data plus
+its bucket keys; no driver-side structure.
 
 At 1000 executors: deltas land as ordinary parquet appends, compaction is
 one bucket-partitioned fold, and queries touch ~num_tables·n/2^planes
@@ -25,10 +23,7 @@ rows — the same candidate-volume math as the batch LSH join.
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -38,6 +33,7 @@ from proxima_platform_spark.functions.similarity import (
     cosine_similarity,
     sign_lsh_buckets_arrow,
 )
+from proxima_platform_spark.streaming.store import GenerationStore
 
 
 def _query_buckets(
@@ -148,21 +144,10 @@ def semantic_dedup_stream(
     return stream_emb.writeStream.foreachBatch(handle)
 
 
-class ContinuousAnnIndex:
+class ContinuousAnnIndex(GenerationStore):
     """``update(batch)`` is usable directly as a ``foreachBatch``
     callback; ``query_df(vec, k)`` returns the top-k bucket mates by
-    exact cosine as a DataFrame.
-
-    Storage contract: ``path`` must be a SHARED POSIX filesystem mounted
-    identically on the driver and every executor (NFS/Lustre/local in
-    single-node mode). The manifest and GC are driver-local ``os``/
-    ``json``/``shutil`` operations while executors write the parquet
-    generations to the same path — on object stores or HDFS (``s3a://``,
-    ``hdfs://`` checkpoint-style locations) the manifest/GC path would
-    silently break. Porting to those stores means routing the manifest
-    I/O through the Hadoop FileSystem API (``spark._jvm.org.apache.
-    hadoop.fs.FileSystem``), which is deliberately out of scope here;
-    the constructor rejects non-POSIX URIs loudly instead."""
+    exact cosine as a DataFrame."""
 
     def __init__(
         self,
@@ -175,37 +160,11 @@ class ContinuousAnnIndex:
         num_tables: int = 2,
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.id_col = id_col
         self.vec_col = vec_col
         self.num_planes = num_planes
         self.num_tables = num_tables
-        self.compact_every = compact_every
-        if "://" in path:
-            raise ValueError(
-                f"ContinuousAnnIndex path must be a plain shared-POSIX path "
-                f"(got {path!r}); manifest/GC use driver-local file I/O — "
-                f"see class docstring"
-            )
-        os.makedirs(path, exist_ok=True)
-
-    # -- manifest (the ContinuousRollup pattern) ----------------------------
-
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"version": 0, "base": None, "deltas": [], "max_batch_id": None}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    # -- maintenance ---------------------------------------------------------
 
     def _bucketed(self, batch: DataFrame) -> DataFrame:
         staged = sign_lsh_buckets_arrow(
@@ -228,71 +187,16 @@ class ContinuousAnnIndex:
             F.col("__tb.b").alias("bucket"),
         )
 
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        m = self._manifest()
-        # foreachBatch is at-least-once: replays carry the same monotonic
-        # batch_id — no-op instead of double-inserting the batch's vectors
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        # overwrite: the manifest is the commit point — a crash between
-        # this write and the manifest write leaves an orphan dir the
-        # replay must be able to rewrite
-        self._bucketed(batch).write.mode("overwrite").parquet(
-            f"{self.path}/{delta}"
-        )
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        paths = ([m["base"]] if m["base"] else []) + m["deltas"]
-        if not paths:
-            return
-        new_base = f"base/g{m['version']}"
-        (
-            self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
-            .write.mode("overwrite")
-            .parquet(f"{self.path}/{new_base}")
-        )
-        old = paths
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
-        self._gc_unreferenced(m)
-
-    def _gc_unreferenced(self, m: dict) -> None:
-        """Remove generation dirs no manifest references — a crash between
-        a compaction's parquet writes and its manifest commit leaves an
-        orphan base/g{N} the retried stream never revisits (the replayed
-        batch no-ops on the batch_id guard). The manifest is the only
-        commit point, so after a successful commit anything else on disk
-        is garbage; update/_compact run sequentially inside foreachBatch,
-        so no write is in flight here."""
-        referenced = {p for p in [m["base"], *m["deltas"]] if p}
-        for sub in ("base", "delta"):
-            d = f"{self.path}/{sub}"
-            if not os.path.isdir(d):
-                continue
-            for g in os.listdir(d):
-                if f"{sub}/{g}" not in referenced:
-                    shutil.rmtree(f"{d}/{g}", ignore_errors=True)
+    def _delta(self, batch, batch_id, m) -> DataFrame:
+        return self._bucketed(batch)
 
     # -- reads ---------------------------------------------------------------
 
     def _frames(self) -> DataFrame:
-        m = self._manifest()
-        paths = ([m["base"]] if m["base"] else []) + m["deltas"]
-        if not paths:
+        idx = self._state()
+        if idx is None:
             raise LookupError("continuous ANN index is empty")
-        return self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
+        return idx
 
     def near_dups_of(
         self, batch: DataFrame, *, threshold: float, exclude_self: bool = False

@@ -33,8 +33,8 @@ contract documented on their ``ingest``.
 At scale: state is O(docs · bands) strings — the smallest per-doc
 state of any maintainer family; the per-batch probe is one equi-join
 ON the band key (batch side small — AQE broadcasts it) and one
-distinct. Same shared-POSIX-path base+delta manifest as the other
-maintainers (inherited from ``ContinuousWinnowIndex``).
+distinct. Storage is the ``GenerationStore`` inherited from
+``ContinuousWinnowIndex``.
 """
 
 from __future__ import annotations
@@ -47,11 +47,10 @@ from proxima_platform_spark.streaming.winnow_stream import (
 
 
 class ContinuousBandIndex(ContinuousWinnowIndex):
-    """Append-only ``(doc_id, fp)`` band-key index with base+delta
-    parquet generations and the max-committed-batch_id replay guard.
-    Subclasses implement :meth:`_band_rows` with the batch operator's
-    own banding stage; ``ingest(batch_df, batch_id)`` is then a valid
-    ``foreachBatch`` callback."""
+    """Append-only ``(doc_id, fp)`` band-key index. Subclasses implement
+    :meth:`_band_rows` with the batch operator's own banding stage;
+    ``ingest(batch_df, batch_id)`` is then a valid ``foreachBatch``
+    callback."""
 
     def _band_rows(self, batch_df: DataFrame) -> DataFrame:
         """``(id, band)`` rows for the batch — the batch operator's

@@ -25,23 +25,19 @@ consistently (reference get():268-286). No per-version directory copies. On a
 lakehouse deployment base+delta+manifest maps 1:1 onto a Delta/Iceberg table
 (MERGE + time travel); this layout is the dependency-free equivalent.
 
-The manifest (``manifest.json``, atomically replaced) pins the exact file
-sets a reader sees, so concurrent readers never observe a half-written batch.
+Storage, replay guard and compaction are :class:`GenerationStore`'s; the
+view supplies the TTL-pruning merge.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import time
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from proxima_platform_spark.changelog import snapshot as snapshot_read
+from proxima_platform_spark.streaming.store import GenerationStore
 
 
-class CachedView:
+class CachedView(GenerationStore):
     """Incrementally-maintained materialization of a changelog.
 
     ``ttl_ms`` mirrors TimeBoundedVersionedCache: the newest element per
@@ -59,77 +55,29 @@ class CachedView:
         compact_every: int = 8,
         ttl_ms: int = 3_600_000,
     ) -> None:
-        self.spark = spark
-        self.path = path.rstrip("/")
-        self.compact_every = compact_every
+        super().__init__(spark, path, compact_every=compact_every)
         self.ttl_ms = ttl_ms
-        os.makedirs(self.path, exist_ok=True)
-
-    # -- manifest ----------------------------------------------------------
-
-    def _manifest(self) -> dict:
-        mf = f"{self.path}/manifest.json"
-        if not os.path.exists(mf):
-            return {"version": 0, "base": None, "deltas": [], "high_watermark": None}
-        with open(mf) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")  # atomic swap for readers
 
     def current_version(self) -> int | None:
         v = self._manifest()["version"]
         return v if v > 0 else None
 
     def current(self) -> DataFrame | None:
-        m = self._manifest()
-        paths = ([m["base"]] if m["base"] else []) + m["deltas"]
-        if not paths:
-            return None
-        return self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
+        return self._union(self._gens(self._manifest()))
 
-    # -- maintenance (assign(partitions) analog) ----------------------------
-
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        """Apply a changelog micro-batch: append one delta file set (O(batch)
-        I/O), advance the manifest, compact every ``compact_every`` batches.
-        Usable directly as a foreachBatch callback."""
-        m = self._manifest()
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        batch.write.parquet(f"{self.path}/{delta}")
-        hwm = batch.agg(F.max("stamp")).first()[0]
-        # an empty batch (hwm None) must not touch the watermark — str(None)
-        # would poison every later lexicographic comparison
-        if hwm is not None and (
-            m["high_watermark"] is None or str(hwm) > m["high_watermark"]
-        ):
-            m["high_watermark"] = str(hwm)
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        """Fold base + deltas into a new base generation, pruning history
-        beyond the TTL (keeping the newest element per (entity, key,
-        attribute) unconditionally — TimeBoundedVersionedCache semantics)."""
+    def _merged(self, gens: list[str]) -> DataFrame:
+        """Fold generations, pruning history beyond the TTL (keeping the
+        newest element per (entity, key, attribute) unconditionally —
+        TimeBoundedVersionedCache semantics)."""
         from pyspark.sql import Window
 
-        m = self._manifest()
-        merged = self.current()
-        if merged is None:
-            return
+        merged = self._union(gens)
         w = Window.partitionBy("entity", "key", "attribute").orderBy(
             F.col("stamp").desc(), F.col("seq_id").desc_nulls_last()
         )
         hwm_us = merged.agg(F.max(F.unix_micros("stamp"))).first()[0]
         cutoff_us = (hwm_us or 0) - self.ttl_ms * 1000
-        pruned = (
+        return (
             merged.withColumn("__rank", F.row_number().over(w))
             .where(
                 (F.col("__rank") == 1)
@@ -137,13 +85,6 @@ class CachedView:
             )
             .drop("__rank")
         )
-        new_base = f"base/g{m['version']}"
-        pruned.write.parquet(f"{self.path}/{new_base}")
-        old_paths = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old_paths:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
 
     # -- reads (CachedView.get / time travel) -------------------------------
 

@@ -56,10 +56,6 @@ only index-sized shuffle) + the KN gate's own bounded gram agg.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -72,9 +68,10 @@ from proxima_platform_spark.streaming.classify_stream import (
     ContinuousNaiveBayes,
 )
 from proxima_platform_spark.streaming.lm_stream import ContinuousKneserNey
+from proxima_platform_spark.streaming.store import GenerationStore
 
 
-class ContinuousCcnet:
+class ContinuousCcnet(GenerationStore):
     """Continuously-maintained CCNet intake pipeline.
 
     ``ingest(batch)`` folds a micro-batch of raw documents (cross-batch
@@ -82,6 +79,8 @@ class ContinuousCcnet:
     per-(predicted language, head/middle/tail) intake summary — equal to
     batch ``ccnet_pipeline`` on the union of every ingested batch.
     """
+
+    _parts = ("kept",)
 
     def __init__(
         self,
@@ -112,8 +111,9 @@ class ContinuousCcnet:
                 "ContinuousCcnet: kn gate columns "
                 f"{(kn.id_col, kn.text_col)} != {(id_col, text_col)}"
             )
-        self.spark = spark
-        self.path = path
+        super().__init__(
+            spark, path, compact_every=compact_every, max_id=None
+        )
         self.nb = nb
         self.kn = kn
         self.id_col = id_col
@@ -122,31 +122,9 @@ class ContinuousCcnet:
         self.lo_q = lo_q
         self.hi_q = hi_q
         self.delimiter = delimiter
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
 
-    # -- manifest (maintainer-family shape) ---------------------------------
-
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"version": 0, "base": None, "deltas": [],
-                    "max_batch_id": None, "max_id": None}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    def _merged(self, gens: list[str]) -> DataFrame | None:
-        if not gens:
-            return None
-        frames = self.spark.read.parquet(
-            *[f"{self.path}/{g}/kept" for g in gens]
-        )
+    def _merged(self, gens: list[str]) -> DataFrame:
+        frames = self._union(gens, "kept")
         # min-struct re-merge across generations: associative + idempotent,
         # so the merged frame IS the union corpus's winner table
         return (
@@ -164,8 +142,7 @@ class ContinuousCcnet:
 
     def winners(self) -> DataFrame | None:
         """The maintained paragraph winner table (__fp, id, pos, para)."""
-        m = self._manifest()
-        return self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
+        return self._state()
 
     # -- updates -------------------------------------------------------------
 
@@ -184,11 +161,9 @@ class ContinuousCcnet:
         gate. The KN update must see only paragraphs new to the whole
         corpus — an fp anti-join against the prior index — so the gate's
         gram table tracks the union's deduped corpus exactly."""
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
+        self.update(batch, batch_id)
+
+    def _delta(self, batch, batch_id, m) -> DataFrame:
         # ENFORCE the ordering contract instead of only documenting it: a
         # batch carrying an id at or below the committed high-water mark
         # could beat an existing paragraph winner, silently corrupting the
@@ -199,7 +174,7 @@ class ContinuousCcnet:
             F.min(self.id_col).alias("lo"), F.max(self.id_col).alias("hi")
         ).first()
         if bounds["lo"] is not None:
-            if m.get("max_id") is not None and bounds["lo"] <= m["max_id"]:
+            if m["max_id"] is not None and bounds["lo"] <= m["max_id"]:
                 raise ValueError(
                     f"ContinuousCcnet: batch min {self.id_col}="
                     f"{bounds['lo']!r} does not exceed the committed "
@@ -209,7 +184,7 @@ class ContinuousCcnet:
                 )
             m["max_id"] = bounds["hi"]
         wins = self._batch_winners(batch).localCheckpoint(eager=False)
-        prior = self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
+        prior = self._state(m)
         if prior is None:
             fresh = wins
         else:
@@ -226,27 +201,7 @@ class ContinuousCcnet:
         # manifest lets the replay redo both (the kn manifest's own
         # batch-id guard makes the redo a no-op on its side)
         self.kn.update(clean_b, batch_id=batch_id)
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        wins.write.mode("overwrite").parquet(f"{self.path}/{delta}/kept")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
-        if merged is None:
-            return
-        new_base = f"base/g{m['version']}"
-        merged.write.mode("overwrite").parquet(f"{self.path}/{new_base}/kept")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
+        return wins
 
     # -- reads ----------------------------------------------------------------
 
@@ -290,12 +245,3 @@ class ContinuousCcnet:
             clean, pred, kn, lo_q=self.lo_q, hi_q=self.hi_q,
             id_col=self.id_col, text_col=self.text_col,
         )
-
-    def foreach_batch(self):
-        """Adapter for ``writeStream.foreachBatch`` (replayed batch ids
-        are no-ops via the manifest guard)."""
-
-        def fn(batch: DataFrame, batch_id: int) -> None:
-            self.ingest(batch, batch_id=batch_id)
-
-        return fn

@@ -14,19 +14,13 @@ union of everything ingested (the scoring code is literally shared:
 ``nb_classify_from_counts``). State is bounded by |classes| x |vocab|,
 never by corpus size.
 
-Base+delta parquet generations under a shared POSIX path with the
-max-committed batch-id guard — the maintainer family shape
-(``sketch_stream.ContinuousQuantileSketch``; replaying a batch id is a
-no-op). Re-delivering the same documents under a NEW batch id is a
-contract violation (counts are additive, not idempotent) — the same
-at-least-once boundary every count-based maintainer in the family draws.
+Storage is a ``GenerationStore`` (replaying a batch id is a no-op).
+Re-delivering the same documents under a NEW batch id is a contract
+violation (counts are additive, not idempotent) — the same at-least-once
+boundary every count-based maintainer in the family draws.
 """
 
 from __future__ import annotations
-
-import json
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,9 +29,10 @@ from proxima_platform_spark.functions.classify import (
     nb_classify_from_counts,
     nb_counts,
 )
+from proxima_platform_spark.streaming.store import GenerationStore
 
 
-class ContinuousNaiveBayes:
+class ContinuousNaiveBayes(GenerationStore):
     """Continuously-maintained multinomial Naive Bayes model.
 
     ``update(batch)`` folds a micro-batch of labeled documents;
@@ -45,6 +40,8 @@ class ContinuousNaiveBayes:
     equal to the batch classifier trained on the union (pinned in tests
     across batch splits and replay).
     """
+
+    _parts = ("cwc", "cdocs")
 
     def __init__(
         self,
@@ -56,86 +53,31 @@ class ContinuousNaiveBayes:
         label_col: str = "lang",
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.id_col = id_col
         self.text_col = text_col
         self.label_col = label_col
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
 
-    # -- manifest (maintainer-family shape) ---------------------------------
-
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"version": 0, "base": None, "deltas": [],
-                    "max_batch_id": None}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    def _merged(self, gens: list[str]) -> tuple[DataFrame, DataFrame] | None:
-        if not gens:
-            return None
-        cwc = (
-            self.spark.read.parquet(*[f"{self.path}/{g}/cwc" for g in gens])
-            .groupBy("c", "w").agg(F.sum("cnt").alias("cnt"))
+    def _merged(self, gens: list[str]) -> tuple[DataFrame, DataFrame]:
+        cwc = self._union(gens, "cwc").groupBy("c", "w").agg(
+            F.sum("cnt").alias("cnt")
         )
-        cdocs = (
-            self.spark.read.parquet(*[f"{self.path}/{g}/cdocs" for g in gens])
-            .groupBy("c").agg(F.sum("nc").alias("nc"))
+        cdocs = self._union(gens, "cdocs").groupBy("c").agg(
+            F.sum("nc").alias("nc")
         )
         return cwc, cdocs
 
-    # -- updates -------------------------------------------------------------
-
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        cwc, cdocs = nb_counts(
+    def _delta(self, batch, batch_id, m) -> tuple[DataFrame, DataFrame]:
+        return nb_counts(
             batch, id_col=self.id_col, text_col=self.text_col,
             label_col=self.label_col,
         )
-        cwc.write.mode("overwrite").parquet(f"{self.path}/{delta}/cwc")
-        cdocs.write.mode("overwrite").parquet(f"{self.path}/{delta}/cdocs")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
-        if merged is None:
-            return
-        cwc, cdocs = merged
-        new_base = f"base/g{m['version']}"
-        cwc.write.mode("overwrite").parquet(f"{self.path}/{new_base}/cwc")
-        cdocs.write.mode("overwrite").parquet(f"{self.path}/{new_base}/cdocs")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
 
     # -- reads ----------------------------------------------------------------
 
     def counts(self) -> tuple[DataFrame, DataFrame] | None:
         """The merged sufficient statistics (cwc, cdocs)."""
-        m = self._manifest()
-        return self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
+        return self._state()
 
     def classify(
         self, test: DataFrame, *, top_k_features: int | None = None
@@ -172,12 +114,3 @@ class ContinuousNaiveBayes:
             cwc, cdocs, test, id_col=self.id_col, text_col=self.text_col,
             label_col=self.label_col,
         )
-
-    def foreach_batch(self):
-        """Adapter for ``writeStream.foreachBatch`` (replayed batch ids are
-        no-ops via the manifest guard)."""
-
-        def fn(batch: DataFrame, batch_id: int) -> None:
-            self.update(batch, batch_id=batch_id)
-
-        return fn

@@ -4,11 +4,10 @@ stream — the streaming twin of ``functions/dedup.containment_pairs``,
 completing the streaming dedup tier (exact / minhash / winnow /
 containment).
 
-The ``ContinuousWinnowIndex`` manifest pattern applied to Broder'97
-containment: each micro-batch's documents are shingled by the SAME
-expression stage the batch operator uses, probed against the union of
-the index-so-far and the batch itself, and appended as a delta parquet
-generation.
+The ``ContinuousWinnowIndex`` index applied to Broder'97 containment:
+each micro-batch's documents are shingled by the SAME expression stage
+the batch operator uses, probed against the union of the index-so-far
+and the batch itself, and appended as a delta parquet generation.
 
 Report semantics (the exact-twin argument): a document's shingle set
 arrives ATOMICALLY with its batch, so when the LATER member of a pair
@@ -42,8 +41,7 @@ At scale: state is O(docs · distinct shingles per doc) rows; the
 per-batch probe is one equi-join ON the shingle (batch side small —
 AQE broadcasts it), one count-distinct per candidate pair, one
 broadcast-joinable sizes frame — the batch operator's shape with the
-big side replaced by the maintained index. Same shared-POSIX-path
-storage contract as the other maintainers.
+big side replaced by the maintained index.
 """
 
 from __future__ import annotations
@@ -56,10 +54,8 @@ from proxima_platform_spark.streaming.winnow_stream import (
 
 
 class ContinuousContainmentIndex(ContinuousWinnowIndex):
-    """Append-only ``(doc_id, s)`` shingle index with base+delta parquet
-    generations (manifest machinery inherited from
-    :class:`ContinuousWinnowIndex`), replay-safe via the
-    max-committed-batch_id guard.
+    """Append-only ``(doc_id, s)`` shingle index (storage inherited from
+    :class:`ContinuousWinnowIndex`).
 
     ``ingest(batch_df, batch_id)`` runs the full online step — shingle
     the batch, report directional containment pairs to ``sink``, fold

@@ -2,9 +2,9 @@
 of ``functions/urls.domain_cap_sample`` (VERDICT r07 'Next round' #5).
 
 An arriving crawl can't re-rank the whole corpus per micro-batch; this
-maintainer keeps per-registered-domain ACCEPTED counts as base+delta
-parquet generations (the ``ContinuousDsir`` manifest pattern — state is
-O(|domains|) rows, never corpus-sized) and decides each batch online:
+maintainer keeps per-registered-domain ACCEPTED counts in a
+``GenerationStore`` (state is O(|domains|) rows, never corpus-sized) and
+decides each batch online:
 **first-arrival-wins under the cap** — earlier batches consume a
 domain's quota first; within one batch the deterministic md5 sampling
 key breaks ties exactly like the batch operator, so the accepted set is
@@ -32,16 +32,11 @@ Scale: per batch the maintainer writes <= |batch domains| delta rows
 and reads back O(generations × domains) rows (compacted every
 ``compact_every`` batches); the decision join is one hash equi-join on
 the domain key (counts side is domain-cardinality, not corpus-sized)
-plus one per-(batch, domain) window — batch-bounded sorts. ``path``
-must be a shared POSIX filesystem (manifest and GC are driver-local
-file I/O — the ``ContinuousAnnIndex`` contract).
+plus one per-(batch, domain) window — batch-bounded sorts.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -52,9 +47,10 @@ from proxima_platform_spark.functions.urls import (
     url_canonicalize,
     url_host,
 )
+from proxima_platform_spark.streaming.store import GenerationStore
 
 
-class ContinuousDomainCap:
+class ContinuousDomainCap(GenerationStore):
     """``update(batch, batch_id)`` is usable directly as a
     ``foreachBatch`` callback. ``sink(verdicts_df, batch_id)`` receives
     (id, url_canon, domain, accepted) for every batch row — it MUST
@@ -75,44 +71,25 @@ class ContinuousDomainCap:
     ) -> None:
         if cap < 0:
             raise ValueError(f"cap must be >= 0, got {cap}")
-        if "://" in path:
-            raise ValueError(
-                "ContinuousDomainCap state path must be a POSIX filesystem "
-                f"path (manifest/GC are driver-local file I/O), got {path!r}"
-            )
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.url_col = url_col
         self.id_col = id_col
         self.cap = cap
         self.salt = salt
         self.sink = sink
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
-
-    # -- manifest (the ContinuousDsir pattern) -------------------------------
-
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"version": 0, "base": None, "deltas": [], "max_batch_id": None}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
 
     # -- accepted-count frames -----------------------------------------------
 
+    def _merged(self, gens: list[str]) -> DataFrame:
+        return self._union(gens).groupBy("domain").agg(
+            F.sum("n_acc").alias("n_acc")
+        )
+
     def _counts(self, m: dict) -> DataFrame:
-        paths = ([m["base"]] if m["base"] else []) + m["deltas"]
-        if not paths:
+        counts = self._state(m)
+        if counts is None:
             return self.spark.createDataFrame([], "domain string, n_acc long")
-        df = self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
-        return df.groupBy("domain").agg(F.sum("n_acc").alias("n_acc"))
+        return counts
 
     def accepted_counts(self) -> DataFrame:
         """The CURRENT (domain, n_acc) frame — the quota the next batch
@@ -133,18 +110,12 @@ class ContinuousDomainCap:
         )
         return staged.withColumn("__rn", F.row_number().over(w))
 
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        m = self._manifest()
-        # replay of a COMMITTED batch: full no-op before any decision —
-        # batch ids are monotonic, so "seen" is exactly "<= max committed"
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        counts = self._counts(m)
+    def _delta(self, batch, batch_id, m) -> DataFrame:
+        # a replay of a COMMITTED batch never gets here: the store's guard
+        # no-ops it before any decision
         verdicts = (
             self._staged(batch)
-            .join(counts, "domain", "left")
+            .join(self._counts(m), "domain", "left")
             .select(
                 self.id_col,
                 "url_canon",
@@ -163,34 +134,8 @@ class ContinuousDomainCap:
         # the sink's batch_id guard absorbs the duplicate delivery
         if self.sink is not None:
             self.sink(verdicts, batch_id)
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        # overwrite: a crashed attempt may have left an orphan at this
-        # versioned path; the manifest write below is the commit point
-        (
+        return (
             verdicts.where("accepted")
             .groupBy("domain")
             .agg(F.count(F.lit(1)).alias("n_acc"))
-            .write.mode("overwrite")
-            .parquet(f"{self.path}/{delta}")
         )
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        paths = ([m["base"]] if m["base"] else []) + m["deltas"]
-        if not paths:
-            return
-        new_base = f"base/g{m['version']}"
-        self._counts(m).write.mode("overwrite").parquet(
-            f"{self.path}/{new_base}"
-        )
-        old = paths
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)

@@ -2,10 +2,9 @@
 of ``functions/sampling.dsir_resample``'s ratio machinery.
 
 An arriving corpus can't rebuild the raw-distribution q from scratch per
-micro-batch; this maintainer keeps the hashed-bigram bucket counts as
-base+delta parquet generations (the ``ContinuousHeavyHitters`` /
-``ContinuousRollup`` manifest pattern — state is O(buckets) CELLS, a few
-hundred rows, regardless of corpus size) and scores each batch
+micro-batch; this maintainer keeps the hashed-bigram bucket counts in a
+``GenerationStore`` (state is O(buckets) CELLS, a few hundred rows,
+regardless of corpus size) and scores each batch
 PREQUENTIALLY: against the ratio frame derived from the counts of every
 batch BEFORE it. The target distribution p comes from a static curated
 corpus whose counts are written once at init.
@@ -22,15 +21,12 @@ scores the sink commits for a batch are the prequential ones.
 Scale: per batch the maintainer writes <= ``buckets`` delta rows and
 reads back O(generations x buckets) rows (compacted every
 ``compact_every`` batches); scoring is the same broadcast-ratio join as
-the batch path. ``path`` must be a shared POSIX filesystem (manifest and
-GC are driver-local file I/O — the ``ContinuousAnnIndex`` contract).
+the batch path.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -40,9 +36,10 @@ from proxima_platform_spark.functions.sampling import (
     dsir_doc_log_weights,
     dsir_ratios_from_counts,
 )
+from proxima_platform_spark.streaming.store import GenerationStore
 
 
-class ContinuousDsir:
+class ContinuousDsir(GenerationStore):
     """``update(batch, batch_id)`` is usable directly as a
     ``foreachBatch`` callback. ``sink(scored_df, batch_id)`` receives
     (id, n_grams, logw) for each batch — it MUST materialize the frame
@@ -61,100 +58,56 @@ class ContinuousDsir:
         sink: Callable[[DataFrame, int | None], None] | None = None,
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.id_col = id_col
         self.text = text
         self.buckets = buckets
         self.smooth = smooth
         self.sink = sink
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
-        tgt = f"{path}/target"
+        tgt = f"{self.path}/target"
         if not os.path.exists(tgt):
             dsir_bucket_counts(
                 target, text=text, buckets=buckets, name="n_tgt"
             ).write.mode("overwrite").parquet(tgt)
 
-    # -- manifest (the ContinuousHeavyHitters pattern) -----------------------
-
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"version": 0, "base": None, "deltas": [], "max_batch_id": None}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
     # -- count frames --------------------------------------------------------
 
+    def _merged(self, gens: list[str]) -> DataFrame:
+        return self._union(gens).groupBy("b").agg(
+            F.sum("n_raw").alias("n_raw")
+        )
+
     def _raw_counts(self, m: dict) -> DataFrame:
-        paths = ([m["base"]] if m["base"] else []) + m["deltas"]
-        if not paths:
+        counts = self._state(m)
+        if counts is None:
             return self.spark.createDataFrame([], "b long, n_raw long")
-        df = self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
-        return df.groupBy("b").agg(F.sum("n_raw").alias("n_raw"))
+        return counts
+
+    def _ratios(self, m: dict) -> DataFrame:
+        ct = self.spark.read.parquet(f"{self.path}/target")
+        return dsir_ratios_from_counts(
+            ct, self._raw_counts(m), buckets=self.buckets, smooth=self.smooth
+        )
 
     def ratios(self) -> DataFrame:
         """The CURRENT (b, lr) ratio frame — what the next batch will be
         scored against."""
-        ct = self.spark.read.parquet(f"{self.path}/target")
-        return dsir_ratios_from_counts(
-            ct, self._raw_counts(self._manifest()),
-            buckets=self.buckets, smooth=self.smooth,
-        )
+        return self._ratios(self._manifest())
 
     # -- maintenance ---------------------------------------------------------
 
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        m = self._manifest()
-        # replay of a COMMITTED batch: full no-op before any scoring —
-        # batch ids are monotonic, so "seen" is exactly "<= max committed"
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        ct = self.spark.read.parquet(f"{self.path}/target")
-        lr = dsir_ratios_from_counts(
-            ct, self._raw_counts(m), buckets=self.buckets, smooth=self.smooth
-        )
+    def _delta(self, batch, batch_id, m) -> DataFrame:
+        # a replay of a COMMITTED batch never gets here: the store's guard
+        # no-ops it before any scoring
         scored = dsir_doc_log_weights(
-            batch, lr, id_col=self.id_col, text=self.text, buckets=self.buckets
+            batch, self._ratios(m),
+            id_col=self.id_col, text=self.text, buckets=self.buckets,
         )
         # sink BEFORE the delta commit (r06-advice ordering): a crash in
         # between replays against unchanged counts -> identical scores ->
         # the sink's batch_id guard absorbs the duplicate delivery
         if self.sink is not None:
             self.sink(scored, batch_id)
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        # overwrite: a crashed attempt may have left an orphan at this
-        # versioned path; the manifest write below is the commit point
-        dsir_bucket_counts(
+        return dsir_bucket_counts(
             batch, text=self.text, buckets=self.buckets, name="n_raw"
-        ).write.mode("overwrite").parquet(f"{self.path}/{delta}")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        paths = ([m["base"]] if m["base"] else []) + m["deltas"]
-        if not paths:
-            return
-        new_base = f"base/g{m['version']}"
-        self._raw_counts(m).write.mode("overwrite").parquet(
-            f"{self.path}/{new_base}"
         )
-        old = paths
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)

@@ -2,17 +2,15 @@
 eval trio (``functions/evalmetrics``: rank_auc / precision_at_k /
 ndcg_at_k), VERDICT r08 'Next round' #6.
 
-Real pipelines monitor retrieval quality ONLINE: labeled judgments
-arrive in micro-batches (human ratings, click-derived labels, freshly
-scored candidates) and each batch should move the exact metrics, not an
+Real pipelines monitor retrieval quality ONLINE: labeled judgments arrive
+in micro-batches (human ratings, click-derived labels, freshly scored
+candidates) and each batch should move the exact metrics, not an
 approximation. :class:`ContinuousEvalMetrics` maintains the growing
-labeled set with the base+delta generation layout shared by the other
-maintainers (``sketch_stream.ContinuousQuantileSketch`` shape) and
-computes metrics over the union — EXACTLY equal to the batch functions
-on everything ingested, because the maintained state IS the
-deduplicated union (rank metrics have no mergeable sketch form; the
-labeled set itself is the sufficient statistic, and eval sets are
-top-N/judged frames by contract — thousands of rows, never the
+labeled set in a ``GenerationStore`` and computes metrics over the union —
+EXACTLY equal to the batch functions on everything ingested, because the
+maintained state IS the deduplicated union (rank metrics have no mergeable
+sketch form; the labeled set itself is the sufficient statistic, and eval
+sets are top-N/judged frames by contract — thousands of rows, never the
 corpus).
 
 Reference parity: the reference serves this shape with a cached-view
@@ -24,15 +22,13 @@ exact replay idempotence.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from proxima_platform_spark.streaming.store import GenerationStore
 
-class ContinuousEvalMetrics:
+
+class ContinuousEvalMetrics(GenerationStore):
     """Continuously-maintained exact rank metrics over a growing labeled
     set.
 
@@ -50,11 +46,9 @@ class ContinuousEvalMetrics:
     rel >= ``pos_threshold``), so one ingested frame serves the whole
     trio.
 
-    State is the deduplicated labeled set: base+delta parquet
-    generations under a shared POSIX path, compacted every
-    ``compact_every`` deltas. Eval sets are bounded by contract (judged
-    top-N frames); the maintainer never holds more than the distinct
-    labeled rows.
+    State is the deduplicated labeled set. Eval sets are bounded by
+    contract (judged top-N frames); the maintainer never holds more than
+    the distinct labeled rows.
     """
 
     def __init__(
@@ -69,85 +63,31 @@ class ContinuousEvalMetrics:
         pos_threshold: int = 1,
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.id_col = id_col
         self.score_col = score_col
         self.rel_col = rel_col
         self.group_cols = list(group_cols or [])
         self.pos_threshold = pos_threshold
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
 
-    # -- manifest / generation plumbing (the maintainer family shape) --
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {
-                "version": 0,
-                "base": None,
-                "deltas": [],
-                "max_batch_id": None,
-            }
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    def _merged(self, paths: list[str]) -> DataFrame | None:
-        if not paths:
-            return None
-        df = self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
+    def _merged(self, gens: list[str]) -> DataFrame:
+        df = self._union(gens)
         return df.dropDuplicates(df.columns)
 
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
+    def _delta(self, batch, batch_id, m) -> DataFrame:
         cols = [
             *self.group_cols,
             self.id_col,
             self.score_col,
             self.rel_col,
         ]
-        batch.select(*cols).dropDuplicates(cols).write.mode(
-            "overwrite"
-        ).parquet(f"{self.path}/{delta}")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged(
-            ([m["base"]] if m["base"] else []) + m["deltas"]
-        )
-        if merged is None:
-            return
-        new_base = f"base/g{m['version']}"
-        merged.write.mode("overwrite").parquet(f"{self.path}/{new_base}")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
+        return batch.select(*cols).dropDuplicates(cols)
 
     # -- reads -----------------------------------------------------------
     def labeled(self) -> DataFrame | None:
         """The maintained labeled set: the deduplicated union of every
         ingested batch."""
-        m = self._manifest()
-        return self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
+        return self._state()
 
     def _with_label(self, df: DataFrame) -> DataFrame:
         return df.withColumn(

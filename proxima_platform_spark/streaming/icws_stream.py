@@ -4,7 +4,7 @@ the streaming twin of ``functions/dedup.icws_candidate_pairs``, closing
 the tf-weighted axis of the streaming dedup tier (exact / minhash /
 winnow / containment / weighted).
 
-The ``ContinuousWinnowIndex`` manifest pattern applied to 0-bit
+The ``ContinuousWinnowIndex`` index applied to 0-bit
 Improved Consistent Weighted Sampling (Ioffe ICDM'10; Li KDD'15): each
 micro-batch's documents are banded by the SAME expression stage the
 batch operator uses (``dedup.icws_band_rows`` — one code path, so batch
@@ -34,8 +34,7 @@ At scale: state is O(docs · bands) rows — ``bands`` strings per doc,
 the smallest per-doc state of any maintainer in the tier; the per-batch
 probe is one equi-join ON the band key (batch side small — AQE
 broadcasts it) and one distinct. Signature computation is joinless
-(min_by aggregation per (doc, seed)); no all-pairs anywhere. Same
-shared-POSIX-path storage contract as the other maintainers.
+(min_by aggregation per (doc, seed)); no all-pairs anywhere.
 """
 
 from __future__ import annotations
@@ -48,11 +47,11 @@ from proxima_platform_spark.streaming.band_stream import (
 
 
 class ContinuousIcwsIndex(ContinuousBandIndex):
-    """Append-only ``(doc_id, fp)`` band-key index with base+delta
-    parquet generations; the generic online step (band the batch with
-    the batch operator's own expression stage, probe batch-vs-union,
-    sink, fold) lives in :class:`ContinuousBandIndex` — this instance
-    supplies the ICWS banding stage."""
+    """Append-only ``(doc_id, fp)`` band-key index; the generic online
+    step (band the batch with the batch operator's own expression stage,
+    probe batch-vs-union, sink, fold) lives in
+    :class:`ContinuousBandIndex` — this instance supplies the ICWS banding
+    stage."""
 
     def __init__(
         self,

@@ -11,21 +11,13 @@ prefix. That is the reference's cached-view idea
 commit-log element to hot state) lifted to aggregates and run per
 micro-batch.
 
-State under ``path`` (one shared POSIX filesystem for driver and
-executors — same storage contract as the other continuous maintainers):
-
-* ``cells/`` — the changelog snapshot state as base+delta parquet
-  generations (compacted every ``compact_every`` batches with
-  ``changelog.compact``, which KEEPS tombstones — they must survive
-  folding so later base cells still retract against them);
-* ``agg/``   — the per-group aggregate, one tiny frame per generation.
-
-Crash consistency: each batch writes its delta and the new aggregate to
-versioned paths FIRST, then commits both in ONE manifest replace — the
-single commit point. A crash before the manifest write replays the batch
-against unchanged state and overwrites the same orphan paths; a replay
-after it no-ops on the max-committed-batch_id guard. There is no window
-where the aggregate and the cell state disagree.
+State is a ``GenerationStore`` over the changelog snapshot cells, compacted
+every ``compact_every`` batches with ``changelog.compact`` (which KEEPS
+tombstones — they must survive folding so later base cells still
+retract against them), plus one side generation ``agg/g{v}``: the
+per-group aggregate, written next to each delta and committed by the
+same manifest replace, so the aggregate and the cell state never
+disagree.
 
 Exactness: contributions accumulate as DECIMAL (see operators/ivm.py),
 so after ANY batch sequence the maintained aggregate is BIT-equal to a
@@ -38,10 +30,6 @@ generational fold. Nothing ever rescans the event history.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from proxima_platform_spark.changelog import compact, snapshot
@@ -49,12 +37,15 @@ from proxima_platform_spark.operators.ivm import (
     cell_contributions,
     incremental_snapshot_agg,
 )
+from proxima_platform_spark.streaming.store import GenerationStore
 
 
-class ContinuousSnapshotAgg:
+class ContinuousSnapshotAgg(GenerationStore):
     """``update(batch)`` is ``foreachBatch``-compatible (batch rows in
     canonical changelog schema); ``current()`` returns the maintained
     per-group aggregate frame ``(group..., n_cells, total)``."""
+
+    _side = ("agg",)
 
     def __init__(
         self,
@@ -65,47 +56,17 @@ class ContinuousSnapshotAgg:
         value: Column,
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every, agg=None)
         self.group_cols = list(group_cols)
         self.value = value
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
 
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {
-                "version": 0,
-                "base": None,
-                "deltas": [],
-                "agg": None,
-                "max_batch_id": None,
-            }
-        with open(p) as f:
-            return json.load(f)
+    def _merged(self, gens: list[str]) -> DataFrame:
+        # compact() keeps delete + wildcard-tombstone winners — they must
+        # survive the fold so future base cells still retract against them
+        return compact(self._union(gens))
 
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    def _cells(self, m: dict) -> DataFrame | None:
-        paths = ([m["base"]] if m["base"] else []) + m["deltas"]
-        if not paths:
-            return None
-        return self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
-
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-
-        cells = self._cells(m)
+    def _delta(self, batch, batch_id, m) -> DataFrame:
+        cells = self._union(self._gens(m))
         if cells is None:
             # first batch: state is empty — the aggregate IS the batch's
             # own snapshot contributions
@@ -113,50 +74,23 @@ class ContinuousSnapshotAgg:
                 snapshot(batch), self.value, self.group_cols
             )
         else:
-            base_cells = snapshot(cells)
             base_agg = (
                 self.spark.read.parquet(f"{self.path}/{m['agg']}")
                 if m["agg"]
                 else None
             )
             new_agg = incremental_snapshot_agg(
-                base_cells,
+                snapshot(cells),
                 batch,
                 group_cols=self.group_cols,
                 value=self.value,
                 base_agg=base_agg,
             )
-
-        # versioned writes first (overwrite: replays of a crashed batch
-        # rewrite the same orphan paths), ONE manifest replace commits both
-        agg_path = f"agg/g{v}"
-        new_agg.write.mode("overwrite").parquet(f"{self.path}/{agg_path}")
-        delta_path = f"cells/d{v}"
-        batch.write.mode("overwrite").parquet(f"{self.path}/{delta_path}")
-        old_agg = m["agg"]
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta_path]
-        m["agg"] = agg_path
-        self._write_manifest(m)
-        if old_agg:
-            shutil.rmtree(f"{self.path}/{old_agg}", ignore_errors=True)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        cells = self._cells(m)
-        if cells is None:
-            return
-        # compact() keeps delete + wildcard-tombstone winners — they must
-        # survive the fold so future base cells still retract against them
-        new_base = f"cells/g{m['version']}"
-        compact(cells).write.mode("overwrite").parquet(f"{self.path}/{new_base}")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
+        # the new aggregate is a side generation: the delta's manifest
+        # replace commits both, and drops the previous one
+        m["agg"] = f"agg/g{m['version'] + 1}"
+        self._write(m["agg"], new_agg)
+        return batch
 
     def current(self) -> DataFrame | None:
         m = self._manifest()

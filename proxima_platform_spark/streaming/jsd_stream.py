@@ -17,14 +17,11 @@ union of everything ingested:
   statistic, so batch-on-union equality holds by construction
   (pinned in ``TestContinuousDomainJsd``).
 
-Maintainer-family contract (see ``wordpiece_stream`` /
-``sketch_stream``): base+delta parquet generations, ``manifest.json``
-``max_batch_id`` replay guard (same-batch-id replay = no-op; sink
-BEFORE manifest update), compaction every ``compact_every`` deltas.
+Storage is a ``GenerationStore`` (same-batch-id replay = no-op).
 COUNT-CARRYING member: batches must be disjoint corpus slices;
 new-batch-id redelivery double-counts by contract (the band-family
-anti-join hardening does not apply — same exemption as winnow's
-shared counts).
+anti-join hardening does not apply — same exemption as winnow's shared
+counts).
 
 Scale (100 TB): per ingest one narrow explode + one map-side-combined
 count agg; state is bounded by |sources| x |vocab| (Heaps-sublinear);
@@ -34,15 +31,13 @@ never rescanned.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from proxima_platform_spark.streaming.store import GenerationStore
 
-class ContinuousDomainJsd:
+
+class ContinuousDomainJsd(GenerationStore):
     """Continuously-maintained per-source Jensen-Shannon divergence.
 
     ``update(batch)`` folds a micro-batch of documents; ``counts()``
@@ -61,84 +56,24 @@ class ContinuousDomainJsd:
         text_col: str = "text",
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.group_col = group_col
         self.text_col = text_col
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
 
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {
-                "version": 0,
-                "base": None,
-                "deltas": [],
-                "max_batch_id": None,
-            }
-        with open(p) as f:
-            return json.load(f)
+    def _merged(self, gens: list[str]) -> DataFrame:
+        return self._union(gens).groupBy("s", "w").agg(F.sum("cs").alias("cs"))
 
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    def _merged(self, gens: list[str]) -> DataFrame | None:
-        if not gens:
-            return None
-        return (
-            self.spark.read.parquet(*[f"{self.path}/{g}" for g in gens])
-            .groupBy("s", "w")
-            .agg(F.sum("cs").alias("cs"))
-        )
-
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
+    def _delta(self, batch, batch_id, m) -> DataFrame:
         from proxima_platform_spark.functions.text import source_word_counts
 
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return  # replay of a committed batch: no-op
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        counts = source_word_counts(
+        return source_word_counts(
             batch, group_col=self.group_col, text_col=self.text_col
         )
-        # sink BEFORE the manifest update: a crash between the two leaves
-        # an unreferenced delta dir, and the replayed batch rewrites it
-        counts.write.mode("overwrite").parquet(f"{self.path}/{delta}")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged(
-            ([m["base"]] if m["base"] else []) + m["deltas"]
-        )
-        if merged is None:
-            return
-        new_base = f"base/g{m['version']}"
-        merged.write.mode("overwrite").parquet(f"{self.path}/{new_base}")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
 
     def counts(self) -> DataFrame | None:
         """The merged ``(s, w, cs)`` statistic — equal to
         ``source_word_counts`` over the ingested union."""
-        m = self._manifest()
-        return self._merged(
-            ([m["base"]] if m["base"] else []) + m["deltas"]
-        )
+        return self._state()
 
     def jsd(self) -> DataFrame | None:
         """The current divergence table — exactly batch ``source_jsd``
@@ -151,11 +86,3 @@ class ContinuousDomainJsd:
         if merged is None:
             return None
         return source_jsd_from_counts(merged)
-
-    def foreach_batch(self):
-        """Adapter for ``writeStream.foreachBatch``."""
-
-        def fn(batch: DataFrame, batch_id: int) -> None:
-            self.update(batch, batch_id=batch_id)
-
-        return fn

@@ -15,25 +15,24 @@ merged counts — row-for-row equal to batch ``kneser_ney5_scores`` over
 the union of everything ingested (the scoring code is shared). State is
 bounded by 5-gram TYPES of the ingested corpus.
 
-Base+delta parquet generations under a shared POSIX path with the
-max-committed batch-id guard — the maintainer family shape
-(``sketch_stream.ContinuousQuantileSketch``). Re-delivering documents
-under a NEW batch id is a contract violation (counts are additive), the
-same at-least-once boundary as every count-based maintainer here.
+Storage is a ``GenerationStore`` (same-batch-id replay = no-op).
+Re-delivering documents under a NEW batch id is a contract violation
+(counts are additive), the same at-least-once boundary as every
+count-based maintainer here.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from proxima_platform_spark.streaming.store import GenerationStore
 
-class ContinuousKneserNey:
+
+class ContinuousKneserNey(GenerationStore):
     """Continuously-maintained 5-gram Kneser-Ney corpus model."""
+
+    _parts = ("c5",)
 
     def __init__(
         self,
@@ -44,34 +43,13 @@ class ContinuousKneserNey:
         text_col: str = "text",
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.id_col = id_col
         self.text_col = text_col
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
 
-    # -- manifest (maintainer-family shape) ---------------------------------
-
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"version": 0, "base": None, "deltas": [],
-                    "max_batch_id": None}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    def _merged(self, gens: list[str]) -> DataFrame | None:
-        if not gens:
-            return None
+    def _merged(self, gens: list[str]) -> DataFrame:
         return (
-            self.spark.read.parquet(*[f"{self.path}/{g}/c5" for g in gens])
+            self._union(gens, "c5")
             .groupBy("w1", "w2", "w3", "w4", "w5")
             .agg(F.sum("c5").alias("c5"))
         )
@@ -92,48 +70,19 @@ class ContinuousKneserNey:
             F.explode(gram_structs_from_tokens(F.col("__t"), W)).alias("g"),
         ).select("id", *[f"g.{w}" for w in W])
 
-    # -- updates -------------------------------------------------------------
-
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        c5 = (
+    def _delta(self, batch, batch_id, m) -> DataFrame:
+        return (
             self._grams(batch, self.id_col, self.text_col)
             .groupBy("w1", "w2", "w3", "w4", "w5")
             .agg(F.count(F.lit(1)).alias("c5"))
         )
-        c5.write.mode("overwrite").parquet(f"{self.path}/{delta}/c5")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
-        if merged is None:
-            return
-        new_base = f"base/g{m['version']}"
-        merged.write.mode("overwrite").parquet(f"{self.path}/{new_base}/c5")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
 
     # -- reads ----------------------------------------------------------------
 
     def counts(self) -> DataFrame | None:
         """The merged 5-gram count table (the model's one sufficient
         statistic)."""
-        m = self._manifest()
-        return self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
+        return self._state()
 
     def score(
         self, docs: DataFrame, *, discount: float = 0.75,
@@ -154,11 +103,3 @@ class ContinuousKneserNey:
         return kn5_scores_from_counts(
             c5, grams, id_col="id", discount=discount, modified=modified,
         ).withColumnRenamed("id", self.id_col)
-
-    def foreach_batch(self):
-        """Adapter for ``writeStream.foreachBatch``."""
-
-        def fn(batch: DataFrame, batch_id: int) -> None:
-            self.update(batch, batch_id=batch_id)
-
-        return fn

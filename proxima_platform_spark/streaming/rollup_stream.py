@@ -2,11 +2,10 @@
 incrementally over the commit-log stream.
 
 The batch ladder (``operators/rollup.hypertable_rollup``) rebuilds from the
-raw table; this maintainer keeps the FINEST level's partial aggregates as a
-base+delta parquet table updated per micro-batch (the cached-view manifest
-pattern, ``streaming/cached_view.py``), and serves every coarser level by
-re-aggregating the maintained finest level at read time — the TimescaleDB
-continuous-aggregate contract.
+raw table; this maintainer keeps the FINEST level's partial aggregates in
+a ``GenerationStore`` updated per micro-batch, and serves every coarser
+level by re-aggregating the maintained finest level at read time — the
+TimescaleDB continuous-aggregate contract.
 
 Why partials compose: only algebraic aggregates ride the ladder — ``cnt``
 and decimal ``total_dec`` add, ``vmin``/``vmax`` take min/max — so a
@@ -23,14 +22,12 @@ reads scan that 3-orders-smaller frame.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from proxima_platform_spark.streaming.store import GenerationStore
 
-class ContinuousRollup:
+
+class ContinuousRollup(GenerationStore):
     """Incrementally-maintained rollup ladder.
 
     ``update(batch)`` is usable directly as a ``foreachBatch`` callback;
@@ -50,38 +47,21 @@ class ContinuousRollup:
         decimal_scale: int = 2,
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.ts_ms_col = ts_ms_col
         self.keys = list(keys)
         self.value_col = value_col
         self.base_level_ms = base_level_ms
         self.decimal_scale = decimal_scale
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
-
-    # -- manifest ------------------------------------------------------------
-
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"version": 0, "base": None, "deltas": []}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
 
     # -- maintenance ---------------------------------------------------------
 
-    def _partials(self, events: DataFrame) -> DataFrame:
+    def _delta(self, batch, batch_id, m) -> DataFrame:
+        """The batch aggregated to per-bucket partials."""
         ts = F.col(self.ts_ms_col)
         bucket = (ts - F.pmod(ts, F.lit(self.base_level_ms))).alias("bucket_ms")
         dec = f"decimal(28,{self.decimal_scale})"
-        return events.groupBy(*self.keys, bucket).agg(
+        return batch.groupBy(*self.keys, bucket).agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum(
                 F.col(self.value_col).cast(f"decimal(18,{self.decimal_scale})")
@@ -92,47 +72,17 @@ class ContinuousRollup:
             F.max(self.value_col).alias("vmax"),
         )
 
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        """Fold one micro-batch into the ladder: aggregate the batch to
-        per-bucket partials and append them as a delta generation."""
-        m = self._manifest()
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        self._partials(batch).write.parquet(f"{self.path}/{delta}")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _merge(self, df: DataFrame) -> DataFrame:
+    def _merge(self, df: DataFrame, bucket="bucket_ms") -> DataFrame:
         dec = f"decimal(28,{self.decimal_scale})"
-        return df.groupBy(*self.keys, "bucket_ms").agg(
+        return df.groupBy(*self.keys, bucket).agg(
             F.sum("cnt").alias("cnt"),
             F.sum("total_dec").cast(dec).alias("total_dec"),
             F.min("vmin").alias("vmin"),
             F.max("vmax").alias("vmax"),
         )
 
-    def _compact(self) -> None:
-        m = self._manifest()
-        cur = self._current()
-        if cur is None:
-            return
-        new_base = f"base/g{m['version']}"
-        self._merge(cur).write.parquet(f"{self.path}/{new_base}")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
-
-    def _current(self) -> DataFrame | None:
-        m = self._manifest()
-        paths = ([m["base"]] if m["base"] else []) + m["deltas"]
-        if not paths:
-            return None
-        return self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
+    def _merged(self, gens: list[str]) -> DataFrame:
+        return self._merge(self._union(gens))
 
     # -- reads ---------------------------------------------------------------
 
@@ -144,18 +94,12 @@ class ContinuousRollup:
                 f"level {level_ms} is not a multiple of the maintained "
                 f"base level {self.base_level_ms}"
             )
-        cur = self._current()
-        if cur is None:
+        merged = self._state()
+        if merged is None:
             raise LookupError("continuous rollup is empty")
-        merged = self._merge(cur)
         if level_ms == self.base_level_ms:
             return merged
         b = F.col("bucket_ms")
-        coarse = (b - F.pmod(b, F.lit(level_ms))).alias("bucket_ms")
-        dec = f"decimal(28,{self.decimal_scale})"
-        return merged.groupBy(*self.keys, coarse).agg(
-            F.sum("cnt").alias("cnt"),
-            F.sum("total_dec").cast(dec).alias("total_dec"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
+        return self._merge(
+            merged, (b - F.pmod(b, F.lit(level_ms))).alias("bucket_ms")
         )

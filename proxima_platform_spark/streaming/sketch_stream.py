@@ -6,9 +6,8 @@ Why the batch two-phase (`functions/sketch.cms_frequent_items`) can't run
 online unchanged: its exact confirm re-scans all rows, and a stream can't
 revisit history. The streaming maintainer keeps instead
 
-* the merged CMS counter frame (base+delta parquet generations, compacted
-  — the ``ContinuousRollup`` manifest pattern; state is O(width·depth)
-  CELLS regardless of key cardinality), and
+* the merged CMS counter frame (a ``GenerationStore``; state is
+  O(width·depth) CELLS regardless of key cardinality), and
 * a CANDIDATE key table: every batch, the batch's distinct keys are probed
   against the merged sketch and the ones whose estimate clears the
   threshold are appended. A key's count only grows in batches where it
@@ -26,19 +25,18 @@ partials (≤ w·d rows) + its crossing keys — never the raw history.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from proxima_platform_spark.functions.sketch import _cms_cells
+from proxima_platform_spark.streaming.store import GenerationStore
 
 
-class ContinuousHeavyHitters:
+class ContinuousHeavyHitters(GenerationStore):
     """``update(batch)`` is usable directly as a ``foreachBatch``
     callback; ``hitters()`` returns the current candidate keys with their
     sketch estimates (a superset of the truly-frequent keys)."""
+
+    _side = ("cands",)
 
     def __init__(
         self,
@@ -51,43 +49,11 @@ class ContinuousHeavyHitters:
         depth: int = 4,
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every, cands=[])
         self.key_cols = list(key_cols)
         self.threshold = threshold
         self.width = width
         self.depth = depth
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
-
-    # -- manifest (the ContinuousRollup pattern) ----------------------------
-
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {
-                "version": 0,
-                "base": None,
-                "deltas": [],
-                "cands": [],
-                "max_batch_id": None,
-            }
-        with open(p) as f:
-            m = json.load(f)
-        # migrate pre-r06 manifests that recorded every batch_id: ids are
-        # monotonic, so the max is all the replay guard ever needed (O(1)
-        # state + O(1) membership instead of unbounded list + linear scan)
-        if "seen_batches" in m:
-            seen = m.pop("seen_batches")
-            m["max_batch_id"] = max(seen) if seen else None
-        m.setdefault("max_batch_id", None)
-        return m
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
 
     # -- sketch frames -------------------------------------------------------
 
@@ -100,11 +66,10 @@ class ContinuousHeavyHitters:
             .agg(F.count(F.lit(1)).alias("n"))
         )
 
-    def _merged_cells(self, paths: list[str]) -> DataFrame | None:
-        if not paths:
-            return None
-        df = self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
-        return df.groupBy("cell").agg(F.sum("n").alias("n"))
+    def _merged(self, gens: list[str]) -> DataFrame:
+        return self._union(gens).groupBy("cell").agg(F.sum("n").alias("n"))
+
+    _merged_cells = _merged
 
     def _estimate(self, keys: DataFrame, cells: DataFrame) -> DataFrame:
         key = [F.col(c) for c in self.key_cols]
@@ -135,95 +100,34 @@ class ContinuousHeavyHitters:
     # -- maintenance ---------------------------------------------------------
 
     def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
-        m = self._manifest()
-        # foreachBatch is at-least-once: after a failure between the delta
-        # write and the sink commit, Structured Streaming REPLAYS the
-        # micro-batch with the same batch_id. Without this no-op guard the
-        # replay would write a second delta and double-count every key in
-        # the batch — the superset guarantee survives (counters only grow)
-        # but freq_est would exceed the documented εN collision bound. The
-        # manifest records the max committed batch_id — Structured Streaming
-        # batch ids are monotonically increasing, so "already seen" is
-        # exactly "≤ max committed"; this is the exactly-once idempotence
-        # convention foreachBatch callbacks are expected to implement.
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        # overwrite: a crash after this write but before the manifest write
-        # leaves an orphan dir at this same versioned path; the replay must
-        # be able to rewrite it (the manifest is the commit point)
-        self._batch_cells(batch).write.mode("overwrite").parquet(
-            f"{self.path}/{delta}"
-        )
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-
+        # the store's replay guard matters here: a replayed batch would
+        # double-count every key — the superset guarantee survives
+        # (counters only grow) but freq_est would exceed the documented
+        # εN collision bound
+        m = self._begin(batch_id)
+        if m is None:
+            return
+        self._append(m, self._batch_cells(batch))
         # probe THIS batch's keys against the merged-so-far sketch; the
         # crossing batch always contains the key, so no hitter is missed
-        merged = self._merged_cells(
-            ([m["base"]] if m["base"] else []) + m["deltas"]
-        )
         crossers = (
-            self._estimate(batch.select(*self.key_cols).distinct(), merged)
+            self._estimate(
+                batch.select(*self.key_cols).distinct(),
+                self._merged(self._gens(m)),
+            )
             .where(F.col("freq_est") >= self.threshold)
             .select(*self.key_cols)
         )
-        cand = f"cand/c{v}"
-        crossers.write.mode("overwrite").parquet(f"{self.path}/{cand}")
+        cand = f"cand/c{m['version']}"
+        self._write(cand, crossers)
         m["cands"] = m["cands"] + [cand]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
+        self._commit(m)
 
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged_cells(
-            ([m["base"]] if m["base"] else []) + m["deltas"]
-        )
-        if merged is None:
-            return
-        # overwrite: a crash between these writes and the manifest commit
-        # leaves orphan dirs at the same versioned paths; the retried
-        # compaction must be able to rewrite them (same contract as the
-        # delta writes above — the manifest is the only commit point)
-        new_base = f"base/g{m['version']}"
-        merged.write.mode("overwrite").parquet(f"{self.path}/{new_base}")
-        cand_paths = [f"{self.path}/{p}" for p in m["cands"]]
-        new_cand = f"cand/g{m['version']}"
-        (
-            self.spark.read.parquet(*cand_paths)
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(f"{self.path}/{new_cand}")
-        )
-        old = ([m["base"]] if m["base"] else []) + m["deltas"] + m["cands"]
-        m["base"], m["deltas"], m["cands"] = new_base, [], [new_cand]
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
-        self._gc_unreferenced(m)
-
-    def _gc_unreferenced(self, m: dict) -> None:
-        """Remove generation dirs no manifest references — a crash between
-        a compaction's parquet writes and its manifest commit leaves
-        orphan base/g{N} + cand/g{N} dirs the replayed batch never
-        revisits (it no-ops on the batch_id guard). The manifest is the
-        only commit point, so after a successful commit anything else on
-        disk is garbage; update/_compact run sequentially inside
-        foreachBatch, so no write is in flight here."""
-        referenced = {
-            p for p in [m["base"], *m["deltas"], *m["cands"]] if p
-        }
-        for sub in ("base", "delta", "cand"):
-            d = f"{self.path}/{sub}"
-            if not os.path.isdir(d):
-                continue
-            for g in os.listdir(d):
-                if f"{sub}/{g}" not in referenced:
-                    shutil.rmtree(f"{d}/{g}", ignore_errors=True)
+    def _fold_side(self, m: dict) -> dict:
+        # the candidate fold rides on the counter compaction's commit
+        cand = f"cand/g{m['version']}"
+        self._write(cand, self._union(m["cands"]).distinct())
+        return {"cands": [cand]}
 
     # -- reads ---------------------------------------------------------------
 
@@ -234,18 +138,13 @@ class ContinuousHeavyHitters:
         m = self._manifest()
         if not m["cands"]:
             raise LookupError("continuous heavy hitters is empty")
-        cands = self.spark.read.parquet(
-            *[f"{self.path}/{p}" for p in m["cands"]]
-        ).distinct()
-        merged = self._merged_cells(
-            ([m["base"]] if m["base"] else []) + m["deltas"]
-        )
-        return self._estimate(cands, merged).where(
+        cands = self._union(m["cands"]).distinct()
+        return self._estimate(cands, self._state(m)).where(
             F.col("freq_est") >= self.threshold
         )
 
 
-class ContinuousDistinct:
+class ContinuousDistinct(GenerationStore):
     """Continuously-maintained HyperLogLog distinct count.
 
     ``update(batch)`` folds each micro-batch's register frame into the
@@ -260,10 +159,7 @@ class ContinuousDistinct:
     State is O(m) register CELLS per generation regardless of key
     cardinality (m = 2^b, default 256) — the sketch the reference-style
     continuous rollup wants for COUNT DISTINCT, where the exact answer
-    would require unbounded key state. Same storage contract as the other
-    continuous maintainers here: ``path`` must be one shared POSIX
-    filesystem visible to driver and executors (manifest/GC are
-    driver-local file I/O).
+    would require unbounded key state.
     """
 
     def __init__(
@@ -276,68 +172,23 @@ class ContinuousDistinct:
         salt: str = "hll-v1",
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.key_cols = list(key_cols)
         self.b = b
         self.salt = salt
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
 
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"version": 0, "base": None, "deltas": [], "max_batch_id": None}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    def _merged(self, paths: list[str]) -> DataFrame | None:
-        if not paths:
-            return None
-        df = self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
-        return df.groupBy("bucket").agg(F.max("rho").alias("rho"))
-
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
+    def _delta(self, batch, batch_id, m) -> DataFrame:
         from proxima_platform_spark.functions.sketch import hll_build
 
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        hll_build(batch, self.key_cols, b=self.b, salt=self.salt).write.mode(
-            "overwrite"
-        ).parquet(f"{self.path}/{delta}")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
+        return hll_build(batch, self.key_cols, b=self.b, salt=self.salt)
 
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
-        if merged is None:
-            return
-        new_base = f"base/g{m['version']}"
-        merged.write.mode("overwrite").parquet(f"{self.path}/{new_base}")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
+    def _merged(self, gens: list[str]) -> DataFrame:
+        return self._union(gens).groupBy("bucket").agg(
+            F.max("rho").alias("rho")
+        )
 
     def registers(self) -> DataFrame | None:
-        m = self._manifest()
-        return self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
+        return self._state()
 
     def estimate(self) -> DataFrame | None:
         from proxima_platform_spark.functions.sketch import hll_estimate
@@ -346,7 +197,7 @@ class ContinuousDistinct:
         return None if regs is None else hll_estimate(regs, b=self.b)
 
 
-class ContinuousQuantileSketch:
+class ContinuousQuantileSketch(GenerationStore):
     """Continuously-maintained bottom-k quantile sketch
     (``functions/sketch.quantile_sketch_*`` run online).
 
@@ -365,7 +216,6 @@ class ContinuousQuantileSketch:
 
     State is ≤ k rows per group per generation regardless of input
     volume; compaction folds generations back to one bottom-k frame.
-    Same shared-POSIX-path storage contract as the other maintainers.
     """
 
     def __init__(
@@ -380,28 +230,12 @@ class ContinuousQuantileSketch:
         salt: str = "qsk-v1",
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.value_col = value_col
         self.tag_cols = list(tag_cols)
         self.group_cols = list(group_cols or [])
         self.k = k
         self.salt = salt
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
-
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"version": 0, "base": None, "deltas": [], "max_batch_id": None}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
 
     def _bottom_k(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import Window
@@ -416,54 +250,25 @@ class ContinuousQuantileSketch:
             .drop("__r")
         )
 
-    def _merged(self, paths: list[str]) -> DataFrame | None:
-        if not paths:
-            return None
-        df = self.spark.read.parquet(*[f"{self.path}/{p}" for p in paths])
-        return self._bottom_k(df)
+    def _merged(self, gens: list[str]) -> DataFrame:
+        return self._bottom_k(self._union(gens))
 
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
+    def _delta(self, batch, batch_id, m) -> DataFrame:
         from proxima_platform_spark.functions.sketch import (
             quantile_sketch_build,
         )
 
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        quantile_sketch_build(
+        return quantile_sketch_build(
             batch,
             self.value_col,
             self.tag_cols,
             group_cols=self.group_cols,
             k=self.k,
             salt=self.salt,
-        ).write.mode("overwrite").parquet(f"{self.path}/{delta}")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
-        if merged is None:
-            return
-        new_base = f"base/g{m['version']}"
-        merged.write.mode("overwrite").parquet(f"{self.path}/{new_base}")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
+        )
 
     def sketch(self) -> DataFrame | None:
-        m = self._manifest()
-        return self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
+        return self._state()
 
     def quantiles(self, qs: list[float]) -> DataFrame | None:
         from proxima_platform_spark.functions.sketch import (

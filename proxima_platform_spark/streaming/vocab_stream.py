@@ -16,22 +16,19 @@ curve actually needs:
   bounded by VOCABULARY, which Heaps' law itself says grows
   sublinearly.
 
-Base+delta parquet generations under a shared POSIX path with the
-max-committed batch-id guard — the maintainer family shape
-(``sketch_stream.ContinuousQuantileSketch``).
+Storage is a ``GenerationStore`` with one ``docs``/``toks`` frame pair
+per generation.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from proxima_platform_spark.streaming.store import GenerationStore
 
-class ContinuousVocabGrowth:
+
+class ContinuousVocabGrowth(GenerationStore):
     """Continuously-maintained Heaps-law vocabulary-growth curve.
 
     ``update(batch)`` folds a micro-batch of ``(id_col, text_col)``
@@ -43,6 +40,8 @@ class ContinuousVocabGrowth:
     contract violation (id collisions would double-count the per-doc
     frame).
     """
+
+    _parts = ("docs", "toks")
 
     def __init__(
         self,
@@ -56,63 +55,21 @@ class ContinuousVocabGrowth:
     ) -> None:
         if every < 1:
             raise ValueError(f"every must be >= 1, got {every}")
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.id_col = id_col
         self.text_col = text_col
         self.every = every
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
 
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {
-                "version": 0,
-                "base": None,
-                "deltas": [],
-                "max_batch_id": None,
-            }
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    def _gen_frames(self, gen: str) -> tuple[DataFrame, DataFrame]:
-        return (
-            self.spark.read.parquet(f"{self.path}/{gen}/docs"),
-            self.spark.read.parquet(f"{self.path}/{gen}/toks"),
-        )
-
-    def _merged(self, gens: list[str]) -> tuple[DataFrame, DataFrame] | None:
-        if not gens:
-            return None
-        docs = self.spark.read.parquet(
-            *[f"{self.path}/{g}/docs" for g in gens]
-        ).dropDuplicates(["doc_id"])
-        toks = (
-            self.spark.read.parquet(
-                *[f"{self.path}/{g}/toks" for g in gens]
-            )
-            .groupBy("w")
-            .agg(F.min("fb").alias("fb"))
+    def _merged(self, gens: list[str]) -> tuple[DataFrame, DataFrame]:
+        docs = self._union(gens, "docs").dropDuplicates(["doc_id"])
+        toks = self._union(gens, "toks").groupBy("w").agg(
+            F.min("fb").alias("fb")
         )
         return docs, toks
 
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
+    def _delta(self, batch, batch_id, m) -> tuple[DataFrame, DataFrame]:
         from proxima_platform_spark.functions.dedup import tokens
 
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
         # id_col must be integral: a non-numeric id would cast to NULL and
         # dropDuplicates(['doc_id']) would then collapse every such doc
         # into one row — raise per-row instead (fail-loud convention,
@@ -151,42 +108,14 @@ class ContinuousVocabGrowth:
             .groupBy("w")
             .agg(F.min("b").alias("fb"))
         )
-        per_doc.write.mode("overwrite").parquet(
-            f"{self.path}/{delta}/docs"
-        )
-        first.write.mode("overwrite").parquet(f"{self.path}/{delta}/toks")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged(
-            ([m["base"]] if m["base"] else []) + m["deltas"]
-        )
-        if merged is None:
-            return
-        docs, toks = merged
-        new_base = f"base/g{m['version']}"
-        docs.write.mode("overwrite").parquet(f"{self.path}/{new_base}/docs")
-        toks.write.mode("overwrite").parquet(f"{self.path}/{new_base}/toks")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
+        return per_doc, first
 
     def curve(self) -> DataFrame | None:
         """The current growth curve — exactly batch ``vocab_growth``
         over the union of everything ingested."""
         from pyspark.sql import Window
 
-        m = self._manifest()
-        merged = self._merged(
-            ([m["base"]] if m["base"] else []) + m["deltas"]
-        )
+        merged = self._state()
         if merged is None:
             return None
         docs, toks = merged

@@ -1,11 +1,11 @@
 """Continuously-maintained winnowing fingerprint index: online
 copy-detection over an unbounded document stream.
 
-The ``ContinuousAnnIndex``/``ContinuousDistinct`` manifest pattern applied
-to the MOSS fingerprint family (``functions/text.winnow_fingerprints``):
-each micro-batch's documents are fingerprinted by the SAME expression
-stage the batch operator uses, probed against the index-so-far for shared
-fingerprints, and appended as a delta parquet generation.
+A ``GenerationStore`` over the MOSS fingerprint family
+(``functions/text.winnow_fingerprints``): each micro-batch's documents are
+fingerprinted by the SAME expression stage the batch operator uses, probed
+against the index-so-far for shared fingerprints, and appended as a delta
+parquet generation.
 
 Report semantics (the exact-twin argument): a document's fingerprint set
 arrives ATOMICALLY with its batch, and the probe joins the batch against
@@ -32,22 +32,19 @@ convention is kept anyway so all maintainers share one ordering rule).
 At scale: state per generation is O(docs · density) rows (density
 ≈ 2/(w+1) of gram count); the per-batch probe is one equi-join ON fp
 (batch side small — AQE broadcasts it), one count-distinct per candidate
-pair. Same shared-POSIX-path storage contract as the other maintainers.
+pair.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from proxima_platform_spark.streaming.store import GenerationStore
 
-class ContinuousWinnowIndex:
-    """Append-only ``(doc_id, fp)`` fingerprint index with base+delta
-    parquet generations, replay-safe via the max-committed-batch_id
-    guard, compacted every ``compact_every`` deltas.
+
+class ContinuousWinnowIndex(GenerationStore):
+    """Append-only ``(doc_id, fp)`` fingerprint index: ``update(fps,
+    batch_id)`` appends a batch's distinct rows as a delta.
 
     ``ingest(batch_df, batch_id)`` runs the full online step — fingerprint
     the batch, report overlap pairs to ``sink``, fold into the index — and
@@ -67,77 +64,19 @@ class ContinuousWinnowIndex:
         sink=None,
         compact_every: int = 4,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.id_col = id_col
         self.text_col = text_col
         self.w = w
         self.min_shared = min_shared
         self.max_docs_per_fp = max_docs_per_fp
         self.sink = sink
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
 
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {"version": 0, "base": None, "deltas": [], "max_batch_id": None}
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    def _merged(self, paths: list[str]) -> DataFrame | None:
-        if not paths:
-            return None
-        return self.spark.read.parquet(
-            *[f"{self.path}/{p}" for p in paths]
-        ).distinct()
-
-    def seen(self, batch_id: int | None) -> bool:
-        m = self._manifest()
-        return (
-            batch_id is not None
-            and m["max_batch_id"] is not None
-            and batch_id <= m["max_batch_id"]
-        )
-
-    def update(self, fps: DataFrame, batch_id: int | None = None) -> None:
-        """Append a batch's distinct ``(doc_id, fp)`` rows as a delta."""
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        fps.write.mode("overwrite").parquet(f"{self.path}/{delta}")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
-        if merged is None:
-            return
-        new_base = f"base/g{m['version']}"
-        merged.write.mode("overwrite").parquet(f"{self.path}/{new_base}")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
+    def _merged(self, gens: list[str]) -> DataFrame:
+        return self._union(gens).distinct()
 
     def fingerprints(self) -> DataFrame | None:
-        m = self._manifest()
-        return self._merged(([m["base"]] if m["base"] else []) + m["deltas"])
+        return self._state()
 
     def ingest(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         """One online step: fingerprint the batch, report every (doc_a,

@@ -19,14 +19,11 @@ everything ingested:
   batch-on-union equality holds by construction (pinned in
   ``TestContinuousWordpieceVocab``).
 
-Maintainer-family contract (``sketch_stream.ContinuousQuantileSketch``
-shape): base+delta parquet generations under a POSIX path with a
-``manifest.json`` whose ``max_batch_id`` makes same-batch-id replay a
-no-op (sink BEFORE manifest update, so a failed sink replays identical
-rows). This is a COUNT-CARRYING member: re-delivering rows under a NEW
-batch id double-counts and is a contract violation — the band-family
-anti-join hardening does NOT apply here (same exemption as winnow's
-``shared`` counts; see band_stream.py).
+Storage is a ``GenerationStore`` (same-batch-id replay = no-op). This is
+a COUNT-CARRYING member: re-delivering rows under a NEW batch id
+double-counts and is a contract violation — the band-family anti-join
+hardening does NOT apply here (same exemption as winnow's ``shared``
+counts; see band_stream.py).
 
 Scale (100 TB): per ingest one narrow explode + one map-side-combined
 count agg; state is bounded by the distinct-substring count (Heaps-law
@@ -36,15 +33,13 @@ no stage ever rescans ingested text.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from proxima_platform_spark.streaming.store import GenerationStore
 
-class ContinuousWordpieceVocab:
+
+class ContinuousWordpieceVocab(GenerationStore):
     """Continuously-maintained WordPiece vocabulary.
 
     ``update(batch)`` folds a micro-batch of documents;
@@ -70,89 +65,29 @@ class ContinuousWordpieceVocab:
             raise ValueError(
                 f"max_piece_len must be >= 1, got {max_piece_len}"
             )
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, compact_every=compact_every)
         self.text_col = text_col
         self.vocab_size = vocab_size
         self.max_piece_len = max_piece_len
-        self.compact_every = compact_every
-        os.makedirs(path, exist_ok=True)
 
-    def _manifest(self) -> dict:
-        p = f"{self.path}/manifest.json"
-        if not os.path.exists(p):
-            return {
-                "version": 0,
-                "base": None,
-                "deltas": [],
-                "max_batch_id": None,
-            }
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_manifest(self, m: dict) -> None:
-        tmp = f"{self.path}/manifest.json.tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, f"{self.path}/manifest.json")
-
-    def _merged(self, gens: list[str]) -> DataFrame | None:
-        if not gens:
-            return None
-        return (
-            self.spark.read.parquet(
-                *[f"{self.path}/{g}" for g in gens]
-            )
-            .groupBy("piece")
-            .agg(F.sum("cnt").alias("cnt"))
+    def _merged(self, gens: list[str]) -> DataFrame:
+        return self._union(gens).groupBy("piece").agg(
+            F.sum("cnt").alias("cnt")
         )
 
-    def update(self, batch: DataFrame, batch_id: int | None = None) -> None:
+    def _delta(self, batch, batch_id, m) -> DataFrame:
         from proxima_platform_spark.functions.wordpiece import (
             wordpiece_substring_counts,
         )
 
-        m = self._manifest()
-        if batch_id is not None:
-            if m["max_batch_id"] is not None and batch_id <= m["max_batch_id"]:
-                return  # replay of a committed batch: no-op
-            m["max_batch_id"] = batch_id
-        v = m["version"] + 1
-        delta = f"delta/d{v}"
-        counts = wordpiece_substring_counts(
+        return wordpiece_substring_counts(
             batch, text_col=self.text_col, max_piece_len=self.max_piece_len
         )
-        # sink BEFORE the manifest update: a crash between the two leaves
-        # an unreferenced delta dir, and the replayed batch rewrites it
-        counts.write.mode("overwrite").parquet(f"{self.path}/{delta}")
-        m["version"] = v
-        m["deltas"] = m["deltas"] + [delta]
-        self._write_manifest(m)
-        if len(m["deltas"]) >= self.compact_every:
-            self._compact()
-
-    def _compact(self) -> None:
-        m = self._manifest()
-        merged = self._merged(
-            ([m["base"]] if m["base"] else []) + m["deltas"]
-        )
-        if merged is None:
-            return
-        new_base = f"base/g{m['version']}"
-        merged.write.mode("overwrite").parquet(f"{self.path}/{new_base}")
-        old = ([m["base"]] if m["base"] else []) + m["deltas"]
-        m["base"], m["deltas"] = new_base, []
-        self._write_manifest(m)
-        for p in old:
-            shutil.rmtree(f"{self.path}/{p}", ignore_errors=True)
 
     def counts(self) -> DataFrame | None:
         """The merged ``(piece, cnt)`` sufficient statistic — equal to
         ``wordpiece_substring_counts`` over the ingested union."""
-        m = self._manifest()
-        return self._merged(
-            ([m["base"]] if m["base"] else []) + m["deltas"]
-        )
+        return self._state()
 
     def vocab(self) -> DataFrame | None:
         """The current vocabulary — exactly batch ``wordpiece_vocab``
@@ -165,11 +100,3 @@ class ContinuousWordpieceVocab:
         if merged is None:
             return None
         return wordpiece_select_vocab(merged, vocab_size=self.vocab_size)
-
-    def foreach_batch(self):
-        """Adapter for ``writeStream.foreachBatch``."""
-
-        def fn(batch: DataFrame, batch_id: int) -> None:
-            self.update(batch, batch_id=batch_id)
-
-        return fn

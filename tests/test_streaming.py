@@ -211,6 +211,128 @@ class TestCachedView:
         assert bytes(view.get("u1", "score").value).decode() == "20"
         assert bytes(view.get("u1", "score", stamp=ts(1500)).value).decode() == "10"
 
+    def test_replayed_batch_id_is_noop(self, spark, tmp_path):
+        """foreachBatch is at-least-once: re-delivering batch 0 must not
+        advance the view a second time."""
+        view = CachedView(spark, str(tmp_path / "view-replay"))
+        batch = spark.createDataFrame(
+            [element("user", "u1", "score", 1000, "10")], CHANGELOG_SCHEMA
+        )
+        view.update(batch, 0)
+        view.update(batch, 0)
+        assert view.current_version() == 1
+        assert view.current().count() == 1
+
+    def test_manifest_without_replay_guard_still_loads(self, spark, tmp_path):
+        """A manifest written before the view kept ``max_batch_id`` (and
+        that still carries ``high_watermark``) loads; the guard engages
+        from the next commit on."""
+        import json
+
+        root = str(tmp_path / "view-legacy")
+        spark.createDataFrame(
+            [element("user", "u1", "score", 1000, "10")], CHANGELOG_SCHEMA
+        ).write.parquet(f"{root}/delta/d1")
+        with open(f"{root}/manifest.json", "w") as f:
+            json.dump({"version": 1, "base": None, "deltas": ["delta/d1"],
+                       "high_watermark": "1970-01-01 00:00:01"}, f)
+        view = CachedView(spark, root)
+        batch = spark.createDataFrame(
+            [element("user", "u1", "score", 2000, "20")], CHANGELOG_SCHEMA
+        )
+        view.update(batch, 1)
+        view.update(batch, 1)
+        assert view.current_version() == 2
+        assert bytes(view.get("u1", "score").value).decode() == "20"
+        assert bytes(
+            view.get("u1", "score", stamp=ts(1500)).value
+        ).decode() == "10"
+
+
+class TestCrashPointReplay:
+    """A crash between a maintainer's delta write and its manifest write
+    leaves an orphan ``delta/d1``; the replayed batch must overwrite it
+    and leave the state of exactly one clean apply."""
+
+    HOUR = 3_600_000
+
+    def _cached_view(self, spark, path):
+        return CachedView(spark, path)
+
+    def _rollup(self, spark, path):
+        from proxima_platform_spark.streaming.rollup_stream import (
+            ContinuousRollup,
+        )
+
+        return ContinuousRollup(
+            spark, path, ts_ms_col="ts_ms", keys=["k"], value_col="v",
+            base_level_ms=self.HOUR,
+        )
+
+    def _kneser_ney(self, spark, path):
+        from proxima_platform_spark.streaming.lm_stream import (
+            ContinuousKneserNey,
+        )
+
+        return ContinuousKneserNey(spark, path)
+
+    def _winnow(self, spark, path):
+        from proxima_platform_spark.streaming.winnow_stream import (
+            ContinuousWinnowIndex,
+        )
+
+        return ContinuousWinnowIndex(spark, path)
+
+    CASES = {
+        # name: (factory, schema, crashed batch, replayed batch, state read)
+        "cached_view": (
+            _cached_view, CHANGELOG_SCHEMA,
+            [element("user", "u9", "score", 500, "9")],
+            [element("user", "u1", "score", 1000, "10"),
+             element("user", "u2", "score", 1000, "20")],
+            lambda m: m.snapshot(),
+        ),
+        "rollup": (
+            _rollup, "k string, ts_ms long, v double",
+            [("z", 5, 100.0)],
+            [("a", 10, 1.5), ("a", 20, 2.5)],
+            lambda m: m.level(TestCrashPointReplay.HOUR),
+        ),
+        "kneser_ney": (
+            _kneser_ney, "doc_id long, text string",
+            [(9, "p q r s t u v")],
+            [(1, "a b c d e a b c d e"), (2, "a b c d f g")],
+            lambda m: m.counts(),
+        ),
+        "winnow": (
+            _winnow, "doc_id long, fp long",
+            [(9, 99)],
+            [(1, 10), (1, 11), (2, 10)],
+            lambda m: m.fingerprints(),
+        ),
+    }
+
+    @pytest.mark.parametrize("name", sorted(CASES))
+    def test_orphan_delta_is_overwritten_by_replay(self, spark, tmp_path, name):
+        import shutil
+
+        make, schema, crashed_rows, rows, read = self.CASES[name]
+        crashed = make(self, spark, str(tmp_path / "crashed"))
+        crashed.update(spark.createDataFrame(crashed_rows, schema), 0)
+        replayed = make(self, spark, str(tmp_path / "replayed"))
+        shutil.copytree(
+            f"{crashed.path}/delta/d1", f"{replayed.path}/delta/d1"
+        )
+        replayed.update(spark.createDataFrame(rows, schema), 0)
+        clean = make(self, spark, str(tmp_path / "clean"))
+        clean.update(spark.createDataFrame(rows, schema), 0)
+
+        def state(m):
+            return sorted(map(tuple, read(m).collect()))
+
+        assert state(replayed) == state(clean)
+        assert replayed._manifest() == clean._manifest()
+
 
 class TestStreamingDedup:
     def test_drop_duplicates_within_watermark(self, spark, tmp_path):
@@ -1037,6 +1159,24 @@ class TestContinuousRollup:
         # compaction folded the first generations: fewer deltas than batches
         assert len(roll._manifest()["deltas"]) < len(batches)
 
+    def test_replayed_batch_id_is_noop(self, spark, tmp_path):
+        """Re-delivering batch 0 must not fold its partials twice."""
+        from proxima_platform_spark.streaming.rollup_stream import ContinuousRollup
+
+        HOUR = 3_600_000
+        roll = ContinuousRollup(
+            spark, str(tmp_path / "cr-replay"), ts_ms_col="ts_ms",
+            keys=["k"], value_col="v", base_level_ms=HOUR,
+        )
+        ev = spark.createDataFrame(
+            [("a", 1_000, 1.0), ("a", 2_000, 2.0)], "k string, ts_ms long, v double"
+        )
+        roll.update(ev, 0)
+        roll.update(ev, 0)
+        assert [(r["cnt"], float(r["total_dec"])) for r in roll.level(HOUR).collect()] == [
+            (2, 3.0)
+        ]
+
     def test_foreachbatch_wiring(self, spark, tmp_path):
         """update() as a foreachBatch callback over a file stream."""
         from proxima_platform_spark.streaming.rollup_stream import ContinuousRollup
@@ -1851,7 +1991,7 @@ class TestContinuousIndexGc:
     def test_orphan_generation_collected_on_next_compaction(self, spark, tmp_path):
         """A generation dir left by a crash between parquet writes and the
         manifest commit is garbage-collected by the next successful
-        compaction instead of leaking forever."""
+        compaction instead of leaking forever — for every maintainer."""
         import os
 
         import numpy as np
@@ -1860,21 +2000,30 @@ class TestContinuousIndexGc:
 
         rng = np.random.RandomState(1)
         schema = "vec_id long, embedding array<double>"
+        rows = [(i, [float(x) for x in rng.randn(4)]) for i in range(20)]
         idx = ContinuousAnnIndex(
             spark, str(tmp_path / "gc_idx"), num_planes=3, num_tables=1,
             compact_every=2,
         )
-        rows = [(i, [float(x) for x in rng.randn(4)]) for i in range(20)]
-        idx.update(spark.createDataFrame(rows[:5], schema), batch_id=0)
-        # simulate the crash artifact: an orphan base dir no manifest knows
-        orphan = f"{idx.path}/base/g99"
-        os.makedirs(orphan, exist_ok=True)
-        with open(f"{orphan}/part-junk.parquet", "w") as f:
-            f.write("x")
-        idx.update(spark.createDataFrame(rows[5:10], schema), batch_id=1)  # compacts
-        assert not os.path.exists(orphan)
-        # the live index still answers
-        assert idx.query_df(rows[1][1], k=1).collect()[0].id == 1
+        view = CachedView(spark, str(tmp_path / "gc_view"), compact_every=2)
+        cases = [
+            (idx, lambda i: spark.createDataFrame(rows[5 * i:5 * i + 5], schema),
+             lambda: idx.query_df(rows[1][1], k=1).collect()[0].id == 1),
+            (view, lambda i: spark.createDataFrame(
+                [element("user", "u1", "score", 1000 * (i + 1), str(i))],
+                CHANGELOG_SCHEMA),
+             lambda: bytes(view.get("u1", "score").value).decode() == "1"),
+        ]
+        for store, batch, live_reads in cases:
+            store.update(batch(0), batch_id=0)
+            # simulate the crash artifact: an orphan base dir no manifest knows
+            orphan = f"{store.path}/base/g99"
+            os.makedirs(orphan, exist_ok=True)
+            with open(f"{orphan}/part-junk.parquet", "w") as f:
+                f.write("x")
+            store.update(batch(1), batch_id=1)  # compacts
+            assert not os.path.exists(orphan), type(store).__name__
+            assert live_reads(), type(store).__name__
 
 
 class TestSemanticDedupStream:
@@ -2713,15 +2862,36 @@ class TestContinuousDomainCap:
         ]
         assert site0_later and all(not r.accepted for r in site0_later)
 
-    def test_rejects_non_posix_path(self, spark):
+    def test_rejects_non_posix_path(self, spark, tmp_path):
+        """Every maintainer rejects URI paths (its manifest is driver-local
+        file I/O) and creates nothing locally."""
         import pytest
 
         from proxima_platform_spark.streaming.domain_cap_stream import (
             ContinuousDomainCap,
         )
+        from proxima_platform_spark.streaming.rollup_stream import (
+            ContinuousRollup,
+        )
 
-        with pytest.raises(ValueError, match="POSIX"):
-            ContinuousDomainCap(spark, "s3a://bucket/state")
+        makers = [
+            lambda p: ContinuousDomainCap(spark, p),
+            lambda p: CachedView(spark, p),
+            lambda p: ContinuousRollup(
+                spark, p, ts_ms_col="ts_ms", keys=["k"], value_col="v",
+                base_level_ms=1000,
+            ),
+        ]
+        cwd = os.getcwd()
+        os.chdir(tmp_path)
+        try:
+            for make in makers:
+                for uri in ("s3a://bucket/state", "hdfs://nn/x"):
+                    with pytest.raises(ValueError, match="POSIX"):
+                        make(uri)
+            assert os.listdir(tmp_path) == []
+        finally:
+            os.chdir(cwd)
 
 
 class TestContinuousQuantileSketch:
