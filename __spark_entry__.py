@@ -2923,28 +2923,40 @@ def q_kneser_ney5_mkn_score(spark, sf):
     """MODIFIED Kneser-Ney 5-gram (Chen-Goodman three-discount estimator at
     every order 5..2, the estimator KenLM ships) — count-of-count discounts
     as broadcast 1-row frames, D by count class; an order whose n1/n2/n3
-    count-of-counts class is empty takes KenLM's --discount_fallback
-    defaults (D1=0.5, D2=1.0, D3+=1.5) so the estimator is total."""
+    count-of-counts class is empty, or with some D_j outside [0, j], takes
+    KenLM's --discount_fallback defaults (D1=0.5, D2=1.0, D3+=1.5) so the
+    estimator is total."""
     from proxima_platform_spark.functions.ranking import kneser_ney5_scores
 
     return kneser_ney5_scores(_load(spark, sf, "documents"), modified=True)
 
 
-def _sql_kneser_ney5(
-    modified: bool, *, source: str = "documents", inner: bool = False
+def _sql_kneser_ney(
+    N: int, modified: bool, *, source: str = "documents", inner: bool = False
 ) -> str:
-    """Oracle generator mirroring kneser_ney5_scores' exact expression
-    tree (same parenthesization, same quantization) at order 5.
+    """Oracle generator mirroring kn_scores_from_counts' exact expression
+    tree (same parenthesization, same quantization) at order ``N``.
 
     ``source``: relation providing (doc_id, text) — a table or an
     earlier CTE. ``inner=True`` returns a WITH-less CTE-fragment string
-    ending in a ``kn`` CTE of (doc_id, kn5_score|kn5_mkn_score), for
-    embedding into composed oracles (ccnet_pipeline)."""
-    N = 5
+    ending in a ``kn`` CTE of (doc_id, <score column>), for embedding
+    into composed oracles (ccnet_pipeline, perplexity_band_prep)."""
+    from proxima_platform_spark.functions.ranking import kn_score_col
+
     W = [f"w{i}" for i in range(1, N + 1)]
-    cnt = {5: "c5", 4: "cc4", 3: "cc3", 2: "cc2", 1: "cc1"}
+    cnt = {k: f"cc{k}" for k in range(1, N)}
+    cnt[N] = f"c{N}"
     keys = {k: W[N - k:] for k in range(1, N + 1)}
     ctx_keys = {k: W[N - k: N - 1] for k in range(2, N + 1)}
+    picks = [
+        f"tk[i{f'+{j}' if j else ''}] AS {w}" for j, w in enumerate(W)
+    ]
+    # three per line: keeps the embedded order-5 text (ccnet_pipeline's
+    # oracle) byte-stable
+    picks = ",\n           ".join(
+        ", ".join(picks[j:j + 3]) for j in range(0, N, 3)
+    )
+    last = f"len(tk) - {N - 2}" if N > 2 else "len(tk)"
 
     ctes = [
         rf"""t AS (
@@ -2952,18 +2964,17 @@ def _sql_kneser_ney5(
            string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
     FROM {source}
 )""",
-        """g AS (
-    SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3,
-           tk[i+3] AS w4, tk[i+4] AS w5
-    FROM (SELECT doc_id, tk, unnest(range(1, len(tk) - 3)) AS i FROM t
-          WHERE len(tk) >= 5)
+        f"""g AS (
+    SELECT doc_id, {picks}
+    FROM (SELECT doc_id, tk, unnest(range(1, {last})) AS i FROM t
+          WHERE len(tk) >= {N})
 )""",
         # AS MATERIALIZED: each count table is referenced 3-4 times (next
         # order, its ctx, its count-of-counts, the scored join); DuckDB
         # would otherwise inline-re-evaluate the whole upstream chain per
-        # reference — multiplicative blowup across 5 orders
-        f"""c5t AS MATERIALIZED (
-    SELECT {', '.join(W)}, count(*) AS c5 FROM g GROUP BY ALL
+        # reference — multiplicative blowup across N orders
+        f"""{cnt[N]}t AS MATERIALIZED (
+    SELECT {', '.join(W)}, count(*) AS {cnt[N]} FROM g GROUP BY ALL
 )""",
     ]
     for k in range(N - 1, 0, -1):
@@ -2973,7 +2984,7 @@ def _sql_kneser_ney5(
     FROM {cnt[k + 1]}t GROUP BY ALL
 )"""
         )
-    ctes.append("ntott AS (\n    SELECT count(*) AS ntot FROM cc2t\n)")
+    ctes.append(f"ntott AS (\n    SELECT count(*) AS ntot FROM {cnt[2]}t\n)")
     for k in range(2, N + 1):
         if modified:
             extra = (
@@ -2999,18 +3010,26 @@ def _sql_kneser_ney5(
            count(*) FILTER (WHERE {cnt[k]} = 3) AS n3,
            count(*) FILTER (WHERE {cnt[k]} = 4) AS n4
     FROM {cnt[k]}t
-), d{k} AS (
-    -- degenerate order -> KenLM --discount_fallback defaults
-    SELECT CASE WHEN n1 = 0 OR n2 = 0 OR n3 = 0 THEN 0.5
-                ELSE 1.0 - 2.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n2 / n1
-           END AS dd1_o{k},
-           CASE WHEN n1 = 0 OR n2 = 0 OR n3 = 0 THEN 1.0
-                ELSE 2.0 - 3.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n3 / n2
-           END AS dd2_o{k},
-           CASE WHEN n1 = 0 OR n2 = 0 OR n3 = 0 THEN 1.5
-                ELSE 3.0 - 4.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n4 / n3
-           END AS dd3_o{k}
+), r{k} AS (
+    -- Chen-Goodman estimates, NULL when a count class is empty
+    SELECT CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0
+                THEN 1.0 - 2.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n2 / n1
+           END AS r1,
+           CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0
+                THEN 2.0 - 3.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n3 / n2
+           END AS r2,
+           CASE WHEN n1 > 0 AND n2 > 0 AND n3 > 0
+                THEN 3.0 - 4.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n4 / n3
+           END AS r3
     FROM cls{k}
+), d{k} AS (
+    -- empty class or some D_j outside [0, j] -> KenLM --discount_fallback
+    SELECT CASE WHEN ok THEN r1 ELSE 0.5 END AS dd1_o{k},
+           CASE WHEN ok THEN r2 ELSE 1.0 END AS dd2_o{k},
+           CASE WHEN ok THEN r3 ELSE 1.5 END AS dd3_o{k}
+    FROM (SELECT *, r1 BETWEEN 0 AND 1 AND r2 BETWEEN 0 AND 2
+                    AND r3 BETWEEN 0 AND 3 AS ok
+          FROM r{k})
 )"""
             )
 
@@ -3038,13 +3057,13 @@ def _sql_kneser_ney5(
     # strip the outermost parens so ln(...) wraps the same tree
     p = p[1:-1]
     dp = 6 if modified else 8
-    out = "kn5_mkn_score" if modified else "kn5_score"
-    joins = ["FROM g", f"    JOIN c5t USING ({', '.join(W)})"]
+    out = kn_score_col(N, modified)
+    joins = ["FROM g", f"    JOIN {cnt[N]}t USING ({', '.join(W)})"]
     for k in range(N, 1, -1):
         if k < N:
             joins.append(f"    JOIN {cnt[k]}t USING ({', '.join(keys[k])})")
         joins.append(f"    JOIN ctx{k} USING ({', '.join(ctx_keys[k])})")
-    joins.append("    JOIN cc1t USING (w5)")
+    joins.append(f"    JOIN cc1t USING ({W[-1]})")
     joins.append("    CROSS JOIN ntott")
     if modified:
         for k in range(2, N + 1):
@@ -10673,47 +10692,14 @@ def q_kneser_ney_score(spark, sf):
     quality filter with the continuation-probability fix for the
     unigram-backoff pathology. All counts exact int64, ratios
     correctly-rounded IEEE doubles, the one ln per bigram immediately
-    quantized (round 8 → decimal, the trigram recipe) and mean'd with a
-    single final double division; tools/margin_check.py audits the ln
-    site. Stats tables bounded by corpus bigram TYPES; scoring is the
-    BM25/tfidf join shape."""
+    quantized (round 8 → decimal, the trigram recipe) and mean'd as
+    exact integers; tools/margin_check.py audits the ln site. Stats are
+    the order-2 window cascade of kn_scores_from_counts."""
     from proxima_platform_spark.functions.ranking import kneser_ney_scores
 
     docs = _load(spark, sf, "documents")
     return kneser_ney_scores(docs)
 
-
-SQL_KNESER_NEY = r"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
-    FROM documents
-), big AS (
-    SELECT doc_id, tk[i] AS v, tk[i+1] AS w
-    FROM (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM t
-          WHERE len(tk) >= 2)
-), c_vw AS (
-    SELECT v, w, count(*) AS cvw FROM big GROUP BY 1, 2
-), c_v AS (
-    SELECT v, sum(cvw) AS cv, count(*) AS n1v FROM c_vw GROUP BY v
-), n1w AS (
-    SELECT w, count(*) AS n1w FROM c_vw GROUP BY w
-), n1pp AS (
-    SELECT count(*) AS n1pp FROM c_vw
-), scored AS (
-    SELECT big.doc_id,
-           round(ln(greatest(cvw - 0.75, 0.0) / cv
-                    + (0.75 * n1v / cv) * (n1w::DOUBLE / n1pp)),
-                 8)::DECIMAL(28,10) AS lp
-    FROM big
-    JOIN c_vw USING (v, w)
-    JOIN c_v USING (v)
-    JOIN n1w USING (w)
-    CROSS JOIN n1pp
-)
-SELECT doc_id, round(sum(lp)::DOUBLE / count(*), 6) AS kn_score
-FROM scored GROUP BY doc_id
-"""
 
 
 def q_kneser_ney3_score(spark, sf):
@@ -10723,53 +10709,13 @@ def q_kneser_ney3_score(spark, sf):
     continuation backoff (middle order runs on N1+(·,v,w) continuation
     counts, lowest on middle-order types). All counts exact int64, the
     one ln per trigram immediately quantized (round 8 → decimal),
-    margin-audited; stats bounded by corpus trigram TYPES; the
-    BM25/tfidf join shape."""
+    margin-audited; stats bounded by corpus trigram TYPES (the order-3
+    window cascade of kn_scores_from_counts)."""
     from proxima_platform_spark.functions.ranking import kneser_ney3_scores
 
     docs = _load(spark, sf, "documents")
     return kneser_ney3_scores(docs)
 
-
-SQL_KNESER_NEY3 = r"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
-    FROM documents
-), tri AS (
-    SELECT doc_id, tk[i] AS u, tk[i+1] AS v, tk[i+2] AS w
-    FROM (SELECT doc_id, tk, unnest(range(1, len(tk) - 1)) AS i FROM t
-          WHERE len(tk) >= 3)
-), c3t AS (
-    SELECT u, v, w, count(*) AS c3 FROM tri GROUP BY 1, 2, 3
-), c3ctx AS (
-    SELECT u, v, sum(c3) AS c3c, count(*) AS n1uv FROM c3t GROUP BY 1, 2
-), cc2t AS (
-    SELECT v, w, count(*) AS cc2 FROM c3t GROUP BY 1, 2
-), cc2ctx AS (
-    SELECT v, sum(cc2) AS cc2c, count(*) AS n1cv FROM cc2t GROUP BY v
-), nlwt AS (
-    SELECT w, count(*) AS nlw FROM cc2t GROUP BY w
-), ntott AS (
-    SELECT count(*) AS ntot FROM cc2t
-), scored AS (
-    SELECT tri.doc_id,
-           round(ln(greatest(c3 - 0.75, 0.0) / c3c
-                    + (0.75 * n1uv / c3c)
-                      * (greatest(cc2 - 0.75, 0.0) / cc2c
-                         + (0.75 * n1cv / cc2c) * (nlw::DOUBLE / ntot))),
-                 8)::DECIMAL(28,10) AS lp
-    FROM tri
-    JOIN c3t USING (u, v, w)
-    JOIN c3ctx USING (u, v)
-    JOIN cc2t USING (v, w)
-    JOIN cc2ctx USING (v)
-    JOIN nlwt USING (w)
-    CROSS JOIN ntott
-)
-SELECT doc_id, round(sum(lp)::DOUBLE / count(*), 6) AS kn3_score
-FROM scored GROUP BY doc_id
-"""
 
 
 def q_kneser_ney3_mkn_score(spark, sf):
@@ -10779,7 +10725,8 @@ def q_kneser_ney3_mkn_score(spark, sf):
     per order from that order's count-of-counts n1..n4 (one 4-long agg,
     broadcast 1-row frame — no driver round-trip), D selected by each
     gram's own count class, middle order estimating its discounts from
-    the continuation count-of-counts. Same exactness recipe as the
+    the continuation count-of-counts (KenLM's fallback for an empty
+    class or a D_j outside [0, j]). Same exactness recipe as the
     fixed-discount form: int64 counts, fixed IEEE double sequence for
     the discounts, one quantized ln, margin-audited."""
     from proxima_platform_spark.functions.ranking import kneser_ney3_scores
@@ -10787,98 +10734,6 @@ def q_kneser_ney3_mkn_score(spark, sf):
     docs = _load(spark, sf, "documents")
     return kneser_ney3_scores(docs, modified=True)
 
-
-SQL_KNESER_NEY3_MKN = r"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
-    FROM documents
-), tri AS (
-    SELECT doc_id, tk[i] AS u, tk[i+1] AS v, tk[i+2] AS w
-    FROM (SELECT doc_id, tk, unnest(range(1, len(tk) - 1)) AS i FROM t
-          WHERE len(tk) >= 3)
-), c3t AS (
-    SELECT u, v, w, count(*) AS c3 FROM tri GROUP BY 1, 2, 3
-), cc2t AS (
-    SELECT v, w, count(*) AS cc2 FROM c3t GROUP BY 1, 2
-), nlwt AS (
-    SELECT w, count(*) AS nlw FROM cc2t GROUP BY w
-), ntott AS (
-    SELECT count(*) AS ntot FROM cc2t
-), c3ctx AS (
-    SELECT u, v, sum(c3) AS c3c,
-           count(*) FILTER (WHERE c3 = 1) AS e1uv,
-           count(*) FILTER (WHERE c3 = 2) AS e2uv,
-           count(*) FILTER (WHERE c3 >= 3) AS e3uv
-    FROM c3t GROUP BY 1, 2
-), cc2ctx AS (
-    SELECT v, sum(cc2) AS cc2c,
-           count(*) FILTER (WHERE cc2 = 1) AS e1cv,
-           count(*) FILTER (WHERE cc2 = 2) AS e2cv,
-           count(*) FILTER (WHERE cc2 >= 3) AS e3cv
-    FROM cc2t GROUP BY v
-), cls3 AS (
-    SELECT count(*) FILTER (WHERE c3 = 1) AS n1,
-           count(*) FILTER (WHERE c3 = 2) AS n2,
-           count(*) FILTER (WHERE c3 = 3) AS n3,
-           count(*) FILTER (WHERE c3 = 4) AS n4
-    FROM c3t
-), d3 AS (
-    -- degenerate order -> KenLM --discount_fallback defaults
-    SELECT CASE WHEN n1 = 0 OR n2 = 0 OR n3 = 0 THEN 0.5
-                ELSE 1.0 - 2.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n2 / n1
-           END AS dd1_o3,
-           CASE WHEN n1 = 0 OR n2 = 0 OR n3 = 0 THEN 1.0
-                ELSE 2.0 - 3.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n3 / n2
-           END AS dd2_o3,
-           CASE WHEN n1 = 0 OR n2 = 0 OR n3 = 0 THEN 1.5
-                ELSE 3.0 - 4.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n4 / n3
-           END AS dd3_o3
-    FROM cls3
-), cls2 AS (
-    SELECT count(*) FILTER (WHERE cc2 = 1) AS n1,
-           count(*) FILTER (WHERE cc2 = 2) AS n2,
-           count(*) FILTER (WHERE cc2 = 3) AS n3,
-           count(*) FILTER (WHERE cc2 = 4) AS n4
-    FROM cc2t
-), d2 AS (
-    -- degenerate order -> KenLM --discount_fallback defaults
-    SELECT CASE WHEN n1 = 0 OR n2 = 0 OR n3 = 0 THEN 0.5
-                ELSE 1.0 - 2.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n2 / n1
-           END AS dd1_o2,
-           CASE WHEN n1 = 0 OR n2 = 0 OR n3 = 0 THEN 1.0
-                ELSE 2.0 - 3.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n3 / n2
-           END AS dd2_o2,
-           CASE WHEN n1 = 0 OR n2 = 0 OR n3 = 0 THEN 1.5
-                ELSE 3.0 - 4.0 * ((n1::DOUBLE) / (n1 + 2 * n2)) * n4 / n3
-           END AS dd3_o2
-    FROM cls2
-), scored AS (
-    SELECT tri.doc_id,
-           round(ln(
-             greatest(c3 - (CASE WHEN c3 = 1 THEN dd1_o3
-                                 WHEN c3 = 2 THEN dd2_o3
-                                 ELSE dd3_o3 END), 0.0) / c3c
-             + ((dd1_o3 * e1uv + dd2_o3 * e2uv + dd3_o3 * e3uv) / c3c)
-               * (greatest(cc2 - (CASE WHEN cc2 = 1 THEN dd1_o2
-                                       WHEN cc2 = 2 THEN dd2_o2
-                                       ELSE dd3_o2 END), 0.0) / cc2c
-                  + ((dd1_o2 * e1cv + dd2_o2 * e2cv + dd3_o2 * e3cv) / cc2c)
-                    * (nlw::DOUBLE / ntot))
-           ), 6)::DECIMAL(28,10) AS lp
-    FROM tri
-    JOIN c3t USING (u, v, w)
-    JOIN c3ctx USING (u, v)
-    JOIN cc2t USING (v, w)
-    JOIN cc2ctx USING (v)
-    JOIN nlwt USING (w)
-    CROSS JOIN ntott
-    CROSS JOIN d3
-    CROSS JOIN d2
-)
-SELECT doc_id, round(sum(lp)::DOUBLE / count(*), 6) AS kn3_mkn_score
-FROM scored GROUP BY doc_id
-"""
 
 
 def q_cohens_kappa(spark, sf):
@@ -11263,7 +11118,7 @@ def q_perplexity_band_prep(spark, sf):
 
 def _sql_perplexity_band_prep() -> str:
     return f"""
-WITH kn AS ({SQL_KNESER_NEY}),
+WITH {_sql_kneser_ney(2, False, inner=True)},
 m AS (
     SELECT doc_id, kn_score,
            round(kn_score * 1000000)::BIGINT AS sm
@@ -11466,7 +11321,7 @@ FROM bucketed bk
 JOIN best b ON b.id = bk.doc_id AND b.rn = 1
 JOIN ntok USING (doc_id)
 GROUP BY 1, 2
-""".replace("{kn5}", _sql_kneser_ney5(False, source="dd", inner=True))
+""".replace("{kn5}", _sql_kneser_ney(5, False, source="dd", inner=True))
 
 
 
@@ -12062,15 +11917,15 @@ def oracle_sql() -> dict[str, str]:
         "wordpiece_fertility": SQL_WORDPIECE_FERTILITY,
         "winnow_overlap": _sql_winnow_overlap(),
         "dedup_winnow": _sql_dedup_winnow(),
-        "kneser_ney_score": SQL_KNESER_NEY,
-        "kneser_ney3_score": SQL_KNESER_NEY3,
-        "kneser_ney3_mkn_score": SQL_KNESER_NEY3_MKN,
+        "kneser_ney_score": _sql_kneser_ney(2, False),
+        "kneser_ney3_score": _sql_kneser_ney(3, False),
+        "kneser_ney3_mkn_score": _sql_kneser_ney(3, True),
         "dedup_minhash_oph": _sql_dedup_minhash_oph(),
         "naive_bayes_langid": SQL_NAIVE_BAYES_LANGID,
         "bleu_dedup_verify": _sql_bleu_dedup_verify(),
         "zipf_slope": SQL_ZIPF_SLOPE,
-        "kneser_ney5_score": _sql_kneser_ney5(False),
-        "kneser_ney5_mkn_score": _sql_kneser_ney5(True),
+        "kneser_ney5_score": _sql_kneser_ney(5, False),
+        "kneser_ney5_mkn_score": _sql_kneser_ney(5, True),
         "domain_jsd": SQL_DOMAIN_JSD,
         "tpch_q12ish": SQL_TPCH_Q12ISH,
         "tpch_q20ish": SQL_TPCH_Q20ISH,

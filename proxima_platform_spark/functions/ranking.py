@@ -17,7 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from proxima_platform_spark.functions.dedup import tokens
+from proxima_platform_spark.functions.dedup import (
+    gram_structs_from_tokens,
+    tokens,
+)
 
 
 def term_frequency(toks: Column, term: str) -> Column:
@@ -149,81 +152,20 @@ def kneser_ney_scores(
     discount: float = 0.75,
 ) -> DataFrame:
     """Interpolated Kneser-Ney bigram LM fluency score per document —
-    the KenLM/CCNet-class quality filter (Heafield'11 uses modified KN;
-    this is the single-discount interpolated form, Kneser & Ney'95):
+    the KenLM/CCNet-class quality filter (Kneser & Ney'95, single
+    discount D):
 
         P(w|v)    = max(c(v,w) − D, 0)/c(v·) + λ(v)·P_cont(w)
         λ(v)      = D · N1+(v·) / c(v·)
         P_cont(w) = N1+(·w) / N1+(··)
 
-    with c(v,w) the corpus bigram count, c(v·) the context total,
-    N1+(v·)/N1+(·w) the distinct continuation/preceding type counts and
-    N1+(··) the distinct bigram types. KN's continuation distribution
-    fixes the unigram-backoff pathology (a word frequent only inside
-    one collocation — "Francisco" — stops inflating unseen contexts),
-    which is why it is THE n-gram smoothing for corpus quality scoring.
-
-        score(d) = mean over d's bigrams of round(ln P(w|v), 8)
-
-    Engine portability: every count is exact int64; D = 0.75 and all
-    ratios/products are correctly-rounded IEEE doubles (identical
-    cross-engine for identical inputs); the ONE libm op (ln) is
-    immediately quantized (round 8 → decimal — the trigram recipe) and
-    accumulates exactly, with the final mean one double division.
-    tools/margin_check.py audits the ln site's boundary slack.
-
-    Scale shape: the stats tables are one bigram count agg + three
-    bounded distinct-type aggs (all map-side combined, keyed by word or
-    bigram — cardinality bounded by corpus bigram TYPES, which grows
-    sublinearly in corpus size); scoring joins doc bigram occurrences
-    against them (AQE broadcasts the word-keyed sides when small) and
-    reduces per doc. Never a pairwise product; the BM25/tfidf join
-    shape throughout.
+    KN's continuation distribution fixes the unigram-backoff pathology
+    (a word frequent only inside one collocation — "Francisco" — stops
+    inflating unseen contexts). Output column ``kn_score``; the
+    recursion, exactness recipe and plan shape are
+    :func:`kn_scores_from_counts` at order 2.
     """
-    from proxima_platform_spark.functions.dedup import (
-        gram_structs_from_tokens,
-        tokens,
-    )
-
-    if not 0.0 < discount < 1.0:
-        raise ValueError(f"discount must be in (0,1), got {discount}")
-    toks = docs.select(
-        F.col(id_col), tokens(F.col(text)).alias("__t")
-    ).where(F.size("__t") >= 2)
-    big = toks.select(
-        id_col,
-        F.explode(
-            gram_structs_from_tokens(F.col("__t"), ["v", "w"])
-        ).alias("bg"),
-    ).select(id_col, "bg.v", "bg.w")
-    c_vw = big.groupBy("v", "w").agg(F.count(F.lit(1)).alias("cvw"))
-    c_v = c_vw.groupBy("v").agg(
-        F.sum("cvw").alias("cv"), F.count(F.lit(1)).alias("n1v")
-    )
-    n1w = c_vw.groupBy("w").agg(F.count(F.lit(1)).alias("n1w"))
-    n1pp = c_vw.agg(F.count(F.lit(1)).alias("n1pp"))
-    d = F.lit(float(discount))
-    p = (
-        F.greatest(F.col("cvw") - d, F.lit(0.0)) / F.col("cv")
-        + (d * F.col("n1v") / F.col("cv"))
-        * (F.col("n1w").cast("double") / F.col("n1pp"))
-    )
-    # lp per bigram TYPE, one occurrence-level join (the kn5 plan shape)
-    lp_tab = (
-        c_vw.join(c_v, "v")
-        .join(n1w, "w")
-        .crossJoin(F.broadcast(n1pp))
-        .select(
-            "v", "w",
-            F.round(F.log(p), 8).cast("decimal(28,10)").alias("lp"),
-        )
-    )
-    scored = big.join(lp_tab, ["v", "w"]).select(id_col, "lp")
-    return scored.groupBy(id_col).agg(
-        F.round(
-            F.sum("lp").cast("double") / F.count(F.lit(1)), 6
-        ).alias("kn_score")
-    )
+    return _kn_scores(docs, 2, text, id_col, discount, False)
 
 
 def bm25_top_k(
@@ -352,280 +294,16 @@ def kneser_ney3_scores(
 ) -> DataFrame:
     """Interpolated Kneser-Ney TRIGRAM LM fluency score per document —
     one order up from :func:`kneser_ney_scores` toward the 5-gram KenLM
-    that CCNet actually ships (Wenzek'20 uses Heafield'11's modified-KN
-    5-gram; order 3 is where LM filtering starts separating fluent
-    boilerplate from prose). Full recursive continuation backoff
-    (Kneser & Ney'95, single discount D, Chen & Goodman'98 eq. 18):
+    that CCNet ships (Wenzek'20); order 3 is where LM filtering starts
+    separating fluent boilerplate from prose. The middle order runs on
+    continuation counts N1+(·,v,w) (Chen & Goodman'98 eq. 18).
 
-        P₃(w|u,v) = max(c(u,v,w) − D, 0)/c(u,v,·) + λ(u,v)·P₂(w|v)
-        λ(u,v)    = D · N1+(u,v,·) / c(u,v,·)
-
-    with the MIDDLE order running on continuation counts (the KN
-    recursion: each lower order counts distinct *extensions*, not raw
-    occurrences — c'(v,w) = N1+(·,v,w), the distinct u preceding (v,w)):
-
-        P₂(w|v)   = max(c'(v,w) − D, 0)/c'(v,·) + λ'(v)·P_cont(w)
-        λ'(v)     = D · N1+(v,·)' / c'(v,·)
-        P_cont(w) = N1+(·,w)' / N1+(·,·)'
-
-    where every primed count is over the middle-order (v,w) TYPE table
-    derived from trigram types. Scoring only observed trigrams (corpus
-    self-scoring) means every join hits: the trigram (u,v,w) itself
-    witnesses c'(v,w) ≥ 1, so inner joins are exact, not lossy.
-
-        score(d) = mean over d's trigrams of round(ln P₃(w|u,v), 8)
-
-    Engine portability (the bigram recipe, one order up): every count
-    is exact int64; all ratios/products are correctly-rounded IEEE
-    doubles with identical parenthesization in the DuckDB oracle; the
-    ONE libm op (ln) is immediately quantized (round 8 → decimal) and
-    accumulates exactly; final mean is one double division.
-    tools/margin_check.py audits the ln site's boundary slack.
-
-    Scale shape: stats are one trigram-count agg plus four bounded
-    type-count aggs (map-side combined, keyed by (u,v)/(v,w)/v/w —
-    cardinality bounded by corpus trigram TYPES, sublinear in corpus
-    size); scoring joins doc trigram occurrences against them (AQE
-    broadcasts the small keyed sides) and reduces per doc. Never a
-    pairwise product — the BM25/tfidf join shape, like the bigram form.
-
-    ``modified=True`` switches to MODIFIED Kneser-Ney (Chen &
-    Goodman'98 §3, the estimator KenLM actually ships): three
-    count-class discounts per order, estimated from that order's
-    count-of-counts n₁..n₄,
-
-        Y  = n₁ / (n₁ + 2n₂)
-        D₁ = 1 − 2Y·n₂/n₁   D₂ = 2 − 3Y·n₃/n₂   D₃₊ = 3 − 4Y·n₄/n₃
-        λ(ctx) = (D₁·N₁(ctx·) + D₂·N₂(ctx·) + D₃₊·N₃₊(ctx·)) / c(ctx·)
-
-    with D(c) selected by the gram's own count class (c=1 / c=2 / c≥3)
-    and the middle order estimating ITS discounts from the continuation
-    count-of-counts. The count-of-counts are one 4-long agg per order
-    (broadcast 1-row frames — no driver round-trip); an order with an
-    empty n₁/n₂/n₃ class takes KenLM's ``--discount_fallback`` defaults
-    (D₁=0.5, D₂=1.0, D₃₊=1.5 — totality over raising: continuation
-    counts can saturate on large corpora, the kn5 lesson).
-    ``discount`` is ignored when ``modified=True``.
-    Output column: ``kn3_mkn_score`` (vs ``kn3_score``).
-
-    Reference parity anchor: same user-code-transform shape as the
-    console DSL's flatMap scoring (tools/groovy/Stream.java) — a
-    per-element enrichment against broadcast-joined corpus statistics.
+    ``modified=True`` is modified KN (Chen & Goodman'98 §3, the
+    estimator KenLM ships). Output column ``kn3_score`` /
+    ``kn3_mkn_score``; everything else is :func:`kn_scores_from_counts`
+    at order 3.
     """
-    from proxima_platform_spark.functions.dedup import (
-        gram_structs_from_tokens,
-        tokens,
-    )
-
-    if not 0.0 < discount < 1.0:
-        raise ValueError(f"discount must be in (0,1), got {discount}")
-    toks = docs.select(
-        F.col(id_col), tokens(F.col(text)).alias("__t")
-    ).where(F.size("__t") >= 3)
-    tri = toks.select(
-        id_col,
-        F.explode(
-            gram_structs_from_tokens(F.col("__t"), ["u", "v", "w"])
-        ).alias("tg"),
-    ).select(id_col, "tg.u", "tg.v", "tg.w")
-    # highest order: raw trigram counts
-    c3 = tri.groupBy("u", "v", "w").agg(F.count(F.lit(1)).alias("c3"))
-
-    # ---- stats stage as two window cascades (r14 — the kn5 recipe) ----
-    # Every lower-order statistic is a nested-suffix or nested-context
-    # aggregate of the trigram TYPE table: pass A (repartition(w), one
-    # sort [w,v,u]) computes the middle-order continuation count
-    # cc2(v,w) (= distinct u per (v,w)), its representative flag, the
-    # unigram continuation nlw(w) (= distinct (v,w) per w as a flag
-    # count) and ntot; pass B (repartition(v), one sort [v,u(,w)])
-    # computes both orders' context totals / type-class counts at the
-    # representative rows. 2 exchanges + 1 pin replace 4 groupBy
-    # exchanges + 5 joins; counts are exact int64 either way —
-    # bit-identical output (python-model parity tests + exact oracle).
-    from pyspark.sql import Window as Wnd
-
-    _full = (Wnd.unboundedPreceding, Wnd.unboundedFollowing)
-    wS2 = Wnd.partitionBy("w", "v").orderBy("u")
-    wS1 = Wnd.partitionBy("w").orderBy("v", "u")
-    a = (
-        c3.repartition("w")
-        .withColumn("cc2", F.count(F.lit(1)).over(wS2.rowsBetween(*_full)))
-        .withColumn("__f2", F.row_number().over(wS2) == 1)
-        .withColumn(
-            "nlw",
-            F.count(F.when(F.col("__f2"), 1)).over(wS1.rowsBetween(*_full)),
-        )
-        .localCheckpoint(eager=False)
-    )
-    ntot = a.agg(F.count(F.when(F.col("__f2"), 1)).alias("ntot"))
-
-    wC3 = Wnd.partitionBy("v", "u")
-    wC2 = Wnd.partitionBy("v").orderBy("u", "w")
-
-    if not modified:
-        b = (
-            a.repartition("v")
-            .withColumn("c3c", F.sum("c3").over(wC3))
-            .withColumn("n1uv", F.count(F.lit(1)).over(wC3))
-            .withColumn(
-                "cc2c",
-                F.sum(F.when(F.col("__f2"), F.col("cc2"))).over(
-                    wC2.rowsBetween(*_full)
-                ),
-            )
-            .withColumn(
-                "n1cv",
-                F.count(F.when(F.col("__f2"), 1)).over(
-                    wC2.rowsBetween(*_full)
-                ),
-            )
-        )
-        d = F.lit(float(discount))
-        p2 = (
-            F.greatest(F.col("cc2") - d, F.lit(0.0)) / F.col("cc2c")
-            + (d * F.col("n1cv") / F.col("cc2c"))
-            * (F.col("nlw").cast("double") / F.col("ntot"))
-        )
-        p3 = (
-            F.greatest(F.col("c3") - d, F.lit(0.0)) / F.col("c3c")
-            + (d * F.col("n1uv") / F.col("c3c")) * p2
-        )
-        # lp per trigram TYPE straight off the windowed stat columns,
-        # then ONE occurrence-level join — the kn5 plan shape
-        lp_tab = b.crossJoin(F.broadcast(ntot)).select(
-            "u", "v", "w",
-            F.round(F.log(p3), 8).cast("decimal(28,10)").alias("lp"),
-        )
-        scored = tri.join(lp_tab, ["u", "v", "w"]).select(id_col, "lp")
-        return scored.groupBy(id_col).agg(
-            F.round(
-                F.sum("lp").cast("double") / F.count(F.lit(1)), 6
-            ).alias("kn3_score")
-        )
-
-    # ---- modified KN (Chen-Goodman three-discount estimator) --------
-    # Both orders' discounts from ONE 1-row frame (the kn5 recipe),
-    # aggregated straight off the flagged window frame (r14): an
-    # order-2 type is exactly a row whose __f2 flag is set, carrying
-    # its count in cc2, so the count-of-counts scan needs no union of
-    # the two count tables. Exact int64 classes, then the fixed IEEE
-    # double sequence (mirrored verbatim in the oracle). An order with
-    # an empty n1/n2/n3 class takes KenLM's --discount_fallback
-    # defaults (0.5/1.0/1.5) — degeneracy happens on LARGE corpora too
-    # (continuation counts saturate; the kn5 lesson), so the estimator
-    # must be total rather than raise.
-    agg_exprs = [F.count(F.when(F.col("__f2"), 1)).alias("ntot")]
-    for k in (2, 3):
-        for j in (1, 2, 3, 4):
-            cond = (
-                (F.col("c3") == j)
-                if k == 3
-                else (F.col("__f2") & (F.col("cc2") == j))
-            )
-            agg_exprs.append(F.count(F.when(cond, 1)).alias(f"n{j}_o{k}"))
-    cls = a.agg(*agg_exprs)
-    dd_cols = [F.col("ntot")]
-    for k in (2, 3):
-        n1, n2, n3, n4 = (F.col(f"n{j}_o{k}") for j in (1, 2, 3, 4))
-        degenerate = (n1 == 0) | (n2 == 0) | (n3 == 0)
-        y = n1.cast("double") / (n1 + F.lit(2) * n2)
-        dd_cols += [
-            F.when(degenerate, F.lit(0.5))
-            .otherwise(F.lit(1.0) - F.lit(2.0) * y * n2 / n1)
-            .alias(f"dd1_o{k}"),
-            F.when(degenerate, F.lit(1.0))
-            .otherwise(F.lit(2.0) - F.lit(3.0) * y * n3 / n2)
-            .alias(f"dd2_o{k}"),
-            F.when(degenerate, F.lit(1.5))
-            .otherwise(F.lit(3.0) - F.lit(4.0) * y * n4 / n3)
-            .alias(f"dd3_o{k}"),
-        ]
-    discs = cls.select(*dd_cols)
-    # per-context totals + per-count-class extension type counts, as
-    # pass-B windows (context keys (v,u) ⊃ (v) share repartition(v))
-    b = (
-        a.repartition("v")
-        .withColumn("c3c", F.sum("c3").over(wC3))
-        .withColumn(
-            "e1uv", F.count(F.when(F.col("c3") == 1, 1)).over(wC3)
-        )
-        .withColumn(
-            "e2uv", F.count(F.when(F.col("c3") == 2, 1)).over(wC3)
-        )
-        .withColumn(
-            "e3uv", F.count(F.when(F.col("c3") >= 3, 1)).over(wC3)
-        )
-        .withColumn(
-            "cc2c",
-            F.sum(F.when(F.col("__f2"), F.col("cc2"))).over(
-                wC2.rowsBetween(*_full)
-            ),
-        )
-        .withColumn(
-            "e1cv",
-            F.count(F.when(F.col("__f2") & (F.col("cc2") == 1), 1)).over(
-                wC2.rowsBetween(*_full)
-            ),
-        )
-        .withColumn(
-            "e2cv",
-            F.count(F.when(F.col("__f2") & (F.col("cc2") == 2), 1)).over(
-                wC2.rowsBetween(*_full)
-            ),
-        )
-        .withColumn(
-            "e3cv",
-            F.count(F.when(F.col("__f2") & (F.col("cc2") >= 3), 1)).over(
-                wC2.rowsBetween(*_full)
-            ),
-        )
-    )
-
-    def _dsel(cnt: str, tag: str):
-        return (
-            F.when(F.col(cnt) == 1, F.col(f"dd1_{tag}"))
-            .when(F.col(cnt) == 2, F.col(f"dd2_{tag}"))
-            .otherwise(F.col(f"dd3_{tag}"))
-        )
-
-    lam2 = (
-        F.col("dd1_o2") * F.col("e1cv")
-        + F.col("dd2_o2") * F.col("e2cv")
-        + F.col("dd3_o2") * F.col("e3cv")
-    ) / F.col("cc2c")
-    p2m = F.greatest(F.col("cc2") - _dsel("cc2", "o2"), F.lit(0.0)) / F.col(
-        "cc2c"
-    ) + lam2 * (F.col("nlw").cast("double") / F.col("ntot"))
-    lam3 = (
-        F.col("dd1_o3") * F.col("e1uv")
-        + F.col("dd2_o3") * F.col("e2uv")
-        + F.col("dd3_o3") * F.col("e3uv")
-    ) / F.col("c3c")
-    p3m = (
-        F.greatest(F.col("c3") - _dsel("c3", "o3"), F.lit(0.0))
-        / F.col("c3c")
-        + lam3 * p2m
-    )
-    lp_tab = (
-        b.crossJoin(F.broadcast(discs))  # ntot + both orders' discounts
-        .select(
-            "u", "v", "w",
-            # round 6, not 8: with ~50k lp values per corpus the chance
-            # of SOME value landing inside 1000 ulps of a fine rounding
-            # grid is material — the sf0.01 fixture tripped the margin
-            # audit at both 8 dp (3e-13 slack) and 7 dp (1e-13); the
-            # 1e-6 grid holds. Determinism, not absolute lp precision,
-            # is the contract (both engines mean the same rounded lps).
-            F.round(F.log(p3m), 6).cast("decimal(28,10)").alias("lp"),
-        )
-    )
-    # lp per trigram TYPE, one occurrence-level join (the kn5 plan shape)
-    scored = tri.join(lp_tab, ["u", "v", "w"]).select(id_col, "lp")
-    return scored.groupBy(id_col).agg(
-        F.round(
-            F.sum("lp").cast("double") / F.count(F.lit(1)), 6
-        ).alias("kn3_mkn_score")
-    )
+    return _kn_scores(docs, 3, text, id_col, discount, modified)
 
 
 def pmi_bigrams(
@@ -662,11 +340,6 @@ def pmi_bigrams(
     TakeOrderedAndProject — per-partition heaps, the bigram table never
     globally sorts.
     """
-    from proxima_platform_spark.functions.dedup import (
-        gram_structs_from_tokens,
-        tokens,
-    )
-
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     if top_k < 1:
@@ -719,180 +392,198 @@ def kneser_ney5_scores(
 ) -> DataFrame:
     """Interpolated Kneser-Ney 5-GRAM LM fluency score per document — the
     full KenLM order (Heafield'11) that CCNet's quality filter actually
-    runs (Wenzek'20). The complete recursion of :func:`kneser_ney3_scores`
-    extended through orders 5→4→3→2→1: the top order runs on raw 5-gram
-    counts; every lower order k runs on CONTINUATION counts — the distinct
-    left-extension types of the (k+1)-order TYPE table (Kneser & Ney'95;
-    Chen & Goodman'98 eq. 18):
-
-        P_k(w|ctx) = max(c_k(ctx,w) − D, 0)/c_k(ctx·)
-                     + D·N1+(ctx·)/c_k(ctx·) · P_{k-1}(w|ctx′)
-        P_1(w)     = N1+(·,w) / N1+(··)     (over bigram types)
-
-    Scoring only observed 5-grams (corpus self-scoring) keeps every join
-    exact: each observed 5-gram witnesses all of its suffix type entries.
-
-        score(d) = mean over d's 5-grams of round(ln P₅, 8)
-
-    ``modified=True`` applies the Chen-Goodman'98 three-discount estimator
-    at EVERY order 5..2 (the estimator KenLM ships): D₁/D₂/D₃₊ per order
-    from that order's count-of-counts n₁..n₄ (broadcast 1-row frames),
-    D selected by each gram's own count class, λ(ctx) =
-    (D₁N₁(ctx·)+D₂N₂(ctx·)+D₃₊N₃₊(ctx·))/c(ctx·). An order whose n₁/n₂/n₃
-    class is empty takes KenLM's ``--discount_fallback`` defaults
-    (D₁=0.5, D₂=1.0, D₃₊=1.5) — degeneracy is NOT a small-corpus
-    artifact: order-2 continuation counts saturate past count 4 on LARGE
-    corpora (observed at sf0.1), so the estimator must be total. Output
-    column ``kn5_mkn_score`` (vs ``kn5_score``); modified rounds lp at
-    6 dp (the kn3_mkn margin rationale — fine grids trip the audit).
-
-    Engine portability: exact int64 counts, one quantized ln, fixed IEEE
-    parenthesization mirrored in the oracle, margin-audited.
-
-    Scale shape: one 5-gram count agg, then the whole stats stage runs
-    as TWO window cascades over the type table (r14) — one exchange by
-    the final word for the continuation counts, one by w4 for the
-    context totals — instead of the former eight type/context groupBy
-    exchanges + nine stats joins; the occurrence stream then crosses
-    exactly ONE join — grams → (type, lp) — and reduces per doc. Zero
-    pairwise products — the deepest instance of the BM25 join shape.
+    runs (Wenzek'20). Output column ``kn5_score`` / ``kn5_mkn_score``;
+    everything else is :func:`kn_scores_from_counts` at order 5.
     """
-    from proxima_platform_spark.functions.dedup import (
-        gram_structs_from_tokens,
-        tokens,
-    )
+    return _kn_scores(docs, 5, text, id_col, discount, modified)
 
-    N = 5
-    W = [f"w{i}" for i in range(1, N + 1)]
+
+def kn_grams(
+    docs: DataFrame, order: int, *, text: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(id_col, w1..w{order}) — every word ``order``-gram occurrence of
+    every document with at least ``order`` tokens: the occurrence
+    stream the KN engine counts and scores (batch and streaming)."""
+    W = [f"w{i}" for i in range(1, order + 1)]
     toks = docs.select(
         F.col(id_col), tokens(F.col(text)).alias("__t")
-    ).where(F.size("__t") >= N)
-    grams = toks.select(
+    ).where(F.size("__t") >= order)
+    return toks.select(
         id_col,
         F.explode(gram_structs_from_tokens(F.col("__t"), W)).alias("g"),
     ).select(id_col, *[f"g.{w}" for w in W])
-    c5 = grams.groupBy(*W).agg(F.count(F.lit(1)).alias("c5"))
-    return kn5_scores_from_counts(
-        c5, grams, id_col=id_col, discount=discount, modified=modified
+
+
+def kn_score_col(order: int, modified: bool) -> str:
+    """Output column of the order-``order`` KN score (``kn_score`` for
+    bigrams, ``kn{order}_score`` above; ``_mkn`` when modified)."""
+    tag = "" if order == 2 else str(order)
+    return f"kn{tag}{'_mkn' if modified else ''}_score"
+
+
+def _kn_scores(docs, order, text, id_col, discount, modified) -> DataFrame:
+    """Corpus self-scoring: count the corpus's own grams, score them."""
+    grams = kn_grams(docs, order, text=text, id_col=id_col)
+    W = [f"w{i}" for i in range(1, order + 1)]
+    counts = grams.groupBy(*W).agg(F.count(F.lit(1)).alias(f"c{order}"))
+    return kn_scores_from_counts(
+        counts, grams, id_col=id_col, discount=discount, modified=modified
     )
 
 
-def kn5_scores_from_counts(
-    c5: DataFrame,
+def kn_scores_from_counts(
+    counts: DataFrame,
     grams: DataFrame,
     *,
     id_col: str = "doc_id",
     discount: float = 0.75,
     modified: bool = False,
 ) -> DataFrame:
-    """The KN-5 recursion from its one sufficient statistic: ``c5`` =
-    (w1..w5, c5) raw 5-gram counts (ADDITIVE across corpora — what the
-    streaming maintainer merges) and ``grams`` = (id_col, w1..w5) the
-    occurrences to score. Every derived table (continuation counts,
-    context totals, discounts) is a pure function of the count table, so
-    batch and maintained-model scoring share this code verbatim."""
+    """Interpolated Kneser-Ney LM score per document at any order N ≥ 2,
+    from the model's one sufficient statistic: ``counts`` = (w1..wN, cN)
+    raw N-gram counts (ADDITIVE across corpora — what the streaming
+    maintainer merges) and ``grams`` = (id_col, w1..wN) the occurrences
+    to score. N is read from the ``cN`` column. Every derived table
+    (continuation counts, context totals, discounts) is a pure function
+    of the count table, so batch and maintained-model scoring share this
+    code verbatim.
+
+    The recursion (Kneser & Ney'95; Chen & Goodman'98 eq. 18): the top
+    order runs on raw counts, every lower order k on CONTINUATION counts
+    — the distinct left-extension types of the (k+1)-order type table:
+
+        P_k(w|ctx) = max(c_k(ctx,w) − D, 0)/c_k(ctx·)
+                     + D·N1+(ctx·)/c_k(ctx·) · P_{k-1}(w|ctx′)
+        P_1(w)     = N1+(·,w) / N1+(··)     (over bigram types)
+
+        score(d) = mean over d's N-grams of round(ln P_N, 8)
+
+    Scoring only observed N-grams (corpus self-scoring) keeps every
+    lookup exact: each observed N-gram witnesses all of its suffix types.
+
+    ``modified=True`` applies the Chen-Goodman'98 three-discount
+    estimator at every order N..2 (the estimator KenLM ships): from that
+    order's count-of-counts n₁..n₄,
+
+        Y  = n₁ / (n₁ + 2n₂)
+        D₁ = 1 − 2Y·n₂/n₁   D₂ = 2 − 3Y·n₃/n₂   D₃₊ = 3 − 4Y·n₄/n₃
+        λ(ctx) = (D₁·N₁(ctx·) + D₂·N₂(ctx·) + D₃₊·N₃₊(ctx·)) / c(ctx·)
+
+    with D selected by each gram's own count class (1 / 2 / ≥3). An
+    order with an empty n₁/n₂/n₃ class, or with any D_j outside [0, j],
+    takes KenLM's ``--discount_fallback`` defaults (D₁=0.5, D₂=1.0,
+    D₃₊=1.5) — both happen on LARGE corpora too (continuation counts
+    saturate; at sf0.1 order 3 estimates D₂ < 0, which drives some
+    probabilities below zero), so the estimator is total rather than
+    raising. ``discount`` is ignored when modified; lp rounds at 6 dp
+    (fine grids trip the margin audit at ~50k lps per corpus).
+
+    Engine portability: exact int64 counts, correctly-rounded IEEE
+    doubles in a fixed parenthesization mirrored by the DuckDB oracle,
+    ONE libm op (ln) immediately quantized and margin-audited
+    (tools/margin_check.py), and an exact-integer mean.
+
+    Scale shape: the whole stats stage runs as TWO window cascades over
+    the type table — one exchange by the final word for the continuation
+    counts, one by the word before it for the context totals — then the
+    occurrence stream crosses exactly ONE join, grams → (type, lp), and
+    reduces per doc. Zero pairwise products.
+    """
     if not 0.0 < discount < 1.0:
         raise ValueError(f"discount must be in (0,1), got {discount}")
-    N = 5
+    orders = [
+        int(c[1:]) for c in counts.columns if c[:1] == "c" and c[1:].isdigit()
+    ]
+    if len(orders) != 1 or orders[0] < 2:
+        raise ValueError(
+            "counts needs exactly one cN column with N >= 2, "
+            f"got {counts.columns}"
+        )
+    N = orders[0]
     W = [f"w{i}" for i in range(1, N + 1)]
-    cnt_col = {N: "c5", 4: "cc4", 3: "cc3", 2: "cc2", 1: "cc1"}
+    # order-k count column; order-k representative-row flag (None: every
+    # row of the N-gram type table is its own order-N type)
+    cnt_col = {k: f"cc{k}" for k in range(1, N)}
+    cnt_col[N] = f"c{N}"
+    flag = {k: f"__f{k}" for k in range(2, N)}
+    flag[N] = None
 
     from pyspark.sql import Window as Wnd
 
     from proxima_platform_spark.exprtools import static_template
 
-    # ---- stats stage as two window cascades (r14; guide §2.4) ----------
-    # The former shape derived four suffix TYPE tables (a groupBy exchange
-    # each, each localCheckpoint-pinned) plus four per-context aggregates
-    # (four more exchanges), then assembled lp with NINE type-table joins
-    # — AQE broadcasts at sf0.1, but sort-merge shuffles of the full type
-    # table at 100 TB. Every one of those quantities is a nested-SUFFIX or
-    # nested-CONTEXT aggregate of the single 5-gram type table:
+    # ---- stats stage as two window cascades (guide §2.4) ---------------
+    # Every lower-order quantity is a nested-SUFFIX or nested-CONTEXT
+    # aggregate of the single N-gram type table:
     #
-    #   cc_k(last k words) = # distinct left-extension types — suffix keys
-    #     (w5) ⊂ (w5,w4) ⊂ (w5,w4,w3) ⊂ (w5,w4,w3,w2)
+    #   cc_k (last k words) = # distinct left-extension types — suffix
+    #     keys (wN) ⊂ (wN,wN-1) ⊂ … ⊂ (wN..w2)
     #   tot_k / n1_k / e*_k (per order-k context = the k-1 words before
-    #     the final word) — context keys (w4) ⊂ (w4,w3) ⊂ (w4,w3,w2)
-    #     ⊂ (w4,w3,w2,w1)
+    #     the final word) — context keys (wN-1) ⊂ (wN-1,wN-2) ⊂ …
+    #     ⊂ (wN-1..w1)
     #
-    # so the whole stats stage runs as TWO window cascades:
-    #   pass A — repartition(w5): every suffix window spec requires the
-    #     SAME sort [w5,w4,w3,w2,w1], and hashpartitioning(w5) satisfies
-    #     every (subset-keyed) clustering, so Catalyst plans ONE exchange
-    #     + ONE sort for all of cc4..cc1 plus one "representative" row
-    #     flag per suffix order (row_number == 1) that lets coarser
-    #     orders count DISTINCT finer suffixes as plain flag-counts.
-    #   pass B — repartition(w4): the same construction over the context
-    #     keys (shared sort [w4,w3,w2,w1]) computes tot5..tot2 and
-    #     n1_*/e*_* by aggregating each order's counts at its
+    #   pass A — repartition(wN): every suffix window spec requires the
+    #     SAME sort [wN..w1], and hashpartitioning(wN) satisfies every
+    #     (subset-keyed) clustering, so Catalyst plans ONE exchange + ONE
+    #     sort for all of ccN-1..cc1 plus one "representative" row flag
+    #     per suffix order (row_number == 1) that lets coarser orders
+    #     count DISTINCT finer suffixes as plain flag-counts.
+    #   pass B — repartition(wN-1): the same construction over the
+    #     context keys (shared sort [wN-1..w1]) computes tot_k and
+    #     n1_k/e*_k by aggregating each order's counts at its
     #     representative rows only.
-    # 2 exchanges + 2 sorts + 1 pin replace 8 exchanges + 9 joins +
-    # 5 pins. The stat columns keep their former names so the
-    # probability template is unchanged, and every count is exact int64
-    # either way — bit-identical output (equivalence pinned in
-    # tests/test_ranking.py; exact-text oracle green).
     #
     # 100 TB caveat: WindowExec buffers each partitionBy GROUP (spilling
     # past spark.sql.windowExec.buffer.spill.threshold); the coarsest
-    # groups are "all 5-gram types sharing a final word" (pass A) /
-    # "sharing w4" (pass B), so a stop-word group buffers many type rows
-    # where the old groupBy combined map-side. The trade is 6 full
-    # type-table shuffles + 9 join builds for 2 shuffles — shuffles
-    # dominate at scale (guide §2.2).
+    # groups are "all N-gram types sharing a final word" (pass A) /
+    # "sharing wN-1" (pass B), so a stop-word group buffers many type
+    # rows where a groupBy would combine map-side. The trade is 2
+    # shuffles for up to 2N-2 — shuffles dominate at scale (guide §2.2).
     full = (Wnd.unboundedPreceding, Wnd.unboundedFollowing)
 
-    def _build_pass_a():
-        wA4 = Wnd.partitionBy("w5", "w4", "w3", "w2").orderBy("w1")
-        wA3 = Wnd.partitionBy("w5", "w4", "w3").orderBy("w2", "w1")
-        wA2 = Wnd.partitionBy("w5", "w4").orderBy("w3", "w2", "w1")
-        wA1 = Wnd.partitionBy("w5").orderBy("w4", "w3", "w2", "w1")
-        return [
-            ("cc4", F.count(F.lit(1)).over(wA4.rowsBetween(*full))),
-            ("__f4", F.row_number().over(wA4) == 1),
-            (
-                "cc3",
-                F.count(F.when(F.col("__f4"), 1)).over(wA3.rowsBetween(*full)),
-            ),
-            ("__f3", F.row_number().over(wA3) == 1),
-            (
-                "cc2",
-                F.count(F.when(F.col("__f3"), 1)).over(wA2.rowsBetween(*full)),
-            ),
-            ("__f2", F.row_number().over(wA2) == 1),
-            (
-                "cc1",
-                F.count(F.when(F.col("__f2"), 1)).over(wA1.rowsBetween(*full)),
-            ),
-        ]
+    def _reps(k):
+        """Count of order-k types in a window (rows carrying the flag)."""
+        if flag[k] is None:
+            return F.count(F.lit(1))
+        return F.count(F.when(F.col(flag[k]), 1))
 
-    a = c5.repartition("w5")
-    for _name, _col in static_template("kn5_pass_a", str(N), _build_pass_a):
+    def _spec(keys, rest):
+        # partition by ``keys``, order by ``rest``, both innermost word
+        # first — every spec of a pass shares the one sort [wN..w1]
+        return Wnd.partitionBy(*keys[::-1]).orderBy(*rest[::-1])
+
+    def _build_pass_a():
+        cols = []
+        for k in range(N - 1, 0, -1):
+            suffix = _spec(W[N - k:], W[:N - k])  # the last k words
+            cols.append(
+                (cnt_col[k], _reps(k + 1).over(suffix.rowsBetween(*full)))
+            )
+            if k >= 2:
+                cols.append((flag[k], F.row_number().over(suffix) == 1))
+        return cols
+
+    a = counts.repartition(W[-1])
+    for _name, _col in static_template("kn_pass_a", str(N), _build_pass_a):
         a = a.withColumn(_name, _col)
     # pinned ONCE: the flagged frame feeds the per-type lp cascade AND
     # the 1-row global aggregate (ntot / count-of-counts); without the
     # pin the 1-row branch re-runs the exchange + sort + window chain.
     a = a.localCheckpoint(eager=False)
 
-    _ord_flag = {N: None, 4: "__f4", 3: "__f3", 2: "__f2"}
-
     def _build_pass_b():
-        wB5 = Wnd.partitionBy("w4", "w3", "w2", "w1")
-        wB4 = Wnd.partitionBy("w4", "w3", "w2").orderBy("w1")
-        wB3 = Wnd.partitionBy("w4", "w3").orderBy("w2", "w1")
-        wB2 = Wnd.partitionBy("w4").orderBy("w3", "w2", "w1")
-        spec = {N: wB5, 4: wB4, 3: wB3, 2: wB2}
         cols = []
         for k in range(2, N + 1):
-            win = spec[k] if k == N else spec[k].rowsBetween(*full)
-            fk, ck = _ord_flag[k], F.col(cnt_col[k])
+            # the order-k context: the k-1 words before the final word
+            if k == N:
+                win = Wnd.partitionBy(*W[N - 2::-1])
+            else:
+                win = _spec(W[N - k:N - 1], W[:N - k]).rowsBetween(*full)
+            fk, ck = flag[k], F.col(cnt_col[k])
             rep = F.lit(True) if fk is None else F.col(fk)
             cols.append((f"tot{k}", F.sum(F.when(rep, ck)).over(win)))
             if modified:
-                for j, cond in (
-                    (1, ck == 1),
-                    (2, ck == 2),
-                    (3, ck >= 3),
-                ):
+                for j, cond in ((1, ck == 1), (2, ck == 2), (3, ck >= 3)):
                     gate = cond if fk is None else (F.col(fk) & cond)
                     cols.append(
                         (f"e{j}_{k}", F.count(F.when(gate, 1)).over(win))
@@ -901,71 +592,77 @@ def kn5_scores_from_counts(
                 cols.append((f"n1_{k}", F.count(F.when(rep, 1)).over(win)))
         return cols
 
-    b = a.repartition("w4")
+    b = a.repartition(W[-2])
     for _name, _col in static_template(
-        "kn5_pass_b", f"{N}|{modified}", _build_pass_b
+        "kn_pass_b", f"{N}|{modified}", _build_pass_b
     ):
         b = b.withColumn(_name, _col)
 
-    ntot = a.agg(F.count(F.when(F.col("__f2"), 1)).alias("ntot"))
-
     if modified:
-        # Chen-Goodman discounts for ALL orders from ONE 1-row frame
-        # (r13), now aggregated straight off the flagged window frame
-        # (r14): an order-k type is exactly a row where the order-k
-        # representative flag is set, carrying its count in cc_k — so
-        # the count-of-counts scan over the 4-table union is ONE global
-        # agg over `a` (no union, no extra scan of anything). ntot
-        # (= order-2 type count = __f2 flags) rides along, so the
-        # modified lp join crosses ONE bounded broadcast.
-        # A count-of-counts class hitting zero makes the estimates
-        # undefined at that order; KenLM's --discount_fallback
-        # substitutes fixed discounts (0.5 / 1.0 / 1.5) — an order can
-        # go degenerate at ANY corpus size (order-2 continuation counts
-        # saturate past count 4 on large corpora: observed live at
-        # sf0.1), so raising would make the operator partial. Per-order
-        # arithmetic is EXACTLY the old frames' expression shape — same
-        # IEEE doubles.
+        # Chen-Goodman discounts for ALL orders from ONE 1-row frame,
+        # aggregated straight off the flagged window frame: an order-k
+        # type is exactly a row where the order-k flag is set, carrying
+        # its count in cc_k. ntot (= order-2 types) rides along, so the
+        # lp table crosses ONE bounded broadcast.
         def _build_cls_aggs():
-            aggs = [F.count(F.when(F.col("__f2"), 1)).alias("ntot")]
+            aggs = [_reps(2).alias("ntot")]
             for k in range(2, N + 1):
-                fk, ck = _ord_flag[k], F.col(cnt_col[k])
+                fk, ck = flag[k], F.col(cnt_col[k])
                 for j in (1, 2, 3, 4):
                     cond = (ck == j) if fk is None else (F.col(fk) & (ck == j))
                     aggs.append(F.count(F.when(cond, 1)).alias(f"n{j}_o{k}"))
             return aggs
 
         def _build_dd_cols():
-            cols = [F.col("ntot")]
+            # estimates first, NULL unless classes 1..3 are all populated
+            # (so no division by an empty class is ever evaluated), then
+            # KenLM's fallback for an order whose estimate is NULL or has
+            # some D_j outside [0, j]. Two projections: the range test
+            # reads the guarded estimates, so subexpression elimination
+            # cannot hoist a division out of its CASE guard.
+            est, dd = [F.col("ntot")], [F.col("ntot")]
+            fallback = {1: 0.5, 2: 1.0, 3: 1.5}
             for k in range(2, N + 1):
                 n1, n2, n3, n4 = (F.col(f"n{j}_o{k}") for j in (1, 2, 3, 4))
-                degenerate = (n1 == 0) | (n2 == 0) | (n3 == 0)
                 y = n1.cast("double") / (n1 + F.lit(2) * n2)
-                cols += [
-                    F.when(degenerate, F.lit(0.5))
-                    .otherwise(F.lit(1.0) - F.lit(2.0) * y * n2 / n1)
-                    .alias(f"dd1_o{k}"),
-                    F.when(degenerate, F.lit(1.0))
-                    .otherwise(F.lit(2.0) - F.lit(3.0) * y * n3 / n2)
-                    .alias(f"dd2_o{k}"),
-                    F.when(degenerate, F.lit(1.5))
-                    .otherwise(F.lit(3.0) - F.lit(4.0) * y * n4 / n3)
-                    .alias(f"dd3_o{k}"),
+                ok = (n1 > 0) & (n2 > 0) & (n3 > 0)
+                est += [
+                    F.when(ok, F.lit(1.0) - F.lit(2.0) * y * n2 / n1)
+                    .alias(f"__d1_o{k}"),
+                    F.when(ok, F.lit(2.0) - F.lit(3.0) * y * n3 / n2)
+                    .alias(f"__d2_o{k}"),
+                    F.when(ok, F.lit(3.0) - F.lit(4.0) * y * n4 / n3)
+                    .alias(f"__d3_o{k}"),
                 ]
-            return cols
+                in_range = (
+                    F.col(f"__d1_o{k}").between(0.0, 1.0)
+                    & F.col(f"__d2_o{k}").between(0.0, 2.0)
+                    & F.col(f"__d3_o{k}").between(0.0, 3.0)
+                )
+                dd += [
+                    F.when(in_range, F.col(f"__d{j}_o{k}"))
+                    .otherwise(F.lit(fb))
+                    .alias(f"dd{j}_o{k}")
+                    for j, fb in fallback.items()
+                ]
+            return est, dd
 
-        # the class-count aggs and discount columns are static templates
-        # over fixed names — memoized so repeated builds skip ~400 Column
-        # ops of py4j chatter (exprtools; r13). Template name versioned
-        # (_w) because the expression shape changed in r14.
-        cls = a.agg(*static_template("kn5_cls_aggs_w", str(N), _build_cls_aggs))
-        discs = cls.select(
-            *static_template("kn5_dd_cols", str(N), _build_dd_cols)
+        # static templates over fixed names — memoized so repeated builds
+        # skip hundreds of Column ops of py4j chatter (exprtools)
+        est, dd = static_template("kn_dd_cols", str(N), _build_dd_cols)
+        discs = (
+            a.agg(*static_template("kn_cls_aggs", str(N), _build_cls_aggs))
+            .select(*est)
+            .select(*dd)
         )
+        lp_tab = b.crossJoin(F.broadcast(discs))
+    else:
+        ntot = a.agg(_reps(2).alias("ntot"))
+        lp_tab = b.crossJoin(F.broadcast(ntot))
 
     def _build_p():
-        # probability expression, built bottom-up with the kn3
-        # parenthesization
+        # probability expression, built bottom-up with one fixed
+        # parenthesization (mirrored by the oracle)
         p = F.col("cc1").cast("double") / F.col("ntot")
         d = F.lit(float(discount))
         for k in range(2, N + 1):
@@ -990,19 +687,12 @@ def kn5_scores_from_counts(
                 )
         return p
 
-    p = static_template("kn5_p", f"{N}|{modified}|{discount!r}", _build_p)
+    p = static_template("kn_p", f"{N}|{modified}|{discount!r}", _build_p)
 
-    # lp per 5-gram TYPE straight off the windowed stat columns (the
-    # former NINE stats joins are gone — every stat already sits on the
-    # row), then ONE occurrence-level join: at scale the occurrence
-    # stream crosses a join exactly once
-    if modified:
-        # ntot rides inside the consolidated discount frame
-        lp_tab = b.crossJoin(F.broadcast(discs))
-        out_col, dp = "kn5_mkn_score", 6
-    else:
-        lp_tab = b.crossJoin(F.broadcast(ntot))
-        out_col, dp = "kn5_score", 8
+    # lp per N-gram TYPE straight off the windowed stat columns, then ONE
+    # occurrence-level join: at scale the occurrence stream crosses a
+    # join exactly once
+    dp = 6 if modified else 8
     lp_tab = lp_tab.select(
         *W, F.round(F.log(p), dp).cast("decimal(28,10)").alias("lp")
     )
@@ -1010,8 +700,7 @@ def kn5_scores_from_counts(
     # ENGINE-STABLE MEAN: each lp is an exact multiple of 10^-dp, so the
     # per-doc sum is an exact integer at that scale; the 6dp mean is then
     # pure integer round-half-away (the survival_km recipe) instead of
-    # round(double, 6) — whose boundary behavior differs between engines
-    # and flipped one sf0.01 doc for the modified variant.
+    # round(double, 6) — whose boundary behavior differs between engines.
     m = 10 ** (dp - 6)  # lp scale units per output micro-unit
     per = scored.groupBy(id_col).agg(
         (F.sum("lp") * F.lit(10 ** dp)).cast("long").alias("su"),
@@ -1020,5 +709,6 @@ def kn5_scores_from_counts(
     q = F.expr(f"(2 * abs(su) + {m} * cnt) DIV (2 * {m} * cnt)")
     sign = F.when(F.col("su") < 0, F.lit(-1)).otherwise(F.lit(1))
     return per.select(
-        id_col, ((sign * q) / F.lit(1000000.0)).alias(out_col)
+        id_col,
+        ((sign * q) / F.lit(1000000.0)).alias(kn_score_col(N, modified)),
     )

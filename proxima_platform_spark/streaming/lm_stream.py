@@ -54,25 +54,14 @@ class ContinuousKneserNey(GenerationStore):
             .agg(F.sum("c5").alias("c5"))
         )
 
-    @staticmethod
-    def _grams(batch: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        from proxima_platform_spark.functions.dedup import (
-            gram_structs_from_tokens,
-            tokens,
-        )
+    def _grams(self, docs: DataFrame) -> DataFrame:
+        from proxima_platform_spark.functions.ranking import kn_grams
 
-        W = [f"w{i}" for i in range(1, 6)]
-        toks = batch.select(
-            F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__t")
-        ).where(F.size("__t") >= 5)
-        return toks.select(
-            "id",
-            F.explode(gram_structs_from_tokens(F.col("__t"), W)).alias("g"),
-        ).select("id", *[f"g.{w}" for w in W])
+        return kn_grams(docs, 5, text=self.text_col, id_col=self.id_col)
 
     def _delta(self, batch, batch_id, m) -> DataFrame:
         return (
-            self._grams(batch, self.id_col, self.text_col)
+            self._grams(batch)
             .groupBy("w1", "w2", "w3", "w4", "w5")
             .agg(F.count(F.lit(1)).alias("c5"))
         )
@@ -93,13 +82,13 @@ class ContinuousKneserNey(GenerationStore):
         every ingested batch AS the corpus (self-scoring contract: only
         5-grams observed in the maintained corpus are scored)."""
         from proxima_platform_spark.functions.ranking import (
-            kn5_scores_from_counts,
+            kn_scores_from_counts,
         )
 
         c5 = self.counts()
         if c5 is None:
             return None
-        grams = self._grams(docs, self.id_col, self.text_col)
-        return kn5_scores_from_counts(
-            c5, grams, id_col="id", discount=discount, modified=modified,
-        ).withColumnRenamed("id", self.id_col)
+        return kn_scores_from_counts(
+            c5, self._grams(docs), id_col=self.id_col, discount=discount,
+            modified=modified,
+        )

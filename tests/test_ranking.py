@@ -574,78 +574,10 @@ class TestKneserNey3:
 
 
 class TestKneserNey3Modified:
-    """Modified KN (Chen-Goodman three-discount): pure-python model
-    parity on a corpus exercising every count class at both orders,
-    and the degenerate-corpus guard."""
-
-    @staticmethod
-    def _model(doc_rows):
-        import math
-        from collections import Counter
-
-        per_doc, tri = {}, []
-        for did, txt in doc_rows:
-            t = txt.split()
-            gs = (
-                [(t[i], t[i + 1], t[i + 2]) for i in range(len(t) - 2)]
-                if len(t) >= 3
-                else []
-            )
-            per_doc[did] = gs
-            tri += gs
-        c3 = Counter(tri)
-        c3c, e3 = Counter(), {}
-        for (u, v, w), c in c3.items():
-            c3c[(u, v)] += c
-            d = e3.setdefault((u, v), [0, 0, 0])
-            d[0 if c == 1 else 1 if c == 2 else 2] += 1
-        cc2 = Counter((v, w) for (u, v, w) in c3)
-        cc2c, e2 = Counter(), {}
-        for (v, w), c in cc2.items():
-            cc2c[v] += c
-            d = e2.setdefault(v, [0, 0, 0])
-            d[0 if c == 1 else 1 if c == 2 else 2] += 1
-        nlw = Counter(w for (v, w) in cc2)
-        ntot = len(cc2)
-
-        def discounts(counter):
-            n = [
-                sum(1 for c in counter.values() if c == k)
-                for k in (1, 2, 3, 4)
-            ]
-            assert n[0] > 0 and n[1] > 0 and n[2] > 0, (
-                "fixture must exercise count classes 1..3: " + str(n)
-            )
-            y = n[0] / (n[0] + 2 * n[1])
-            return (
-                1.0 - 2.0 * y * n[1] / n[0],
-                2.0 - 3.0 * y * n[2] / n[1],
-                3.0 - 4.0 * y * n[3] / n[2],
-            )
-
-        d3, d2 = discounts(c3), discounts(cc2)
-
-        def dsel(c, ds):
-            return ds[0] if c == 1 else ds[1] if c == 2 else ds[2]
-
-        def p2(v, w):
-            c, cc, e = cc2[(v, w)], cc2c[v], e2[v]
-            lam = (d2[0] * e[0] + d2[1] * e[1] + d2[2] * e[2]) / cc
-            return max(c - dsel(c, d2), 0.0) / cc + lam * (nlw[w] / ntot)
-
-        def p3(u, v, w):
-            c, cc, e = c3[(u, v, w)], c3c[(u, v)], e3[(u, v)]
-            lam = (d3[0] * e[0] + d3[1] * e[1] + d3[2] * e[2]) / cc
-            return max(c - dsel(c, d3), 0.0) / cc + lam * p2(v, w)
-
-        return {
-            # round 6 = the operator's quantization (margin-audit-driven)
-            did: round(
-                sum(round(math.log(p3(*g)), 6) for g in gs) / len(gs), 6
-            )
-            for did, gs in per_doc.items()
-            if gs
-        }
+    """Modified KN (Chen-Goodman three-discount) at order 3: python-model
+    parity on a corpus exercising every count class at both orders, and
+    KenLM's discount fallback for empty classes and out-of-range
+    estimates."""
 
     # repetition plants trigrams at counts 1..4 and several contexts
     # share (v,w) continuations so both orders have classes 1..3
@@ -668,7 +600,7 @@ class TestKneserNey3Modified:
         df = spark.createDataFrame(
             self.CORPUS, "doc_id long, text string"
         )
-        want = self._model(self.CORPUS)
+        want = _kn_model(self.CORPUS, 3, modified=True)
         got = {
             r.doc_id: r.kn3_mkn_score
             for r in kneser_ney3_scores(df, modified=True).collect()
@@ -698,6 +630,35 @@ class TestKneserNey3Modified:
         lp = Decimal(repr(round(log(p3), 6)))
         want = round(float(lp * 3) / 3, 6)
         assert abs(row["kn3_mkn_score"] - want) < 1e-9
+
+    def test_negative_discount_takes_fallback(self, spark):
+        """Trigram count-of-counts n1=1, n2=1, n3=5 estimate D2 = 2 −
+        3·(1/3)·5/1 = −3, outside KenLM's [0, 2]: the order must take the
+        fallback discounts. With the raw estimate, λ(a,b) is negative and
+        P(c|a,b) < 0, so ln gives NULL and doc 1 silently loses its only
+        trigram."""
+        from proxima_platform_spark.functions.ranking import (
+            kneser_ney3_scores,
+        )
+
+        rows = [(1, "a b c"), (2, "a b d"), (3, "a b d")] + [
+            (10 * i + r, f"p{i} q{i} r{i}")
+            for i in range(1, 6)
+            for r in range(3)
+        ]
+        _, tables = _kn_tables(rows, 3)
+        assert sorted(tables[3].values()) == [1, 2] + [3] * 5
+        assert _kn_discounts(tables[3])[1]  # out of range -> fallback
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {
+            r.doc_id: r.kn3_mkn_score
+            for r in kneser_ney3_scores(df, modified=True).collect()
+        }
+        want = _kn_model(rows, 3, modified=True)
+        assert set(got) == set(want)
+        assert all(v is not None for v in got.values()), got
+        for did in want:
+            assert abs(got[did] - want[did]) < 1e-9, (did, got[did], want[did])
 
 
 class TestPmiBigrams:
@@ -741,29 +702,54 @@ class TestPmiBigrams:
             pmi_bigrams(docs, top_k=0)
 
 
-def _kn5_model(rows, discount=0.75, modified=False):
-    """Pure-python replay of kneser_ney5_scores: full 5..1 recursion,
-    quantized lps, exact-integer round-half-away mean."""
-    import math
-    from collections import Counter, defaultdict
-    from decimal import Decimal
+def _kn_discounts(counts):
+    """Chen-Goodman D1/D2/D3+ of one order's count table, and whether
+    KenLM's --discount_fallback (0.5, 1.0, 1.5) replaced them: an empty
+    class n1/n2/n3, or some D_j outside [0, j]."""
+    from collections import Counter
 
-    grams_per_doc = {}
-    c5 = Counter()
+    cls = Counter(counts.values())
+    n1, n2, n3, n4 = (cls.get(j, 0) for j in (1, 2, 3, 4))
+    if n1 and n2 and n3:
+        y = n1 / (n1 + 2 * n2)
+        dd = (
+            1.0 - 2.0 * y * n2 / n1,
+            2.0 - 3.0 * y * n3 / n2,
+            3.0 - 4.0 * y * n4 / n3,
+        )
+        if all(0.0 <= d <= j for j, d in enumerate(dd, 1)):
+            return dd, False
+    return (0.5, 1.0, 1.5), True
+
+
+def _kn_tables(rows, order):
+    """Per-doc order-N grams and the count tables of orders N..1: raw
+    counts at N, continuation counts (distinct left extensions) below."""
+    from collections import Counter
+
+    per_doc, top = {}, Counter()
     for did, txt in rows:
         t = txt.split()
-        gs = [tuple(t[i: i + 5]) for i in range(len(t) - 4)] if len(t) >= 5 else []
-        grams_per_doc[did] = gs
-        c5.update(gs)
-    tables = {5: c5}
-    for k in (4, 3, 2, 1):
-        tk = Counter()
-        for g in tables[k + 1]:
-            tk[g[1:]] += 1
-        tables[k] = tk
+        gs = [tuple(t[i: i + order]) for i in range(len(t) - order + 1)]
+        per_doc[did] = gs
+        top.update(gs)
+    tables = {order: top}
+    for k in range(order - 1, 0, -1):
+        tables[k] = Counter(g[1:] for g in tables[k + 1])
+    return per_doc, tables
+
+
+def _kn_model(rows, order, discount=0.75, modified=False):
+    """Pure-python replay of kn_scores_from_counts at any order: full
+    N..1 recursion, quantized lps, exact-integer round-half-away mean."""
+    import math
+    from collections import defaultdict
+    from decimal import Decimal
+
+    per_doc, tables = _kn_tables(rows, order)
     ntot = len(tables[2])
-    tot, n1, ecls = {}, {}, {}
-    for k in range(2, 6):
+    tot, n1, ecls, dd = {}, {}, {}, {}
+    for k in range(2, order + 1):
         tot[k], n1[k] = defaultdict(int), defaultdict(int)
         ecls[k] = defaultdict(lambda: [0, 0, 0])
         for g, c in tables[k].items():
@@ -771,30 +757,17 @@ def _kn5_model(rows, discount=0.75, modified=False):
             tot[k][ctx] += c
             n1[k][ctx] += 1
             ecls[k][ctx][min(c, 3) - 1] += 1
-    dd = {}
-    if modified:
-        for k in range(2, 6):
-            cls = Counter(tables[k].values())
-            nn = [cls.get(i, 0) for i in (1, 2, 3, 4)]
-            if nn[0] == 0 or nn[1] == 0 or nn[2] == 0:
-                dd[k] = (0.5, 1.0, 1.5)  # KenLM --discount_fallback
-            else:
-                y = nn[0] / (nn[0] + 2 * nn[1])
-                dd[k] = (
-                    1.0 - 2.0 * y * nn[1] / nn[0],
-                    2.0 - 3.0 * y * nn[2] / nn[1],
-                    3.0 - 4.0 * y * nn[3] / nn[2],
-                )
+        dd[k] = _kn_discounts(tables[k])[0]
     dp = 6 if modified else 8
     out = {}
-    for did, gs in grams_per_doc.items():
+    for did, gs in per_doc.items():
         if not gs:
             continue
         su = Decimal(0)
         for g in gs:
-            p = tables[1][g[4:]] / ntot
-            for k in range(2, 6):
-                sub = g[5 - k:]
+            p = tables[1][g[-1:]] / ntot
+            for k in range(2, order + 1):
+                sub = g[order - k:]
                 ctx = sub[:-1]
                 c = tables[k][sub]
                 t_ = tot[k][ctx]
@@ -818,70 +791,40 @@ def _kn5_model(rows, discount=0.75, modified=False):
     return out
 
 
+def _kn_corpus():
+    # deterministic pseudo-random base (vocab 40: rich order-2/3 count
+    # classes) + crafted repeats that populate the order-4/5 classes the
+    # modified estimator divides by (n1/n2/n3 per order)
+    rows, x = [], 12345
+    for did in range(50):
+        toks = []
+        for _ in range(80):
+            x ^= (x << 13) & 0xFFFFFFFF
+            x ^= x >> 17
+            x ^= (x << 5) & 0xFFFFFFFF
+            toks.append(f"w{x % 40}")
+        rows.append((did, " ".join(toks)))
+    rows += [
+        (100, "qa qb qc qd qe"),  # 5-gram count 2  -> o5 n2
+        (101, "qa qb qc qd qe"),
+        (102, "ra rb rc rd re"),  # 5-gram count 3  -> o5 n3
+        (103, "ra rb rc rd re"),
+        (104, "ra rb rc rd re"),
+        (105, "xa sa sb sc sd"),  # 3 lefts of (sa..sd) -> o4 n3
+        (106, "xb sa sb sc sd"),
+        (107, "xc sa sb sc sd"),
+        (108, "ya ta tb tc td"),  # 2 lefts -> o4 n2
+        (109, "yb ta tb tc td"),
+        (110, "za ma ua ub uc"),  # 3 distinct w2 of (ua,ub,uc) -> o3 n3
+        (111, "za mb ua ub uc"),
+        (112, "za mc ua ub uc"),
+        (999, "a"),  # shorter than every order: drops out
+    ]
+    return rows
+
+
 class TestKneserNey5:
-    """Order-5 interpolated KN: pure-python full-recursion parity (both
-    variants), short-doc dropout, degenerate guard."""
-
-    @staticmethod
-    def _corpus():
-        # deterministic pseudo-random base (vocab 40: rich order-2/3 count
-        # classes) + crafted repeats that populate the order-4/5 classes the
-        # modified estimator divides by (n1/n2/n3 per order)
-        rows, x = [], 12345
-        for did in range(50):
-            toks = []
-            for _ in range(80):
-                x ^= (x << 13) & 0xFFFFFFFF
-                x ^= x >> 17
-                x ^= (x << 5) & 0xFFFFFFFF
-                toks.append(f"w{x % 40}")
-            rows.append((did, " ".join(toks)))
-        rows += [
-            (100, "qa qb qc qd qe"),  # 5-gram count 2  -> o5 n2
-            (101, "qa qb qc qd qe"),
-            (102, "ra rb rc rd re"),  # 5-gram count 3  -> o5 n3
-            (103, "ra rb rc rd re"),
-            (104, "ra rb rc rd re"),
-            (105, "xa sa sb sc sd"),  # 3 lefts of (sa..sd) -> o4 n3
-            (106, "xb sa sb sc sd"),
-            (107, "xc sa sb sc sd"),
-            (108, "ya ta tb tc td"),  # 2 lefts -> o4 n2
-            (109, "yb ta tb tc td"),
-            (110, "za ma ua ub uc"),  # 3 distinct w2 of (ua,ub,uc) -> o3 n3
-            (111, "za mb ua ub uc"),
-            (112, "za mc ua ub uc"),
-        ]
-        rows.append((999, "a b c"))  # < 5 tokens: drops out
-        return rows
-
-    def test_matches_python_model(self, spark):
-        from proxima_platform_spark.functions.ranking import kneser_ney5_scores
-
-        rows = self._corpus()
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = {
-            r["doc_id"]: r["kn5_score"]
-            for r in kneser_ney5_scores(df).collect()
-        }
-        want = _kn5_model(rows)
-        assert set(got) == set(want)
-        assert 999 not in got
-        for did in want:
-            assert abs(got[did] - want[did]) < 1e-9, did
-
-    def test_modified_matches_python_model(self, spark):
-        from proxima_platform_spark.functions.ranking import kneser_ney5_scores
-
-        rows = self._corpus()
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = {
-            r["doc_id"]: r["kn5_mkn_score"]
-            for r in kneser_ney5_scores(df, modified=True).collect()
-        }
-        want = _kn5_model(rows, modified=True)
-        assert set(got) == set(want)
-        for did in want:
-            assert abs(got[did] - want[did]) < 1e-9, did
+    """Order-5 modified KN on a corpus where every order is degenerate."""
 
     def test_modified_degenerate_fallback(self, spark):
         # every order's count-of-counts is degenerate on this corpus ->
@@ -895,7 +838,138 @@ class TestKneserNey5:
             r["doc_id"]: r["kn5_mkn_score"]
             for r in kneser_ney5_scores(df, modified=True).collect()
         }
-        want = _kn5_model(rows, modified=True)
+        want = _kn_model(rows, 5, modified=True)
         assert got.keys() == want.keys()
         for did in want:
             assert abs(got[did] - want[did]) < 1e-9, did
+
+
+def _normalize_exact(pdf):
+    """Rows as exact text (tools/exact_check.py, the driver-mimic)."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools", "exact_check.py",
+    )
+    spec = importlib.util.spec_from_file_location("exact_check", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.normalize_exact(pdf)
+
+
+class TestKneserNeyEngine:
+    """The one order-generic engine (kn_scores_from_counts): python-model
+    parity per order and variant, and exact-text parity of the declared
+    KN queries with their DuckDB oracles."""
+
+    @pytest.mark.parametrize("modified", [False, True], ids=["plain", "mkn"])
+    @pytest.mark.parametrize("order", [2, 3, 5])
+    def test_matches_python_model(self, spark, order, modified):
+        from proxima_platform_spark.functions import ranking
+
+        rows = _kn_corpus()
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        if order == 2 and modified:  # no public order-2 modified wrapper
+            grams = ranking.kn_grams(df, 2)
+            counts = grams.groupBy("w1", "w2").agg(F.count("*").alias("c2"))
+            out = ranking.kn_scores_from_counts(counts, grams, modified=True)
+        else:
+            wrapper = {
+                2: ranking.kneser_ney_scores,
+                3: ranking.kneser_ney3_scores,
+                5: ranking.kneser_ney5_scores,
+            }[order]
+            kw = {"modified": True} if modified else {}
+            out = wrapper(df, **kw)
+        col = ranking.kn_score_col(order, modified)
+        got = {r["doc_id"]: r[col] for r in out.collect()}
+        want = _kn_model(rows, order, modified=modified)
+        assert set(got) == set(want) and 999 not in got
+        for did in want:
+            assert abs(got[did] - want[did]) < 1e-9, (did, got[did], want[did])
+        if modified:  # non-vacuous: the estimated discounts are in use
+            _, tables = _kn_tables(rows, order)
+            assert not _kn_discounts(tables[2])[1]
+
+    def test_counts_table_must_name_its_order(self, spark):
+        from proxima_platform_spark.functions.ranking import (
+            kn_scores_from_counts,
+        )
+
+        grams = spark.createDataFrame(
+            [(1, "a")], "doc_id long, w1 string"
+        )
+        counts = spark.createDataFrame([("a", 1)], "w1 string, c1 long")
+        with pytest.raises(ValueError, match="cN column"):
+            kn_scores_from_counts(counts, grams)
+
+    ORACLE_QUERIES = [
+        "kneser_ney_score",
+        "kneser_ney3_score",
+        "kneser_ney3_mkn_score",
+        "kneser_ney5_score",
+        "kneser_ney5_mkn_score",
+        "perplexity_band_prep",
+    ]
+
+    @pytest.mark.parametrize("name", ORACLE_QUERIES)
+    def test_spark_matches_duckdb_oracle_sf001(self, spark, sf_dir, name):
+        """The declared query and its oracle_sql() agree as exact text
+        (no rounding tolerance) on the sf0.01 fixture."""
+        import os
+
+        import duckdb
+
+        import __spark_entry__ as entry
+
+        sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+        if not os.path.exists(os.path.join(sf, "documents.parquet")):
+            pytest.skip(f"no sf0.01 fixture next to {sf_dir}")
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{sf}/documents.parquet')"
+        )
+        got = entry.queries()[name](spark, sf).toPandas()
+        want = con.execute(entry.oracle_sql()[name]).fetchdf()
+        assert sorted(got.columns) == sorted(want.columns)
+        assert len(got) > 0
+        assert _normalize_exact(got) == _normalize_exact(want)
+
+    @pytest.mark.parametrize("order", [2, 3, 5])
+    def test_generator_matches_engine_out_of_range(self, spark, tmp_path, order):
+        """Modified KN on a corpus whose top-order estimate has D2 < 0 at
+        every order (count-of-counts 2/2/22 at order 2, 3/3/15 at order
+        3, 1/1/5 at order 5): the engine, the oracle generator and the
+        python model take the same fallback, so ln never sees a
+        non-positive probability."""
+        import duckdb
+
+        import __spark_entry__ as entry
+        from proxima_platform_spark.functions import ranking
+
+        rows = [(1, "a b c e f"), (2, "a b d e f"), (3, "a b d e f")] + [
+            (10 * i + r, f"p{i} q{i} r{i} s{i} t{i}")
+            for i in range(1, 6)
+            for r in range(3)
+        ]
+        path = str(tmp_path / "documents.parquet")
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        df.toPandas().to_parquet(path)
+        grams = ranking.kn_grams(df, order)
+        w = [f"w{i}" for i in range(1, order + 1)]
+        counts = grams.groupBy(*w).agg(F.count("*").alias(f"c{order}"))
+        got = ranking.kn_scores_from_counts(
+            counts, grams, modified=True
+        ).toPandas()
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+        want = con.execute(entry._sql_kneser_ney(order, True)).fetchdf()
+        assert got.notna().all().all()
+        assert _normalize_exact(got) == _normalize_exact(want)
+        model = _kn_model(rows, order, modified=True)
+        assert set(got["doc_id"]) == set(model)
+        for did, score in zip(got["doc_id"], got.iloc[:, 1]):
+            assert abs(score - model[did]) < 1e-9, (did, score, model[did])

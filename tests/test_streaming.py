@@ -2618,7 +2618,7 @@ class TestMaintainedCcnetGate:
         # self-scoring contract: score incoming against the corpus by
         # counting corpus 5-grams, scoring incoming's observed ones
         from proxima_platform_spark.functions.ranking import (
-            kn5_scores_from_counts,
+            kn_scores_from_counts,
         )
         from proxima_platform_spark.functions.dedup import (
             shingles_from_tokens,
@@ -2645,7 +2645,7 @@ class TestMaintainedCcnetGate:
             )
 
         c5 = grams(corpus).groupBy(*W).agg(F2.count(F2.lit(1)).alias("c5"))
-        b_kn = kn5_scores_from_counts(c5, grams(incoming), id_col="id")
+        b_kn = kn_scores_from_counts(c5, grams(incoming), id_col="id")
         batch = sorted(
             tuple(r) for r in b_pred.join(b_kn, "id").collect()
         )
