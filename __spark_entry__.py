@@ -3230,45 +3230,9 @@ def q_dedup_minhash_bbit(spark, sf):
 def _sql_dedup_minhash_bbit() -> str:
     """Oracle: the minhash CTE chain with each signature value truncated
     to its low 4 bits and two 4-row md5 band keys."""
-    from proxima_platform_spark.functions.dedup import (
-        MINHASH_A, MINHASH_B, MINHASH_PRIME,
-    )
-
-    base = "(('0x' || substr(md5(s), 1, 15))::BIGINT % 1073741824)"
-    sig_items = ",\n               ".join(
-        f"list_min([({MINHASH_A[i]} * {base} + {MINHASH_B[i]}) % {MINHASH_PRIME}"
-        f" for s in shingles]) % 16"
-        for i in range(8)
-    )
-    band_items = ",\n               ".join(
-        "md5('{b}|' || {vals})".format(
-            b=bd,
-            vals=" || '|' || ".join(
-                f"sg[{bd * 4 + r + 1}]::VARCHAR" for r in range(4)
-            ),
-        )
-        for bd in range(2)
-    )
-    return rf"""
-WITH toks AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-    FROM documents
-), sh AS (
-    SELECT doc_id,
-           CASE WHEN len(t) >= 3
-                THEN [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]
-                ELSE [] END AS shingles
-    FROM toks
-), sig AS (
-    SELECT doc_id,
-           [{sig_items}] AS sg
-    FROM sh WHERE len(shingles) > 0
-), banded AS (
-    SELECT doc_id, unnest([{band_items}]) AS band FROM sig
-)
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
+    return f"""
+WITH {_sql_minhash_ctes("documents", bits=4, bands=2)}
+{_sql_banded_pairs()}
 """
 
 
@@ -3340,6 +3304,10 @@ def _sql_dedup_minhash_weighted() -> str:
         f"{j}'), 1, 15))::BIGINT % 1073741824) + 1) / 1073741826.0 AS u{j}"
         for j in (1, 2, 3, 4, 5)
     )
+    wide = ",\n           ".join(
+        f"min(CASE WHEN seed = {i} THEN w END) AS t{i}" for i in range(8)
+    )
+    bands = _sql_band_keys([f"md5(t{i})" for i in range(8)], 2, sep=",\n        ")
     return r"""
 WITH tf AS (
     SELECT id, w, count(*) AS tf FROM (
@@ -3368,26 +3336,16 @@ WITH tf AS (
     QUALIFY row_number() OVER (PARTITION BY id, seed ORDER BY la, w) = 1
 ), wide AS (
     SELECT id,
-           min(CASE WHEN seed = 0 THEN w END) AS t0,
-           min(CASE WHEN seed = 1 THEN w END) AS t1,
-           min(CASE WHEN seed = 2 THEN w END) AS t2,
-           min(CASE WHEN seed = 3 THEN w END) AS t3,
-           min(CASE WHEN seed = 4 THEN w END) AS t4,
-           min(CASE WHEN seed = 5 THEN w END) AS t5,
-           min(CASE WHEN seed = 6 THEN w END) AS t6,
-           min(CASE WHEN seed = 7 THEN w END) AS t7
+           """ + wide + r"""
     FROM samp GROUP BY id
 ), banded AS (
     -- tokens md5-hashed before '|'-joining (a raw token may contain '|')
     SELECT id, unnest([
-        md5('0|' || md5(t0) || '|' || md5(t1) || '|' || md5(t2) || '|' || md5(t3)),
-        md5('1|' || md5(t4) || '|' || md5(t5) || '|' || md5(t6) || '|' || md5(t7))
+        """ + bands + r"""
     ]) AS band
     FROM wide
 )
-SELECT DISTINCT a.id AS id_a, b.id AS id_b
-FROM banded a JOIN banded b ON a.band = b.band AND a.id < b.id
-"""
+""" + _sql_banded_pairs(id_col="id") + "\n"
 
 
 def q_naive_bayes_langid(spark, sf):
@@ -3506,8 +3464,7 @@ def _sql_bleu_dedup_verify() -> str:
     return f"""
 WITH {_sql_minhash_ctes("documents")},
 pairs AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
+{_sql_banded_pairs("    ")}
 ), g1 AS (
     SELECT doc_id, unnest(t) AS g FROM toks
 ), c1 AS (
@@ -3612,22 +3569,9 @@ def _sql_dedup_minhash_oph() -> str:
         + f") AS s{j}"
         for j in range(k)
     )
-    bands = ",\n               ".join(
-        f"md5('{b}|' || s{2 * b}::VARCHAR || '|' || s{2 * b + 1}::VARCHAR)"
-        for b in range(4)
-    )
+    bands = _sql_band_keys([f"s{j}::VARCHAR" for j in range(k)], 4)
     return rf"""
-WITH toks AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-    FROM documents
-), sh AS (
-    SELECT doc_id,
-           CASE WHEN len(t) >= 3
-                THEN [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]
-                ELSE [] END AS shingles
-    FROM toks
-), hs AS (
+WITH {_sql_shingle_ctes()}, hs AS (
     SELECT doc_id, [{base} for s in shingles] AS hh
     FROM sh WHERE len(shingles) > 0
 ), bm AS (
@@ -3641,8 +3585,7 @@ WITH toks AS (
 ), banded AS (
     SELECT doc_id, unnest([{bands}]) AS band FROM dens
 )
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
+{_sql_banded_pairs()}
 """
 
 
@@ -3663,8 +3606,7 @@ def _sql_dedup_groups() -> str:
     return f"""
 WITH RECURSIVE {_sql_minhash_ctes("documents")},
 pairs AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
+{_sql_banded_pairs("    ")}
 ), edges AS (
     SELECT id_a AS u, id_b AS v FROM pairs
     UNION
@@ -3735,8 +3677,7 @@ def _sql_dedup_cluster_keep_best() -> str:
     return f"""
 WITH RECURSIVE {_sql_minhash_ctes("documents")},
 pairs AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
+{_sql_banded_pairs("    ")}
 ), edges AS (
     SELECT id_a AS u, id_b AS v FROM pairs
     UNION
@@ -4041,8 +3982,7 @@ def _sql_minhash_recall_eval() -> str:
     return rf"""
 WITH {_sql_minhash_ctes("documents")},
 cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
+{_sql_banded_pairs("  ")}
 ),
 shd AS (
   SELECT doc_id, list_distinct(shingles) AS s FROM sh
@@ -6929,8 +6869,7 @@ def _sql_dedup_best_of_cluster() -> str:
     return f"""
 WITH RECURSIVE {_sql_minhash_ctes("documents")},
 pairs AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
+{_sql_banded_pairs("    ")}
 ), edges AS (
     SELECT id_a AS u, id_b AS v FROM pairs
     UNION
@@ -7047,8 +6986,7 @@ WITH p0 AS (
            array_to_string(toks[s+1:s+10], ' ') AS text
     FROM p1
 ), {_sql_minhash_ctes("paras")}
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
+{_sql_banded_pairs()}
 """
 
 
@@ -11625,25 +11563,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def _sql_minhash_ctes(src: str = "documents") -> str:
-    """CTE chain ``toks → sh → sig → banded`` computing MinHash+LSH band
-    keys over ``src``, mirroring functions/dedup.py: base hash h = (60-bit
-    int of md5(shingle)) % 2^30; sig[i] = min((A[i]*h + B[i]) % P); band key
-    b = md5(b || '|' || sig[2b] || '|' || sig[2b+1])."""
-    from proxima_platform_spark.functions.dedup import (
-        MINHASH_A, MINHASH_B, MINHASH_PRIME,
-    )
-
-    base = "(('0x' || substr(md5(s), 1, 15))::BIGINT % 1073741824)"
-    sig_items = ",\n               ".join(
-        f"list_min([({MINHASH_A[i]} * {base} + {MINHASH_B[i]}) % {MINHASH_PRIME}"
-        " for s in shingles])"
-        for i in range(8)
-    )
-    band_items = ",\n               ".join(
-        f"md5('{b}|' || sg[{2*b+1}]::VARCHAR || '|' || sg[{2*b+2}]::VARCHAR)"
-        for b in range(4)
-    )
+def _sql_shingle_ctes(src: str = "documents") -> str:
+    """CTEs ``toks → sh`` over ``src``: the normalized token list ``t``
+    and the word-3-gram list ``shingles`` per doc (functions/dedup.py
+    ``tokens`` / ``shingles_from_tokens``)."""
     return rf"""toks AS (
     SELECT doc_id,
            string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
@@ -11654,7 +11577,53 @@ def _sql_minhash_ctes(src: str = "documents") -> str:
                 THEN [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]
                 ELSE [] END AS shingles
     FROM toks
-), sig AS (
+)"""
+
+
+def _sql_band_keys(items: list[str], bands: int, sep: str = ",\n               ") -> str:
+    """The md5 band-key list of functions/dedup.py ``_band_keys``: key b
+    is ``md5('b|' || v[b·r] || '|' || …)`` over the SQL value ``items``."""
+    rows = len(items) // bands
+    return sep.join(
+        f"md5('{b}|' || " + " || '|' || ".join(items[b * rows:(b + 1) * rows]) + ")"
+        for b in range(bands)
+    )
+
+
+def _sql_banded_from(id_col: str = "doc_id") -> str:
+    return f"FROM banded a JOIN banded b ON a.band = b.band AND a.{id_col} < b.{id_col}"
+
+
+def _sql_banded_pairs(indent: str = "", id_col: str = "doc_id") -> str:
+    """The banded self-join tail: distinct ``(id_a, id_b)``, id_a < id_b,
+    of the docs sharing a band key (functions/dedup.py
+    ``_banded_self_join``)."""
+    return (
+        f"{indent}SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b\n"
+        f"{indent}{_sql_banded_from(id_col)}"
+    )
+
+
+def _sql_minhash_ctes(
+    src: str = "documents", *, bits: int | None = None, bands: int = 4
+) -> str:
+    """CTE chain ``toks → sh → sig → banded`` computing MinHash+LSH band
+    keys over ``src``, mirroring functions/dedup.py: base hash h = (60-bit
+    int of md5(shingle)) % 2^30; sig[i] = min((A[i]*h + B[i]) % P), kept
+    to its low ``bits`` bits for b-bit MinHash; ``bands`` md5 band keys."""
+    from proxima_platform_spark.functions.dedup import (
+        MINHASH_A, MINHASH_B, MINHASH_PRIME,
+    )
+
+    base = "(('0x' || substr(md5(s), 1, 15))::BIGINT % 1073741824)"
+    trunc = "" if bits is None else f" % {2**bits}"
+    sig_items = ",\n               ".join(
+        f"list_min([({MINHASH_A[i]} * {base} + {MINHASH_B[i]}) % {MINHASH_PRIME}"
+        f" for s in shingles]){trunc}"
+        for i in range(8)
+    )
+    band_items = _sql_band_keys([f"sg[{i + 1}]::VARCHAR" for i in range(8)], bands)
+    return rf"""{_sql_shingle_ctes(src)}, sig AS (
     SELECT doc_id,
            [{sig_items}] AS sg
     FROM sh WHERE len(shingles) > 0
@@ -11666,8 +11635,7 @@ def _sql_minhash_ctes(src: str = "documents") -> str:
 def _sql_dedup_minhash() -> str:
     return f"""
 WITH {_sql_minhash_ctes("documents")}
-SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
+{_sql_banded_pairs()}
 """
 
 
@@ -11688,7 +11656,7 @@ gated AS (
 ), {_sql_minhash_ctes("kept")},
 drop_ids AS (
     SELECT DISTINCT b.doc_id
-    FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
+    {_sql_banded_from()}
 ), survivors AS (
     SELECT * FROM kept WHERE doc_id NOT IN (SELECT doc_id FROM drop_ids)
 )

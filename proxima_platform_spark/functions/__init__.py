@@ -25,7 +25,6 @@ from proxima_platform_spark.functions.bpe import (
 from proxima_platform_spark.functions.dedup import (
     exact_dup_key,
     fuzzy_contaminated_doc_ids,
-    minhash_signature,
     ngram_shingles,
     plan_bands,
     simhash64,
@@ -90,7 +89,6 @@ __all__ = [
     "kmeans_lloyd",
     "l2_norm",
     "language_id",
-    "minhash_signature",
     "ngram_shingles",
     "quality_lang_arrow",
     "quality_score",

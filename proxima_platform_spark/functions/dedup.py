@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from proxima_platform_spark.exprtools import static_template
+
 
 def _spread_narrow_scan(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` iff its optimizer-
@@ -138,86 +140,104 @@ def shingle_hash(shingle: Column) -> Column:
     )
 
 
-def minhash_value(shingle: Column, seed: int) -> Column:
-    """One MinHash hash function applied to a shingle. min() over these is a
-    valid MinHash permutation surrogate (uniform base hash + pairwise-
-    independent affine family — standard MinHash argument). Prefer computing
-    :func:`shingle_hash` once and applying :func:`affine_hash` per seed when
-    evaluating several seeds over the same shingle."""
-    return affine_hash(shingle_hash(shingle), seed)
-
-
 def affine_hash(base_hash: Column, seed: int) -> Column:
     return (
         F.lit(MINHASH_A[seed]) * base_hash + F.lit(MINHASH_B[seed])
     ) % F.lit(MINHASH_PRIME)
 
 
-def minhash_signature(text: Column, *, n: int = 3, num_hashes: int = 8) -> Column:
-    """MinHash signature as array<long> of length ``num_hashes``.
+# The banded LSH family (classic / OPH / b-bit MinHash, ICWS, SimHash)
+# is one pipeline of shared stages: tokenize → shingle-hash explode →
+# per-doc signature aggregation → md5 band keys → banded self-join. Each
+# variant supplies only its signature; batch operators, their streaming
+# twins (streaming/band_stream.py) and the oracle share the stages.
 
-    Expression-only form (array_min over the shingle array per seed) — for
-    very long documents prefer the exploded aggregation in
-    :func:`minhash_signatures_df`, which keeps per-row work bounded.
-    """
-    hs = F.transform(ngram_shingles(text, n), shingle_hash)
 
-    def hash_fn(seed: int):
-        # closure factory: `lambda s, i=i:` would read as a 2-param
-        # (element, index) lambda to F.transform and clobber the seed
-        return lambda h: affine_hash(h, seed)
-
-    return F.array(
-        *[F.array_min(F.transform(hs, hash_fn(i))) for i in range(num_hashes)]
+def _tokenized(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id, toks)`` — tokens in their own projection: Catalyst does not
+    CSE inside Generate, so the inline form re-tokenizes the doc per
+    emitted shingle (7× at sf0.1)."""
+    return docs.select(
+        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
     )
 
 
-def minhash_signatures_df(
-    docs: DataFrame, id_col: str, text_col: str, *, n: int = 3, num_hashes: int = 8
-) -> DataFrame:
-    """(id, seed, minhash) via explode + groupBy — the scale path: shingle
-    arrays never materialize per-row signatures on skewed/huge docs; the
-    combiner collapses to one row per (doc, seed) per partition."""
-    # tokens in their own projection first — no CSE inside Generate means
-    # the inline form re-tokenizes the doc per emitted shingle (7× at sf0.1)
-    sh = (
-        docs.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
-        .select(
-            F.col(id_col),
-            F.explode(shingles_from_tokens(F.col("__toks"), n)).alias("shingle"),
+def _shingle_hashes(tokenized: DataFrame, n: int) -> DataFrame:
+    """``(id, h)``: one row per word n-gram shingle of an ``(id, toks)``
+    frame with its :func:`shingle_hash` — the stage every MinHash
+    variant aggregates. Docs with fewer than ``n`` tokens have no
+    shingles and drop out."""
+    return tokenized.select(
+        "id", F.explode(shingles_from_tokens(F.col("toks"), n)).alias("shingle")
+    ).select("id", shingle_hash(F.col("shingle")).alias("h"))
+
+
+def _minhash_mins(tokenized: DataFrame, *, n: int, num_hashes: int) -> DataFrame:
+    """``(id, h0..h{num_hashes-1})``: the affine-min MinHash signature of
+    classic and b-bit MinHash — ONE hash aggregation computing all mins
+    at once (one md5 per shingle row; fixed-width buffers, so map-side
+    partial agg collapses the shuffle to ~1 row per doc per partition)."""
+    if not 1 <= num_hashes <= len(MINHASH_A):
+        raise ValueError(
+            f"num_hashes must be in [1, {len(MINHASH_A)}] (the size of the "
+            f"MINHASH_A/MINHASH_B family), got {num_hashes}"
         )
-        .select(F.col(id_col), shingle_hash(F.col("shingle")).alias("h"))
+    # static template over fixed column names — memoized so repeated
+    # builds skip the per-hash Column ops (py4j round-trips; exprtools, r13)
+    aggs = static_template(
+        "minhash_sig_aggs",
+        str(num_hashes),
+        lambda: [
+            F.min(affine_hash(F.col("h"), i)).alias(f"h{i}")
+            for i in range(num_hashes)
+        ],
     )
-    seeds = F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1))).alias("seed")
-    exploded = sh.select(id_col, seeds, "h")
-    a_arr = F.array(*[F.lit(a) for a in MINHASH_A[:num_hashes]])
-    b_arr = F.array(*[F.lit(b) for b in MINHASH_B[:num_hashes]])
-    hashed = (
-        F.element_at(a_arr, F.col("seed") + 1) * F.col("h")
-        + F.element_at(b_arr, F.col("seed") + 1)
-    ) % F.lit(MINHASH_PRIME)
-    return exploded.groupBy(id_col, "seed").agg(F.min(hashed).alias("minhash"))
+    return _shingle_hashes(tokenized, n).groupBy("id").agg(*aggs)
 
 
-def lsh_band_keys(
-    signature: Column, *, bands: int, rows_per_band: int
+def _check_bands(total: int, bands: int, param: str) -> None:
+    """Banding needs ``bands`` to divide the signature length ``total``
+    exactly — otherwise the trailing signature values silently fall out
+    of every band."""
+    if bands < 1 or total % bands:
+        raise ValueError(
+            f"bands must divide {param}: got {param}={total}, bands={bands}"
+        )
+
+
+def _band_keys(
+    cols: list[str], bands: int, *, param: str, item=None
 ) -> Column:
-    """LSH banding: array of ``bands`` bucket keys; docs sharing any key are
-    candidate near-duplicates (standard MinHash-LSH banding)."""
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit(str(b)),
-                    *[
-                        F.element_at(signature, b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
+    """``array<string>`` of ``bands`` LSH bucket keys over the signature
+    columns ``cols`` (r = len(cols)/bands rows per band): key b is
+    ``md5('b|' || v[b·r] || '|' || … || v[b·r+r-1])``, integer values in
+    their decimal text. Docs sharing any key are candidate near-
+    duplicates. ``item`` maps each value before joining — ICWS passes
+    ``F.md5``: a raw sampled token may itself contain '|', so two
+    different tuples could concatenate to one key (['a|b','c'] vs
+    ['a','b|c']) and emit spurious pairs. ``param`` names the signature
+    length in the bad-banding error."""
+    _check_bands(len(cols), bands, param)
+    rows = len(cols) // bands
+    tag = "" if item is None else f"{item.__module__}.{item.__qualname__}"
+    return static_template(
+        "band_keys",
+        f"{'|'.join(cols)}#{bands}#{tag}",
+        lambda: F.array(
+            *[
+                F.md5(
+                    F.concat_ws(
+                        "|",
+                        F.lit(str(b)),
+                        *[
+                            F.col(c) if item is None else item(F.col(c))
+                            for c in cols[b * rows:(b + 1) * rows]
+                        ],
+                    )
                 )
-            )
-            for b in range(bands)
-        ]
+                for b in range(bands)
+            ]
+        ),
     )
 
 
@@ -288,52 +308,45 @@ def _banded_cache_put(df: DataFrame) -> DataFrame:
     return df
 
 
+def _banded_self_join(
+    banded: DataFrame, on: tuple[str, ...] = ("band",), *, extra=(), keep=None
+) -> DataFrame:
+    """Distinct ``(id_a, id_b, *extra)`` pairs, id_a < id_b, of the rows
+    of an ``(id, *on, …)`` frame that agree on every ``on`` column — the
+    family's bucket self-join: pairs are generated only within buckets,
+    hash-partitioned, never all-pairs. ``extra`` columns may read either
+    side as ``a.<col>`` / ``b.<col>``; ``keep`` filters the projected
+    pairs before the distinct (SimHash's exact hamming check).
+
+    ``banded`` is persisted through the bounded banded-frame cache first:
+    the self-join would otherwise recompute the whole signature pipeline
+    on both sides, while the banded rows are tiny (one per doc per band).
+    Bounded LRU with rebuild-dedup: interleaved pipelines (build A, build
+    B, run A) don't thrash each other's entry, and repeated identical
+    builds (bench loops, oracle sweeps) reuse ONE entry instead of
+    self-evicting it (see :func:`_banded_cache_put`)."""
+    banded = _banded_cache_put(banded)
+    a, b = banded.alias("a"), banded.alias("b")
+    pairs = (
+        a.join(b, on=list(on))
+        .where(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), *extra)
+    )
+    if keep is not None:
+        pairs = pairs.where(keep)
+    return pairs.distinct()
+
+
 def _banded_from_tokenized(
     tokenized: DataFrame, *, n: int, num_hashes: int, bands: int
 ) -> DataFrame:
-    """(id, band) LSH band keys from an (id, toks) frame — the shared
-    signature pipeline: explode shingles → one hash-agg computing all
-    ``num_hashes`` mins at once (one md5 per shingle row; map-side partial
-    agg collapses the shuffle to ~1 row per doc per partition) → band keys
-    from the aggregated columns."""
-    from proxima_platform_spark.exprtools import static_template
-
-    rows_per_band = num_hashes // bands
-    sh = tokenized.select(
-        "id", F.explode(shingles_from_tokens(F.col("toks"), n)).alias("shingle")
-    ).select("id", shingle_hash(F.col("shingle")).alias("h"))
-    # the signature aggs and band keys are static templates over fixed
-    # column names — memoized so repeated builds skip the ~200 Column ops
-    # (py4j round-trips) the loops cost (exprtools; r13)
-    min_aggs = static_template(
-        "minhash_sig_aggs",
-        str(num_hashes),
-        lambda: [
-            F.min(affine_hash(F.col("h"), i)).alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
+    """(id, band) classic MinHash LSH band keys from an (id, toks) frame:
+    affine-min signature → band keys from the aggregated columns."""
+    sig = _minhash_mins(tokenized, n=n, num_hashes=num_hashes)
+    keys = _band_keys(
+        [f"h{i}" for i in range(num_hashes)], bands, param="num_hashes"
     )
-    sig = sh.groupBy("id").agg(*min_aggs)
-    band_keys = static_template(
-        "minhash_band_keys",
-        f"{num_hashes}|{bands}",
-        lambda: F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.lit(str(b)),
-                        *[
-                            F.col(f"h{b * rows_per_band + r}").cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                )
-                for b in range(bands)
-            ]
-        ),
-    )
-    return sig.select("id", F.explode(band_keys).alias("band"))
+    return sig.select("id", F.explode(keys).alias("band"))
 
 
 def minhash_candidate_pairs(
@@ -344,7 +357,6 @@ def minhash_candidate_pairs(
     n: int = 3,
     num_hashes: int = 8,
     bands: int = 4,
-    spread: int | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs (a < b) sharing ≥1 LSH band.
 
@@ -359,47 +371,23 @@ def minhash_candidate_pairs(
          pairs generated only within buckets, hash-partitioned.
     Docs with fewer than ``n`` tokens have no shingles and drop out.
     """
-    # materialize tokens once (Catalyst re-evaluates the regexp+split per
-    # reference inside Generate otherwise), then explode shingles
-    tokenized = docs.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    )
-    # ``spread`` controls pre-hash parallelism: None = auto (repartition when
-    # the input is file-backed with fewer files than cores), 0 = never, N =
-    # force repartition(N). The auto probe uses inputFiles() — a plan-time
-    # no-op (vs .rdd conversion, ~1s of driver analysis) — and leaves
-    # non-scan inputs alone (already spread by their shuffle; repartitioning
-    # them is a wasted full shuffle at scale). File *count* is only a proxy
-    # for scan partitions: a single splittable multi-GB file or many tiny
-    # coalesced files misdetect — pass ``spread`` explicitly in those
-    # layouts.
+    tokenized = _tokenized(docs, id_col, text_col)
+    # pre-hash parallelism: repartition when the input is file-backed with
+    # fewer files than cores. inputFiles() is a plan-time no-op (vs .rdd
+    # conversion, ~1s of driver analysis); non-scan inputs are left alone
+    # (already spread by their shuffle; repartitioning them is a wasted
+    # full shuffle at scale). File *count* is only a proxy for scan
+    # partitions: a single splittable multi-GB file or many tiny coalesced
+    # files misdetect.
     spark = docs.sparkSession
-    if spread is None:
-        try:
-            n_src = len(tokenized.inputFiles())
-        except Exception:
-            n_src = 0
-        if 0 < n_src < spark.sparkContext.defaultParallelism:
-            tokenized = tokenized.repartition(spark.sparkContext.defaultParallelism)
-    elif spread:
-        tokenized = tokenized.repartition(spread)
-    banded = _banded_from_tokenized(
-        tokenized, n=n, num_hashes=num_hashes, bands=bands
-    )
-    # the self-join would recompute the whole signature pipeline on both
-    # sides — persist the (tiny: one row per doc per band) banded signatures.
-    # Bounded LRU hygiene with rebuild-dedup: keep the most recent few so
-    # interleaved pipelines (build A, build B, run A) don't thrash each
-    # other's cache, while repeated identical builds (bench loops, oracle
-    # sweeps) reuse ONE entry instead of self-evicting it (see
-    # _banded_cache_put)
-    banded = _banded_cache_put(banded)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, on="band")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    try:
+        n_src = len(tokenized.inputFiles())
+    except Exception:
+        n_src = 0
+    if 0 < n_src < spark.sparkContext.defaultParallelism:
+        tokenized = tokenized.repartition(spark.sparkContext.defaultParallelism)
+    return _banded_self_join(
+        _banded_from_tokenized(tokenized, n=n, num_hashes=num_hashes, bands=bands)
     )
 
 
@@ -420,35 +408,22 @@ def oph_signature_df(
     """One-Permutation-Hashing MinHash signature (Li, Owen & Zhang NIPS'12;
     densification per Shrivastava & Li ICML'14 rotation scheme).
 
-    Classic k-hash MinHash evaluates k hash functions per shingle — our
-    exploded form ships #shingles × k rows into the signature aggregation
-    (minhash_signatures_df) or evaluates k affine hashes per shingle row
-    (minhash_candidate_pairs). OPH hashes each shingle ONCE, partitions the
-    hash range into ``num_bins`` bins (bin = h mod k), and takes the min
-    base hash within each bin; an empty bin j borrows cyclically from the
-    first non-empty bin j+t with offset t·C ("rotation densification",
-    which restores the unbiased Jaccard collision estimate). At 100 TB the
-    win is one hash+bin probe per shingle instead of k affine+min updates
-    (compute), and — against the exploded per-(doc, seed) signature form
-    ``minhash_signatures_df`` (the skew-safe path for huge docs) — k×
-    fewer shuffled signature rows (measured at sf1: 400k → 50k rows,
-    SCALE.md r11 shuffle table). The BANDED candidate paths map-side-
-    combine to ~1 row/doc/partition either way, so their shuffle bytes
-    are at parity — measured, not assumed.
+    Classic k-hash MinHash evaluates k affine hashes per shingle row
+    (minhash_candidate_pairs). OPH hashes each shingle ONCE, partitions
+    the hash range into ``num_bins`` bins (bin = h mod k), and takes the
+    min base hash within each bin; an empty bin j borrows cyclically from
+    the first non-empty bin j+t with offset t·C ("rotation
+    densification", which restores the unbiased Jaccard collision
+    estimate). At 100 TB the win is one hash+bin probe per shingle
+    instead of k affine+min updates (compute). The banded candidate paths
+    map-side-combine to ~1 row/doc/partition either way, so their shuffle
+    bytes are at parity — measured, not assumed (SCALE.md r11 shuffle
+    table).
 
     Output: one row per doc, sig_0..sig_{k-1} bigint columns. Docs with
     fewer than ``n`` tokens have no shingles and drop out (same contract as
     minhash_candidate_pairs).
     """
-    tokenized = docs.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    )
-    hashed = tokenized.select(
-        "id",
-        F.explode(shingles_from_tokens(F.col("toks"), n)).alias("shingle"),
-    ).select("id", shingle_hash(F.col("shingle")).alias("h"))
-    from proxima_platform_spark.exprtools import static_template
-
     # all bins in ONE hash aggregation: fixed-width buffer, map-side
     # combine; agg list and densification are static templates over fixed
     # names — memoized (the rotation coalesce alone is num_bins² Column
@@ -461,6 +436,7 @@ def oph_signature_df(
             for j in range(num_bins)
         ],
     )
+    hashed = _shingle_hashes(_tokenized(docs, id_col, text_col), n)
     binned = hashed.groupBy("id").agg(*bin_aggs)
     dense = static_template(
         "oph_densify",
@@ -490,32 +466,11 @@ def oph_band_rows(
     """``(id, band)`` LSH band keys from the OPH signature — the shared
     banding stage of :func:`oph_candidate_pairs` and the streaming
     ``ContinuousOphIndex`` (one expression path, batch == maintained)."""
-    if num_bins % bands:
-        raise ValueError("bands must divide num_bins")
-    sig = oph_signature_df(docs, id_col, text_col, n=n, num_bins=num_bins)
-    from proxima_platform_spark.exprtools import static_template
-
-    rows_per_band = num_bins // bands
-    band_keys = static_template(
-        "oph_band_keys",
-        f"{num_bins}|{bands}",
-        lambda: F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.lit(b),
-                        *[
-                            F.col(f"sig_{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                )
-                for b in range(bands)
-            ]
-        ),
+    keys = _band_keys(
+        [f"sig_{j}" for j in range(num_bins)], bands, param="num_bins"
     )
-    return sig.select("id", F.explode(band_keys).alias("band"))
+    sig = oph_signature_df(docs, id_col, text_col, n=n, num_bins=num_bins)
+    return sig.select("id", F.explode(keys).alias("band"))
 
 
 def oph_candidate_pairs(
@@ -531,16 +486,8 @@ def oph_candidate_pairs(
     banded self-join as minhash_candidate_pairs (rows_per_band =
     num_bins/bands, md5 band keys), built from one hash pass instead of
     ``num_hashes`` affine evaluations per shingle."""
-    banded = oph_band_rows(
-        docs, id_col, text_col, n=n, num_bins=num_bins, bands=bands
-    )
-    banded = _banded_cache_put(banded)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, on="band")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    return _banded_self_join(
+        oph_band_rows(docs, id_col, text_col, n=n, num_bins=num_bins, bands=bands)
     )
 
 
@@ -558,49 +505,18 @@ def bbit_band_rows(
     the shared banding stage of :func:`bbit_minhash_pairs` and the
     streaming ``ContinuousBbitIndex`` (one expression path, batch ==
     maintained)."""
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    rows_per_band = num_hashes // bands
-    tokenized = docs.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
+    keys = _band_keys(
+        [f"s{i}" for i in range(num_hashes)], bands, param="num_hashes"
     )
-    hashed = tokenized.select(
-        "id",
-        F.explode(shingles_from_tokens(F.col("toks"), n)).alias("shingle"),
-    ).select("id", shingle_hash(F.col("shingle")).alias("h"))
-    mins = hashed.groupBy("id").agg(
-        *[
-            F.min(
-                (F.lit(MINHASH_A[i]) * F.col("h") + F.lit(MINHASH_B[i]))
-                % F.lit(MINHASH_PRIME)
-            ).alias(f"m{i}")
-            for i in range(num_hashes)
-        ]
+    mins = _minhash_mins(
+        _tokenized(docs, id_col, text_col), n=n, num_hashes=num_hashes
     )
     # the b-bit truncation: keep the low b bits of each min value
     sig = mins.select(
         "id",
-        *[
-            (F.col(f"m{i}") % F.lit(2**b)).alias(f"s{i}")
-            for i in range(num_hashes)
-        ],
+        *[(F.col(f"h{i}") % F.lit(2**b)).alias(f"s{i}") for i in range(num_hashes)],
     )
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit(bd),
-                    *[
-                        F.col(f"s{bd * rows_per_band + r}")
-                        for r in range(rows_per_band)
-                    ],
-                )
-            )
-            for bd in range(bands)
-        ]
-    )
-    return sig.select("id", F.explode(band_keys).alias("band"))
+    return sig.select("id", F.explode(keys).alias("band"))
 
 
 def bbit_signature_df(
@@ -623,26 +539,13 @@ def bbit_signature_df(
     keys either way); pack for STORAGE, unpack to band."""
     if num_hashes * b > 63:
         raise ValueError("num_hashes * b must fit in 63 bits")
-    tokenized = docs.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    )
-    hashed = tokenized.select(
-        "id",
-        F.explode(shingles_from_tokens(F.col("toks"), n)).alias("shingle"),
-    ).select("id", shingle_hash(F.col("shingle")).alias("h"))
-    mins = hashed.groupBy("id").agg(
-        *[
-            F.min(
-                (F.lit(MINHASH_A[i]) * F.col("h") + F.lit(MINHASH_B[i]))
-                % F.lit(MINHASH_PRIME)
-            ).alias(f"m{i}")
-            for i in range(num_hashes)
-        ]
+    mins = _minhash_mins(
+        _tokenized(docs, id_col, text_col), n=n, num_hashes=num_hashes
     )
     packed = mins.select(
         "id",
         sum(
-            ((F.col(f"m{i}") % F.lit(2**b)) * F.lit(2 ** (i * b)))
+            ((F.col(f"h{i}") % F.lit(2**b)) * F.lit(2 ** (i * b)))
             for i in range(num_hashes)
         ).alias("sig"),
     )
@@ -675,16 +578,10 @@ def bbit_minhash_pairs(
     the banded self-join is hash-partitioned, never all-pairs. Docs with
     fewer than ``n`` tokens drop out.
     """
-    banded = bbit_band_rows(
-        docs, id_col, text_col, n=n, num_hashes=num_hashes, b=b, bands=bands
-    )
-    banded = _banded_cache_put(banded)
-    a, bb = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(bb, on="band")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    return _banded_self_join(
+        bbit_band_rows(
+            docs, id_col, text_col, n=n, num_hashes=num_hashes, b=b, bands=bands
+        )
     )
 
 
@@ -787,6 +684,14 @@ def simhash_chunk_rows(df, id_col: str, text: str, *, chunks: int = 4):
     ).select("id", "sim", "chunk.ci", "chunk.cv")
 
 
+def _check_pigeonhole(hamming_threshold: int, chunks: int) -> None:
+    if hamming_threshold > chunks - 1:
+        raise ValueError(
+            f"hamming_threshold={hamming_threshold} needs at least "
+            f"{hamming_threshold + 1} chunks for the pigeonhole guarantee"
+        )
+
+
 def simhash_candidate_pairs(
     df,
     id_col: str,
@@ -799,32 +704,18 @@ def simhash_candidate_pairs(
 
     Split the 60-bit fingerprint into ``chunks`` pieces; two fingerprints
     within hamming distance ``hamming_threshold`` ≤ chunks-1 must agree on
-    at least one whole chunk (pigeonhole), so the candidate set is an
-    equi-join on (chunk index, chunk value) — hash-partitioned, linear in
-    corpus size like the MinHash band join — followed by the exact hamming
-    check on candidates only. Returns (id_a, id_b, hamming), id_a < id_b.
+    at least one whole chunk (pigeonhole), so the candidate set is the
+    family's banded self-join on (chunk index, chunk value) —
+    hash-partitioned, linear in corpus size like the MinHash band join —
+    followed by the exact hamming check on candidates only. Returns
+    (id_a, id_b, hamming), id_a < id_b.
     """
-    if hamming_threshold > chunks - 1:
-        raise ValueError(
-            f"hamming_threshold={hamming_threshold} needs at least "
-            f"{hamming_threshold + 1} chunks for the pigeonhole guarantee"
-        )
-    chunked = simhash_chunk_rows(df, id_col, text, chunks=chunks)
-    # the self-join would evaluate the (wide: 60 aggregates/row) simhash
-    # expression on both sides — persist the tiny chunked fingerprints,
-    # bounded-FIFO like the MinHash banded cache
-    chunked = _banded_cache_put(chunked)
-    a, b = chunked.alias("a"), chunked.alias("b")
-    return (
-        a.join(b, on=["ci", "cv"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming64(F.col("a.sim"), F.col("b.sim")).alias("hamming"),
-        )
-        .where(F.col("hamming") <= hamming_threshold)
-        .distinct()
+    _check_pigeonhole(hamming_threshold, chunks)
+    return _banded_self_join(
+        simhash_chunk_rows(df, id_col, text, chunks=chunks),
+        ("ci", "cv"),
+        extra=[hamming64(F.col("a.sim"), F.col("b.sim")).alias("hamming")],
+        keep=F.col("hamming") <= hamming_threshold,
     )
 
 
@@ -1746,12 +1637,8 @@ def fuzzy_contaminated_doc_ids(
     from pyspark.sql import Window
 
     bands, _rows = plan_bands(threshold, num_hashes)
-    corpus_tok = docs.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    )
-    eval_tok = eval_docs.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    )
+    corpus_tok = _tokenized(docs, id_col, text_col)
+    eval_tok = _tokenized(eval_docs, id_col, text_col)
     corpus_banded = _banded_from_tokenized(
         corpus_tok, n=n, num_hashes=num_hashes, bands=bands
     )
@@ -2455,35 +2342,17 @@ def icws_band_rows(
     """``(id, band)`` LSH band keys from the 0-bit ICWS samples — the
     shared banding stage of :func:`icws_candidate_pairs` and the
     streaming ``ContinuousIcwsIndex`` (one expression path, so batch
-    and maintained banding are identical by construction)."""
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    rows_per_band = num_hashes // bands
+    and maintained banding are identical by construction). Each sampled
+    token is md5-hashed before '|'-joining (see :func:`_band_keys`)."""
+    keys = _band_keys(
+        [str(i) for i in range(num_hashes)], bands,
+        param="num_hashes", item=F.md5,
+    )
     sig = icws_signature_df(docs, id_col, text_col, num_hashes=num_hashes)
     wide = sig.groupBy("id").pivot(
         "seed", list(range(num_hashes))
     ).agg(F.first("token"))
-    # each sampled token is md5-hashed BEFORE '|'-joining the band key:
-    # raw tokens may themselves contain '|', so two different signatures
-    # could otherwise concatenate to the same band string (e.g.
-    # ['a|b','c'] vs ['a','b|c']) and emit spurious candidate pairs; the
-    # integer-signature variants (OPH/b-bit) need no such step
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit(b),
-                    *[
-                        F.md5(F.col(str(b * rows_per_band + r2)))
-                        for r2 in range(rows_per_band)
-                    ],
-                )
-            )
-            for b in range(bands)
-        ]
-    )
-    return wide.select("id", F.explode(band_keys).alias("band"))
+    return wide.select("id", F.explode(keys).alias("band"))
 
 
 def icws_candidate_pairs(
@@ -2497,14 +2366,6 @@ def icws_candidate_pairs(
     """tf-weighted near-duplicate candidate pairs: the 0-bit CWS samples
     banded ``num_hashes/bands`` per key (collision prob ≈ J_w^rows per
     band), then the standard banded self-join — never all-pairs."""
-    banded = icws_band_rows(
-        docs, id_col, text_col, num_hashes=num_hashes, bands=bands
-    )
-    banded = _banded_cache_put(banded)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, on="band")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    return _banded_self_join(
+        icws_band_rows(docs, id_col, text_col, num_hashes=num_hashes, bands=bands)
     )

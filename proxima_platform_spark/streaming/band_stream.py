@@ -1,64 +1,84 @@
-"""Generic continuously-maintained LSH band-key index, plus the OPH and
-b-bit instances — the online twins of ``oph_candidate_pairs`` /
-``bbit_minhash_pairs``, completing the symmetry: every BANDED batch
-dedup operator in the package now has a streaming maintainer.
+"""Generic continuously-maintained LSH band-key index and its four
+instances — the online twins of ``oph_candidate_pairs``,
+``bbit_minhash_pairs``, ``icws_candidate_pairs`` (tf-weighted, 0-bit
+ICWS) and ``simhash_candidate_pairs``: every BANDED batch dedup operator
+in the package has a streaming maintainer, and all four run ONE online
+step, :meth:`ContinuousBandIndex.ingest`.
 
-One exact-twin argument covers the whole family (first stated for the
-ICWS instance, ``streaming/icws_stream.py``): a document's band keys
+One exact-twin argument covers the whole family: a document's band keys
 are a PURE PER-DOCUMENT function of its text, computed by the batch
-operator's own banding stage (``dedup.icws_band_rows`` /
-``oph_band_rows`` / ``bbit_band_rows`` — one expression path, so batch
-and maintained keys are identical by construction). A candidate pair
-exists in the batch operator iff the docs share ≥1 band key; probing
-each batch against the union of the index-so-far and the batch itself
-reports every pair exactly once, in the batch where its later member
-arrives. None of these operators has a cap/saturation regime, so
-accumulated reports over ANY batch sequence equal the batch operator
-over the union with NO divergence case. Pinned per instance in
-``tests/test_streaming.py::TestContinuousBandFamily`` (and
-``TestContinuousIcwsIndex`` for the ICWS instance).
+operator's own banding stage (``dedup.oph_band_rows`` /
+``bbit_band_rows`` / ``icws_band_rows`` / ``simhash_chunk_rows`` — one
+expression path, so batch and maintained keys are identical by
+construction). A candidate pair exists in the batch operator iff the
+docs share ≥1 band key; probing each batch against the union of the
+index-so-far and the batch itself reports every pair exactly once, in
+the batch where its later member arrives. None of these operators has a
+cap/saturation regime, so accumulated reports over ANY batch sequence
+equal the batch operator over the union with NO divergence case. Pinned
+per instance in ``tests/test_streaming.py::TestContinuousBandFamily``
+and ``TestContinuousIcwsIndex``.
 
 Delivery is the family's at-least-once foreachBatch contract: sink
 BEFORE ``update`` (a replayed batch probes an unchanged index and
 reproduces identical rows; the sink dedups on batch_id). Beyond that,
 this family also tolerates re-delivery under a NEW batch id (ADVICE
-r11): batch band rows are anti-joined against the index before probing,
-so already-accepted (id, band) rows re-report nothing — safe exactly
-because these pairs carry no counts. The count-carrying members of the
-wider maintainer family (winnow ``shared``, containment fractions)
-cannot take this fix (a partially-updated document's counts would be
-computed over its fresh rows only) and keep the unique-doc-id delivery
-contract documented on their ``ingest``.
+r11): batch state rows are anti-joined against the index before probing,
+so already-accepted rows re-report nothing — safe exactly because these
+pairs carry no counts. The count-carrying members of the wider
+maintainer family (winnow ``shared``, containment fractions) cannot take
+this fix (a partially-updated document's counts would be computed over
+its fresh rows only) and keep the unique-doc-id delivery contract
+documented on their ``ingest``.
 
-At scale: state is O(docs · bands) strings — the smallest per-doc
-state of any maintainer family; the per-batch probe is one equi-join
-ON the band key (batch side small — AQE broadcasts it) and one
-distinct. Storage is the ``GenerationStore`` inherited from
-``ContinuousWinnowIndex``.
+At scale: state is O(docs · bands) rows — the smallest per-doc state of
+any maintainer family; the per-batch probe is one equi-join ON the band
+key (batch side small — AQE broadcasts it) and one distinct. Storage is
+the ``GenerationStore`` inherited from ``ContinuousWinnowIndex``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
+from proxima_platform_spark.functions import dedup
 from proxima_platform_spark.streaming.winnow_stream import (
     ContinuousWinnowIndex,
 )
 
 
 class ContinuousBandIndex(ContinuousWinnowIndex):
-    """Append-only ``(doc_id, fp)`` band-key index. Subclasses implement
-    :meth:`_band_rows` with the batch operator's own banding stage;
-    ``ingest(batch_df, batch_id)`` is then a valid ``foreachBatch``
-    callback."""
+    """Append-only band-key index. Band-key instances implement
+    :meth:`_band_rows` with the batch operator's own banding stage and
+    store ``(doc_id, fp)`` rows; an instance banding on other columns
+    (SimHash) overrides :meth:`_state_rows`, :attr:`_keys` and
+    :meth:`_pair_projection` instead. ``ingest(batch_df, batch_id)`` is
+    a valid ``foreachBatch`` callback."""
+
+    #: the state-row columns two documents must share to pair
+    _keys: tuple[str, ...] = ("fp",)
 
     def _band_rows(self, batch_df: DataFrame) -> DataFrame:
         """``(id, band)`` rows for the batch — the batch operator's
         banding stage, shared verbatim."""
         raise NotImplementedError
 
+    def _state_rows(self, batch_df: DataFrame) -> DataFrame:
+        """The batch's index rows: the id column, :attr:`_keys` and any
+        payload the pair projection reads."""
+        return self._band_rows(batch_df).select(
+            F.col("id").alias(self.id_col), F.col("band").alias("fp")
+        )
+
+    def _pair_projection(self) -> tuple[list[Column], Column | None]:
+        """Pair columns beyond ``(id_a, id_b)`` — reading the index side
+        as ``a.<col>`` and the batch side as ``b.<col>`` — and a filter
+        over the projected pairs (the batch operator's ``extra`` /
+        ``keep``)."""
+        return [], None
+
     def band_rows(self) -> DataFrame | None:
-        """The maintained distinct ``(doc_id, fp)`` band-key index."""
+        """The maintained distinct index rows."""
         return self.fingerprints()
 
     def ingest(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
@@ -66,51 +86,51 @@ class ContinuousBandIndex(ContinuousWinnowIndex):
         candidate pair (id_a < id_b, distinct) in which at least one
         member is in THIS batch — new-vs-accepted AND within-batch, the
         module docstring's exact-twin argument — to
-        ``sink(pairs_df, batch_id)``, then fold the batch's band rows
+        ``sink(pairs_df, batch_id)``, then fold the batch's state rows
         into the index.
 
-        Duplicate-delivery hardening (ADVICE r11): the batch's band rows
-        are anti-joined against the index before probing, so a document
-        RE-DELIVERED under a new batch id (its (id, band) rows already
-        accepted) re-reports nothing — pair reports are exactly-once per
-        pair even for non-set-accumulating sinks. This is safe precisely
-        because the family's pairs carry no counts: a genuinely UPDATED
-        same-id document's new band rows still probe, and a pair needs
-        only one member on the probe's batch side. Replay under the SAME
-        batch id keeps the original contract: if the earlier sink call
-        failed, the index was never advanced (sink-before-update), so the
-        replay reproduces identical rows."""
-        bands_b = (
-            self._band_rows(batch_df)
-            .select(F.col("id").alias(self.id_col), F.col("band").alias("fp"))
-            .distinct()
-            .localCheckpoint(eager=False)
+        Duplicate-delivery hardening (ADVICE r11): the batch's state rows
+        are anti-joined against the index (on the FULL row) before
+        probing, so a document RE-DELIVERED under a new batch id re-
+        reports nothing — pair reports are exactly-once per pair even for
+        non-set-accumulating sinks. This is safe precisely because the
+        family's pairs carry no counts: a genuinely UPDATED same-id
+        document's new rows still probe (SimHash's ``sim`` rides on every
+        chunk row, so a changed fingerprint keeps ALL its rows fresh),
+        and a pair needs only one member on the probe's batch side.
+        Replay under the SAME batch id keeps the original contract: if
+        the earlier sink call failed, the index was never advanced
+        (sink-before-update), so the replay reproduces identical rows."""
+        rows_b = (
+            self._state_rows(batch_df).distinct().localCheckpoint(eager=False)
         )
         idx = self.fingerprints()
         if idx is None:
-            fresh = bands_b
-            probe = bands_b
+            fresh = probe = rows_b
         else:
-            fresh = bands_b.join(
-                idx, [self.id_col, "fp"], "left_anti"
+            fresh = rows_b.join(
+                idx, rows_b.columns, "left_anti"
             ).localCheckpoint(eager=False)
             probe = idx.unionByName(fresh).distinct()
-        a = probe.select(F.col(self.id_col).alias("__pa"), "fp")
-        b = fresh.select(F.col(self.id_col).alias("__pb"), "fp")
+        ida, idb = F.col(f"a.{self.id_col}"), F.col(f"b.{self.id_col}")
+        extra, keep = self._pair_projection()
         pairs = (
-            a.join(b, "fp")
-            .where(F.col("__pa") != F.col("__pb"))
+            probe.alias("a")
+            .join(fresh.alias("b"), list(self._keys))
+            .where(ida != idb)
             .select(
-                F.least("__pa", "__pb").alias("id_a"),
-                F.greatest("__pa", "__pb").alias("id_b"),
+                F.least(ida, idb).alias("id_a"),
+                F.greatest(ida, idb).alias("id_b"),
+                *extra,
             )
-            .distinct()
         )
+        if keep is not None:
+            pairs = pairs.where(keep)
         # sink BEFORE update: a replayed batch probes an unchanged index
         # and reproduces identical rows; the sink dedups on batch_id
         if self.sink is not None:
-            self.sink(pairs, batch_id)
-        self.update(bands_b, batch_id)
+            self.sink(pairs.distinct(), batch_id)
+        self.update(rows_b, batch_id)
 
 
 class ContinuousOphIndex(ContinuousBandIndex):
@@ -130,8 +150,7 @@ class ContinuousOphIndex(ContinuousBandIndex):
         sink=None,
         compact_every: int = 4,
     ) -> None:
-        if num_bins % bands:
-            raise ValueError("bands must divide num_bins")
+        dedup._check_bands(num_bins, bands, "num_bins")
         super().__init__(
             spark, path,
             id_col=id_col, text_col=text_col,
@@ -142,9 +161,7 @@ class ContinuousOphIndex(ContinuousBandIndex):
         self.bands = bands
 
     def _band_rows(self, batch_df: DataFrame) -> DataFrame:
-        from proxima_platform_spark.functions.dedup import oph_band_rows
-
-        return oph_band_rows(
+        return dedup.oph_band_rows(
             batch_df, self.id_col, self.text_col,
             n=self.n, num_bins=self.num_bins, bands=self.bands,
         )
@@ -168,8 +185,7 @@ class ContinuousBbitIndex(ContinuousBandIndex):
         sink=None,
         compact_every: int = 4,
     ) -> None:
-        if num_hashes % bands:
-            raise ValueError("bands must divide num_hashes")
+        dedup._check_bands(num_hashes, bands, "num_hashes")
         super().__init__(
             spark, path,
             id_col=id_col, text_col=text_col,
@@ -181,20 +197,46 @@ class ContinuousBbitIndex(ContinuousBandIndex):
         self.bands = bands
 
     def _band_rows(self, batch_df: DataFrame) -> DataFrame:
-        from proxima_platform_spark.functions.dedup import bbit_band_rows
-
-        return bbit_band_rows(
+        return dedup.bbit_band_rows(
             batch_df, self.id_col, self.text_col,
             n=self.n, num_hashes=self.num_hashes, b=self.b,
             bands=self.bands,
         )
 
 
-def band_pairs_stream(stream_docs: DataFrame, index: ContinuousBandIndex):
-    """Structured-Streaming wrapper: ``ingest`` per micro-batch. Returns
-    a ``DataStreamWriter`` — caller adds trigger/checkpoint and
-    ``start()``."""
-    return stream_docs.writeStream.foreachBatch(index.ingest)
+class ContinuousIcwsIndex(ContinuousBandIndex):
+    """Online twin of ``dedup.icws_candidate_pairs``: online tf-WEIGHTED
+    near-duplicate detection (0-bit Improved Consistent Weighted
+    Sampling, Ioffe ICDM'10; Li KDD'15) — the tf-weighted axis of the
+    streaming dedup tier (exact / minhash / winnow / containment /
+    weighted)."""
+
+    def __init__(
+        self,
+        spark,
+        path: str,
+        *,
+        id_col: str = "doc_id",
+        text_col: str = "text",
+        num_hashes: int = 6,
+        bands: int = 3,
+        sink=None,
+        compact_every: int = 4,
+    ) -> None:
+        dedup._check_bands(num_hashes, bands, "num_hashes")
+        super().__init__(
+            spark, path,
+            id_col=id_col, text_col=text_col,
+            sink=sink, compact_every=compact_every,
+        )
+        self.num_hashes = num_hashes
+        self.bands = bands
+
+    def _band_rows(self, batch_df: DataFrame) -> DataFrame:
+        return dedup.icws_band_rows(
+            batch_df, self.id_col, self.text_col,
+            num_hashes=self.num_hashes, bands=self.bands,
+        )
 
 
 class ContinuousSimhashIndex(ContinuousBandIndex):
@@ -202,10 +244,9 @@ class ContinuousSimhashIndex(ContinuousBandIndex):
     hamming-space member of the family. State rows are
     ``(doc_id, sim, ci, cv)`` (the fingerprint rides along so the exact
     hamming check runs on candidates); pairs are the batch operator's
-    ``(id_a, id_b, hamming)``. The exact-twin argument is the module's:
-    fingerprint and chunk values are pure per-doc, there is no cap
-    regime, and the pigeonhole candidate join + hamming filter are
-    computed by the batch operator's own stages."""
+    ``(id_a, id_b, hamming)``."""
+
+    _keys = ("ci", "cv")
 
     def __init__(
         self,
@@ -219,12 +260,7 @@ class ContinuousSimhashIndex(ContinuousBandIndex):
         sink=None,
         compact_every: int = 4,
     ) -> None:
-        if hamming_threshold > chunks - 1:
-            raise ValueError(
-                f"hamming_threshold={hamming_threshold} needs at least "
-                f"{hamming_threshold + 1} chunks for the pigeonhole"
-                " guarantee"
-            )
+        dedup._check_pigeonhole(hamming_threshold, chunks)
         super().__init__(
             spark, path,
             id_col=id_col, text_col=text_col,
@@ -233,55 +269,11 @@ class ContinuousSimhashIndex(ContinuousBandIndex):
         self.hamming_threshold = hamming_threshold
         self.chunks = chunks
 
-    def ingest(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
-        from proxima_platform_spark.functions.dedup import (
-            hamming64,
-            simhash_chunk_rows,
-        )
+    def _state_rows(self, batch_df: DataFrame) -> DataFrame:
+        return dedup.simhash_chunk_rows(
+            batch_df, self.id_col, self.text_col, chunks=self.chunks
+        ).select(F.col("id").alias(self.id_col), "sim", "ci", "cv")
 
-        rows_b = (
-            simhash_chunk_rows(
-                batch_df, self.id_col, self.text_col, chunks=self.chunks
-            )
-            .select(
-                F.col("id").alias(self.id_col), "sim", "ci", "cv"
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        idx = self.fingerprints()
-        # duplicate-delivery hardening (ADVICE r11, base-class rationale):
-        # anti-join on the FULL state row — sound here because `sim` rides
-        # on every chunk row, so an updated document (sim changed) keeps
-        # ALL its rows fresh and its hamming pairs intact, while identical
-        # re-delivery drops every row and re-reports nothing
-        if idx is None:
-            fresh = rows_b
-            probe = rows_b
-        else:
-            fresh = rows_b.join(
-                idx, [self.id_col, "sim", "ci", "cv"], "left_anti"
-            ).localCheckpoint(eager=False)
-            probe = idx.unionByName(fresh).distinct()
-        a = probe.select(
-            F.col(self.id_col).alias("__pa"), F.col("sim").alias("__sa"),
-            "ci", "cv",
-        )
-        b = fresh.select(
-            F.col(self.id_col).alias("__pb"), F.col("sim").alias("__sb"),
-            "ci", "cv",
-        )
-        pairs = (
-            a.join(b, ["ci", "cv"])
-            .where(F.col("__pa") != F.col("__pb"))
-            .select(
-                F.least("__pa", "__pb").alias("id_a"),
-                F.greatest("__pa", "__pb").alias("id_b"),
-                hamming64(F.col("__sa"), F.col("__sb")).alias("hamming"),
-            )
-            .where(F.col("hamming") <= self.hamming_threshold)
-            .distinct()
-        )
-        if self.sink is not None:
-            self.sink(pairs, batch_id)
-        self.update(rows_b, batch_id)
+    def _pair_projection(self) -> tuple[list[Column], Column | None]:
+        ham = dedup.hamming64(F.col("a.sim"), F.col("b.sim")).alias("hamming")
+        return [ham], F.col("hamming") <= self.hamming_threshold

@@ -187,13 +187,3 @@ class ContinuousContainmentIndex(ContinuousWinnowIndex):
         if self.sink is not None:
             self.sink(pairs, batch_id)
         self.update(sh_b, batch_id)
-
-
-def containment_pairs_stream(
-    stream_docs: DataFrame,
-    index: ContinuousContainmentIndex,
-):
-    """Structured-Streaming wrapper: ``ingest`` per micro-batch. Returns
-    a ``DataStreamWriter`` — caller adds trigger/checkpoint and
-    ``start()``."""
-    return stream_docs.writeStream.foreachBatch(index.ingest)

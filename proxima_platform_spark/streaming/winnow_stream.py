@@ -132,13 +132,3 @@ class ContinuousWinnowIndex(GenerationStore):
         if self.sink is not None:
             self.sink(pairs, batch_id)
         self.update(fps_b, batch_id)
-
-
-def winnow_overlap_stream(
-    stream_docs: DataFrame,
-    index: ContinuousWinnowIndex,
-):
-    """Structured-Streaming wrapper: ``ingest`` per micro-batch. Returns
-    a ``DataStreamWriter`` — caller adds trigger/checkpoint and
-    ``start()``."""
-    return stream_docs.writeStream.foreachBatch(index.ingest)

@@ -264,6 +264,67 @@ class TestBandKeyHygiene:
         with _pytest.raises(ValueError):
             oph_candidate_pairs(df, "doc_id", "text", num_bins=8, bands=3)
 
+    def test_minhash_bands_must_divide_hashes(self, spark):
+        # 8 // 3 = 2 rows per band would band only h0..h5 and silently
+        # drop h6, h7 from every key
+        import pytest as _pytest
+
+        from proxima_platform_spark.functions.dedup import (
+            minhash_candidate_pairs,
+        )
+
+        df = spark.createDataFrame(DOCS, "doc_id long, text string")
+        with _pytest.raises(ValueError, match="num_hashes"):
+            minhash_candidate_pairs(df, "doc_id", "text", num_hashes=8, bands=3)
+
+    def test_minhash_num_hashes_beyond_family(self, spark):
+        # MINHASH_A/MINHASH_B hold 8 affine hashes: a 9th has no
+        # parameters, so the request fails at the call site by name
+        import pytest as _pytest
+
+        from proxima_platform_spark.functions.dedup import (
+            minhash_candidate_pairs,
+        )
+
+        df = spark.createDataFrame(DOCS, "doc_id long, text string")
+        with _pytest.raises(ValueError, match="num_hashes"):
+            minhash_candidate_pairs(df, "doc_id", "text", num_hashes=16, bands=4)
+
+    def test_bbit_band_rows_num_hashes_beyond_family(self, spark):
+        import pytest as _pytest
+
+        from proxima_platform_spark.functions.dedup import bbit_band_rows
+
+        df = spark.createDataFrame(DOCS, "doc_id long, text string")
+        with _pytest.raises(ValueError, match="num_hashes"):
+            bbit_band_rows(df, "doc_id", "text", num_hashes=10, bands=2)
+
+    def test_bbit_signature_num_hashes_beyond_family(self, spark):
+        # 9 hashes x 4 bits fits the 63-bit pack; the hash family does not
+        import pytest as _pytest
+
+        from proxima_platform_spark.functions.dedup import bbit_signature_df
+
+        df = spark.createDataFrame(DOCS, "doc_id long, text string")
+        with _pytest.raises(ValueError, match="num_hashes"):
+            bbit_signature_df(df, "doc_id", "text", num_hashes=9, b=4)
+
+    def test_fuzzy_decontaminate_num_hashes_beyond_family(self, spark):
+        # plan_bands(0.5, 16) is a valid (bands, rows) factorization; the
+        # signature it would band has no 9th..16th hash
+        import pytest as _pytest
+
+        from proxima_platform_spark.functions.dedup import (
+            fuzzy_contaminated_doc_ids,
+            plan_bands,
+        )
+
+        bands, rows = plan_bands(0.5, 16)
+        assert bands * rows == 16
+        df = spark.createDataFrame(DOCS, "doc_id long, text string")
+        with _pytest.raises(ValueError, match="num_hashes"):
+            fuzzy_contaminated_doc_ids(df, df, num_hashes=16)
+
     def test_icws_pipe_tokens_do_not_alias_bands(self, spark):
         # Band keys md5 each sampled token before '|'-joining: without
         # that, two DIFFERENT signature tuples can concatenate to the

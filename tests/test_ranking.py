@@ -912,6 +912,14 @@ class TestKneserNeyEngine:
         "kneser_ney5_score",
         "kneser_ney5_mkn_score",
         "perplexity_band_prep",
+        # the banded LSH family (functions/dedup.py shared stages)
+        "dedup_minhash",
+        "dedup_minhash_oph",
+        "dedup_minhash_bbit",
+        "dedup_minhash_weighted",
+        "dedup_simhash_pairs",
+        "fuzzy_decontaminate",
+        "dedup_paragraphs_near",
     ]
 
     @pytest.mark.parametrize("name", ORACLE_QUERIES)

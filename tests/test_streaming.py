@@ -2316,7 +2316,7 @@ class TestContinuousIcwsIndex:
         from proxima_platform_spark.functions.dedup import (
             icws_candidate_pairs,
         )
-        from proxima_platform_spark.streaming.icws_stream import (
+        from proxima_platform_spark.streaming.band_stream import (
             ContinuousIcwsIndex,
         )
 
@@ -2358,7 +2358,7 @@ class TestContinuousIcwsIndex:
         assert idx._manifest()["base"] is not None  # compaction ran
 
     def test_replayed_batch_id_is_noop_on_index(self, spark, tmp_path):
-        from proxima_platform_spark.streaming.icws_stream import (
+        from proxima_platform_spark.streaming.band_stream import (
             ContinuousIcwsIndex,
         )
 
@@ -2378,7 +2378,7 @@ class TestContinuousIcwsIndex:
         assert sorted(map(tuple, idx.band_rows().collect())) == before
 
     def test_bands_must_divide_hashes(self, spark, tmp_path):
-        from proxima_platform_spark.streaming.icws_stream import (
+        from proxima_platform_spark.streaming.band_stream import (
             ContinuousIcwsIndex,
         )
 
