@@ -55,7 +55,6 @@ from proxima_platform_spark.functions.text import (
     EN_STOPWORDS,
     LANG_MARKERS,
     chunk_documents,
-    doc_fingerprint,
     language_id,
     quality_score,
     quality_signals,
@@ -150,6 +149,569 @@ def _stamp_ms(col: str = "stamp") -> Column:
     unix_micros/1000 loses ulp-precision at 1e15 scale and flips boundaries)."""
     us = F.unix_micros(F.col(col))
     return ((us - F.pmod(us, F.lit(1000))) / F.lit(1000)).cast("long")
+
+
+# ---------------------------------------------------------------------------
+# oracle SQL fragments: each rule both engines must agree on and each CTE
+# chain several oracles share, written once for DuckDB; a docstring names
+# the library function a fragment mirrors. An `indent` argument only
+# reproduces a call site's line layout; it never changes what the SQL
+# computes.
+# ---------------------------------------------------------------------------
+
+
+def _sql_normalize(col: str = "text") -> str:
+    """functions/dedup.py ``normalize_text``: trim, lowercase, collapse
+    whitespace runs to one space."""
+    return rf"regexp_replace(lower(trim({col})), '\s+', ' ', 'g')"
+
+
+def _sql_tokens(col: str = "text", indent: int | None = None) -> str:
+    """functions/dedup.py ``tokens``: the normalized text split on ' '."""
+    wrap = " " if indent is None else "\n" + " " * indent
+    return f"string_split({_sql_normalize(col)},{wrap}' ')"
+
+
+def _sql_token_count(col: str = "text", indent: int = 12, blank: int = 0) -> str:
+    """functions/text.py ``token_count``: whitespace-run split of the
+    trimmed text; blank text counts ``blank`` (0 as in the library, 1
+    where the count is a divisor)."""
+    return (
+        f"CASE WHEN length(trim({col})) = 0 THEN {blank}\n{' ' * indent}"
+        rf"ELSE len(regexp_split_to_array(trim({col}), '\s+')) END"
+    )
+
+
+def _sql_md5_int(expr: str, digits: int = 15) -> str:
+    """The integer of the first ``digits`` hex digits of md5(expr) — the
+    library's ``F.conv(F.substring(F.md5(x), 1, digits), 16, 10)`` idiom
+    (functions/dedup.py ``shingle_hash``, functions/sampling.py
+    ``sample_key``). INT while the prefix fits in 31 bits, else BIGINT."""
+    cast = "INT" if digits < 8 else "BIGINT"
+    return f"('0x' || substr(md5({expr}), 1, {digits}))::{cast}"
+
+
+def _sql_shingle_hash(expr: str) -> str:
+    """functions/dedup.py ``shingle_hash``: the 60-bit md5 prefix of
+    ``expr`` mod 2^30."""
+    return f"({_sql_md5_int(expr)} % 1073741824)"
+
+
+def _sql_doc_tokens(name: str = "t", col: str = "tk", src: str = "documents") -> str:
+    """CTE ``name(doc_id, col)``: functions/dedup.py ``tokens`` of every
+    document of ``src``."""
+    return f"""{name} AS (
+    SELECT doc_id,
+           {_sql_tokens()} AS {col}
+    FROM {src}
+)"""
+
+
+def _sql_token_hash_ctes() -> str:
+    """``WITH t → h``: each document's tokens and their 30-bit hashes
+    ``th`` (``_sql_shingle_hash`` per token), the first step
+    of functions/text.py ``rolling_hash_fingerprint``."""
+    return f"""WITH {_sql_doc_tokens()}, h AS (
+    SELECT doc_id,
+           [{_sql_shingle_hash('x')} for x in tk] AS th
+    FROM t
+)"""
+
+
+def _sql_ngram_occ_ctes(n: int) -> str:
+    """``WITH t → counts → occ``: token counts and every word ``n``-gram
+    occurrence ``(doc_id, pos, fp = md5(gram))`` — the gram ladder of
+    functions/dedup.py ``dup_ngram_coverage`` / ``dedup_substrings``."""
+    return f"""WITH {_sql_doc_tokens()}, counts AS (
+    SELECT doc_id, len(tk) AS n_tokens FROM t
+), occ AS (
+    SELECT doc_id, pos, md5(gram) AS fp
+    FROM (
+        SELECT doc_id,
+               unnest(g) AS gram,
+               generate_subscripts(g, 1) AS pos
+        FROM (SELECT doc_id,
+                     CASE WHEN len(tk) >= {n}
+                          THEN [array_to_string(tk[i:i+{n}-1], ' ')
+                                for i in range(1, len(tk) - {n} + 2)]
+                          ELSE [] END AS g
+              FROM t)
+    )
+)"""
+
+
+def _sql_distinct_gram_ctes(n: int) -> str:
+    """``WITH toks → grams``: each document's distinct word ``n``-grams
+    ``g``, one row each — the gram sets functions/text.py
+    ``contaminated_doc_ids`` / ``ngram_novelty`` and functions/sketch.py
+    ``bloom_semi_join`` compare."""
+    return f"""WITH {_sql_doc_tokens("toks", "t")}, grams AS (
+    SELECT doc_id,
+           unnest(CASE WHEN len(t) >= {n}
+                  THEN list_distinct([array_to_string(t[i:i+{n - 1}], ' ')
+                                      for i in range(1, len(t) - {n - 2})])
+                  ELSE [] END) AS g
+    FROM toks
+)"""
+
+
+def _sql_shingle_set_ctes() -> str:
+    """``toks → sh``: each document's distinct word-3-gram set ``s``
+    (functions/dedup.py ``ngram_shingles``), the Jaccard operand of the
+    exact similarity joins."""
+    return f"""toks AS (
+  SELECT doc_id,
+         {_sql_tokens()} AS t
+  FROM documents
+), sh AS (
+  SELECT doc_id,
+         CASE WHEN len(t) >= 3
+              THEN list_distinct([array_to_string(t[i:i+2], ' ')
+                                  for i in range(1, len(t) - 1)])
+              ELSE [] END AS s
+  FROM toks
+)"""
+
+
+def _sql_shingle_ctes(src: str = "documents") -> str:
+    """CTEs ``toks → sh`` over ``src``: the normalized token list ``t``
+    and the word-3-gram list ``shingles`` per doc (functions/dedup.py
+    ``tokens`` / ``shingles_from_tokens``)."""
+    return rf"""{_sql_doc_tokens("toks", "t", src)}, sh AS (
+    SELECT doc_id,
+           CASE WHEN len(t) >= 3
+                THEN [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]
+                ELSE [] END AS shingles
+    FROM toks
+)"""
+
+
+def _sql_band_keys(items: list[str], bands: int, sep: str = ",\n               ") -> str:
+    """The md5 band-key list of functions/dedup.py ``_band_keys``: key b
+    is ``md5('b|' || v[b·r] || '|' || …)`` over the SQL value ``items``."""
+    rows = len(items) // bands
+    return sep.join(
+        f"md5('{b}|' || " + " || '|' || ".join(items[b * rows:(b + 1) * rows]) + ")"
+        for b in range(bands)
+    )
+
+
+def _sql_banded_from(id_col: str = "doc_id") -> str:
+    return f"FROM banded a JOIN banded b ON a.band = b.band AND a.{id_col} < b.{id_col}"
+
+
+def _sql_banded_pairs(indent: str = "", id_col: str = "doc_id") -> str:
+    """The banded self-join tail: distinct ``(id_a, id_b)``, id_a < id_b,
+    of the docs sharing a band key (functions/dedup.py
+    ``_banded_self_join``)."""
+    return (
+        f"{indent}SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b\n"
+        f"{indent}{_sql_banded_from(id_col)}"
+    )
+
+
+def _sql_minhash_ctes(
+    src: str = "documents", *, bits: int | None = None, bands: int = 4
+) -> str:
+    """CTE chain ``toks → sh → sig → banded`` computing MinHash+LSH band
+    keys over ``src``, mirroring functions/dedup.py: base hash h = (60-bit
+    int of md5(shingle)) % 2^30; sig[i] = min((A[i]*h + B[i]) % P), kept
+    to its low ``bits`` bits for b-bit MinHash; ``bands`` md5 band keys."""
+    from proxima_platform_spark.functions.dedup import (
+        MINHASH_A, MINHASH_B, MINHASH_PRIME,
+    )
+
+    base = _sql_shingle_hash("s")
+    trunc = "" if bits is None else f" % {2**bits}"
+    sig_items = ",\n               ".join(
+        f"list_min([({MINHASH_A[i]} * {base} + {MINHASH_B[i]}) % {MINHASH_PRIME}"
+        f" for s in shingles]){trunc}"
+        for i in range(8)
+    )
+    band_items = _sql_band_keys([f"sg[{i + 1}]::VARCHAR" for i in range(8)], bands)
+    return rf"""{_sql_shingle_ctes(src)}, sig AS (
+    SELECT doc_id,
+           [{sig_items}] AS sg
+    FROM sh WHERE len(shingles) > 0
+), banded AS (
+    SELECT doc_id, unnest([{band_items}]) AS band FROM sig
+)"""
+
+
+def _sql_minhash_components() -> str:
+    """``WITH RECURSIVE`` MinHash band pairs over documents, then
+    ``edges → reach``: the connected components of functions/graph.py
+    ``dedup_groups`` by recursive min-label reachability (a label l reaches
+    node x through monotone frontier l < next-node; the minimum label a
+    node receives is its component's minimum)."""
+    return f"""WITH RECURSIVE {_sql_minhash_ctes("documents")},
+pairs AS (
+{_sql_banded_pairs("    ")}
+), edges AS (
+    SELECT id_a AS u, id_b AS v FROM pairs
+    UNION
+    SELECT id_b AS u, id_a AS v FROM pairs
+), reach(node, label) AS (
+    SELECT DISTINCT u, u FROM edges
+    UNION
+    SELECT e.v, r.label FROM reach r JOIN edges e ON e.u = r.node
+    WHERE r.label < e.v
+)"""
+
+
+def _sql_winner_ctes(src: str) -> str:
+    """``per_doc → winners`` over ``src(fp, doc_id, pos)``: each
+    fingerprint shared by >= 2 documents and its globally-first occurrence
+    ``(wd, wp)``, the one that survives (functions/dedup.py
+    ``dedup_substrings`` / ``dedup_winnow``)."""
+    return f"""per_doc AS (
+    SELECT fp, doc_id, min(pos) AS mp FROM {src} GROUP BY 1, 2
+), winners AS (
+    SELECT fp, min(doc_id) AS wd, arg_min(mp, doc_id) AS wp
+    FROM per_doc GROUP BY fp HAVING count(*) >= 2
+)"""
+
+
+def _sql_ngram_removed(n: int) -> str:
+    """``rem → removed``: every token position covered by a non-winning
+    occurrence of a shared ``n``-gram."""
+    return f"""rem AS (
+    SELECT occ.doc_id, occ.pos
+    FROM occ JOIN winners USING (fp)
+    WHERE NOT (occ.doc_id = winners.wd AND occ.pos = winners.wp)
+), removed AS (
+    SELECT DISTINCT doc_id, rp FROM (
+        SELECT doc_id, unnest([pos + i for i in range(0, {n})]) AS rp
+        FROM rem
+    )
+)"""
+
+
+def _sql_reassembly(src: str, cut: str) -> str:
+    """``tok → kept → reass``: the tokens ``tk`` of ``src`` whose position
+    is not in ``cut(doc_id, rp)`` (aliased by its first letter), re-joined
+    with ' ' in order."""
+    a = cut[0]
+    return f"""tok AS (
+    SELECT doc_id, generate_subscripts(tk, 1) AS tp, unnest(tk) AS tok FROM {src}
+), kept AS (
+    SELECT k.doc_id, k.tp, k.tok FROM tok k
+    WHERE NOT EXISTS (
+        SELECT 1 FROM {cut} {a} WHERE {a}.doc_id = k.doc_id AND {a}.rp = k.tp
+    )
+), reass AS (
+    SELECT doc_id, count(*) AS n_kept,
+           array_to_string(list(tok ORDER BY tp), ' ') AS text_dedup
+    FROM kept GROUP BY doc_id
+)"""
+
+
+def _sql_cut_runs_tail(src: str) -> str:
+    """``cut → run_len → run_stats``: the ``removed`` positions outside the
+    winners' kept windows ``keptw``, their runs, then the reassembly of
+    ``src`` minus ``cut`` and the per-document report (kept / removed
+    tokens, cut runs, longest run, text) of functions/dedup.py
+    ``dedup_substrings_maximal`` / ``dedup_winnow``."""
+    return f"""cut AS (
+    SELECT r.doc_id, r.rp FROM removed r
+    WHERE NOT EXISTS (
+        SELECT 1 FROM keptw k WHERE k.doc_id = r.doc_id AND k.rp = r.rp
+    )
+), run_len AS (
+    SELECT doc_id, grp, count(*) AS rl FROM (
+        SELECT doc_id,
+               rp - row_number() OVER (PARTITION BY doc_id ORDER BY rp) AS grp
+        FROM cut
+    ) GROUP BY 1, 2
+), run_stats AS (
+    SELECT doc_id, count(*) AS n_runs_cut, max(rl) AS max_run_len
+    FROM run_len GROUP BY 1
+), {_sql_reassembly(src, "cut")}
+SELECT c.doc_id, c.n_tokens,
+       coalesce(r.n_kept, 0) AS n_kept,
+       c.n_tokens - coalesce(r.n_kept, 0) AS n_removed,
+       coalesce(s.n_runs_cut, 0) AS n_runs_cut,
+       coalesce(s.max_run_len, 0) AS max_run_len,
+       coalesce(r.text_dedup, '') AS text_dedup
+FROM counts c
+LEFT JOIN reass r USING (doc_id)
+LEFT JOIN run_stats s USING (doc_id)"""
+
+
+def _sql_span_dedup_ctes(k: int, cols: str) -> str:
+    """``sp → ex → kept → re`` over the token CTE ``t(toks)``: each
+    document's ``k``-token spans, the first occurrence of each distinct
+    span within the document, re-joined in order — functions/dedup.py
+    ``self_dedup_spans``. ``cols`` are the columns ``sp`` carries on."""
+    return f"""sp AS (
+    SELECT {cols},
+           [array_to_string(toks[s+1:s+{k}], ' ')
+            for s in range(0, greatest(len(toks), 1), {k})] AS spans
+    FROM t
+), ex AS (
+    SELECT doc_id, unnest(spans) AS span, generate_subscripts(spans, 1) AS pos
+    FROM sp
+), kept AS (
+    SELECT doc_id, span, min(pos) AS pos FROM ex GROUP BY 1, 2
+), re AS (
+    SELECT doc_id, count(*) AS n_kept,
+           string_agg(span, ' ' ORDER BY pos) AS text_dedup
+    FROM kept GROUP BY 1
+)"""
+
+
+def _sql_paragraph_ctes(keep: str) -> str:
+    """``WITH tk → st → seg → nz → keep``: each document cut into 10-token
+    paragraphs (the fixture has no newlines), the non-empty ones, and
+    ``rn = 1`` on each distinct paragraph's first occurrence by
+    (doc_id, pos) — functions/dedup.py ``paragraph_winners``."""
+    return f"""WITH {_sql_doc_tokens("tk", "toks")}, st AS (
+    SELECT doc_id, toks, unnest(range(0, greatest(len(toks), 1), 10)) AS s
+    FROM tk
+), seg AS (
+    SELECT doc_id, s // 10 AS pos, array_to_string(toks[s+1:s+10], ' ') AS para
+    FROM st
+), nz AS (
+    SELECT * FROM seg WHERE len(para) > 0
+), {keep} AS (
+    SELECT doc_id, pos, para,
+           row_number() OVER (PARTITION BY md5(para) ORDER BY doc_id, pos) AS rn
+    FROM nz
+)"""
+
+
+def _sql_bm25_ctes() -> str:
+    """``toks → d → stats`` of functions/ranking.py ``bm25_score`` for the
+    query ['stream', 'data', 'query']: per-doc length ``dl`` and term
+    counts ``tf<i>``; corpus size ``n``, mean length ``avgdl`` and document
+    frequencies ``df<i>``."""
+    terms = ["stream", "data", "query"]
+    tfs = ",\n".join(
+        f"           len(list_filter(t, x -> x = '{w}')) AS tf{i}"
+        for i, w in enumerate(terms)
+    )
+    dfs = ",\n".join(
+        f"           sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END)::DOUBLE AS df{i}"
+        for i in range(len(terms))
+    )
+    return f"""WITH {_sql_doc_tokens("toks", "t")}, d AS (
+    SELECT doc_id, len(t) AS dl,
+{tfs}
+    FROM toks
+), stats AS (
+    SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl,
+{dfs}
+    FROM d
+)"""
+
+
+def _sql_bm25_score(indent: int = 7) -> str:
+    """functions/ranking.py ``bm25_score`` (k1 = 1.2, b = 0.75) over
+    ``d, stats`` of ``_sql_bm25_ctes``, rounded to 4 places; ``indent`` is
+    the column of ``round(``."""
+    pad = " " * indent
+    terms = f"\n{pad}  + ".join(
+        f"ln(1 + (n - df{i} + 0.5) / (df{i} + 0.5))\n{pad}      * (tf{i}::DOUBLE * 2.2)"
+        f" / (tf{i}::DOUBLE + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))"
+        for i in range(3)
+    )
+    return f"round(\n{pad}    {terms},\n{pad}4)"
+
+
+def _sql_nb_model_ctes() -> str:
+    """``tr_tok → … → model`` over the training CTE ``tr(lang, text)``: the
+    add-one multinomial naive-Bayes model of functions/classify.py
+    ``nb_counts`` — per-class log prior, unseen-word log probability and
+    per-(class, word) log probability, each quantized to 8 places."""
+    return f"""tr_tok AS (
+    SELECT lang AS c,
+           unnest({_sql_tokens()}) AS w
+    FROM tr
+),
+cwc AS (SELECT c, w, count(*) AS cnt FROM tr_tok GROUP BY 1, 2),
+ctok AS (SELECT c, sum(cnt) AS tc FROM cwc GROUP BY 1),
+vocab AS (SELECT count(DISTINCT w) AS v FROM cwc),
+cdocs AS (SELECT lang AS c, count(*) AS nc FROM tr GROUP BY 1),
+nd AS (SELECT count(*) AS nd FROM tr),
+classes AS (
+    SELECT c, tc, v,
+           round(ln(nc / nd), 8)::DECIMAL(28,10) AS log_prior,
+           round(ln(1.0 / (tc + v)), 8)::DECIMAL(28,10) AS lp_unseen
+    FROM cdocs CROSS JOIN nd JOIN ctok USING (c) CROSS JOIN vocab
+),
+model AS (
+    SELECT c, w,
+           round(ln((cnt + 1) / (tc + v)), 8)::DECIMAL(28,10) AS lp
+    FROM cwc JOIN ctok USING (c) CROSS JOIN vocab
+)"""
+
+
+def _sql_nb_loglik_ctes(src: str) -> str:
+    """``te_tok → ll``: each document of ``src``'s summed log likelihood
+    per class under ``_sql_nb_model_ctes`` (functions/classify.py
+    ``nb_best_from_counts`` before the prior)."""
+    return f"""te_tok AS (
+    SELECT id, w, count(*) AS n FROM (
+        SELECT doc_id AS id,
+               unnest({_sql_tokens()}) AS w
+        FROM {src}
+    ) GROUP BY 1, 2
+),
+ll AS (
+    SELECT t.id, cl.c,
+           sum(t.n * coalesce(m.lp, cl.lp_unseen)) AS ll
+    FROM te_tok t
+    CROSS JOIN classes cl
+    LEFT JOIN model m ON m.c = cl.c AND m.w = t.w
+    GROUP BY 1, 2
+)"""
+
+
+def _sql_lsh_bucket(n_planes: int, offset: int) -> str:
+    """DuckDB mirror of sign_lsh_buckets_arrow's integer-exact plane family:
+    fixed-point components floor(x·10⁶) (exact in doubles) against ±1 planes
+    (md5 top hex digit ≥ 8) — an *integer* projection, so summation order
+    can't matter and both engines agree bit-for-bit by construction."""
+    return f"""(list_sum(list_transform(range({n_planes}), p ->
+      CASE WHEN list_sum(list_transform(range(len(v)), d ->
+        floor(v[d+1] * 1000000.0)::BIGINT *
+        (CASE WHEN {_sql_md5_int(f"(p + {offset})::VARCHAR || ',' || d::VARCHAR", 1)} >= 8
+              THEN 1 ELSE -1 END)
+      )) > 0 THEN 2**p ELSE 0 END)))::BIGINT"""
+
+
+def _sql_lsh_candidates() -> str:
+    """``b → cand`` over ``base(vec_id, v)``: two 8-plane sign-LSH tables
+    of functions/similarity.py ``sign_lsh_buckets_arrow`` and the vector
+    pairs (``va``, ``vb``; id_a < id_b) sharing a bucket in either."""
+    return f"""b AS (
+  SELECT vec_id, v,
+    {_sql_lsh_bucket(8, 0)} AS b0,
+    {_sql_lsh_bucket(8, 8)} AS b1
+  FROM base),
+cand AS (
+  SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.v AS va, c.v AS vb
+  FROM b a JOIN b c ON a.b0 = c.b0 AND a.vec_id < c.vec_id
+  UNION
+  SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.v AS va, c.v AS vb
+  FROM b a JOIN b c ON a.b1 = c.b1 AND a.vec_id < c.vec_id
+)"""
+
+
+def _sql_lsh_knn_ctes() -> str:
+    """``base → b → cand → scored → directed`` of functions/similarity.py
+    ``knn_join_lsh``: nonzero vectors, their exact cosine per distinct
+    candidate pair, and each pair in both directions."""
+    return f"""WITH base AS (
+  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+  WHERE len(list_filter(embedding::DOUBLE[], x -> x <> 0)) > 0
+),
+{_sql_lsh_candidates()},
+scored AS (
+  SELECT DISTINCT id_a, id_b,
+         list_dot_product(va, vb)
+         / (sqrt(list_dot_product(va, va)) * sqrt(list_dot_product(vb, vb))) AS cos
+  FROM cand
+  WHERE list_dot_product(va, vb)
+        / (sqrt(list_dot_product(va, va)) * sqrt(list_dot_product(vb, vb))) > -2.0
+),
+directed AS (
+  SELECT id_a, id_b, cos FROM scored
+  UNION ALL
+  SELECT id_b AS id_a, id_a AS id_b, cos FROM scored
+)"""
+
+
+def _sql_semdedup_report() -> str:
+    """``condemned`` and the per-vector report of functions/cluster.py
+    ``semantic_dedup``: a vector is dropped when a candidate pair ``p(id_b,
+    cos)`` condemns it with cosine > 0.40; kept vectors report -2.0."""
+    return """condemned AS (
+    SELECT id_b, count(*) AS n_near, max(cos) AS max_cos
+    FROM p WHERE cos > 0.40 GROUP BY 1
+)
+SELECT av.vec_id, av.cid AS cluster,
+       c.id_b IS NULL AS kept,
+       coalesce(c.n_near, 0) AS n_near,
+       round(coalesce(c.max_cos, -2.0), 6) AS max_cos
+FROM av LEFT JOIN condemned c ON av.vec_id = c.id_b"""
+
+
+def _sql_device_snapshot(prefix: str = "device.") -> str:
+    """``inst → tomb`` and the joined select of the wildcard snapshot of
+    ``_device_changelog`` (changelog.py ``snapshot``): the latest
+    ``{prefix}<event_id % 5>`` instance per user, and the user's newest
+    ``error`` event as a whole-wildcard tombstone; the caller's WHERE keeps
+    instances with ``stamp >= tombstone``."""
+    return f"""WITH inst AS (
+    SELECT user_id::VARCHAR AS key,
+           '{prefix}' || (event_id % 5)::VARCHAR AS attribute,
+           epoch_us(ts) // 1000 AS stamp_ms, epoch_us(ts) AS stamp_us
+    FROM events WHERE event_type <> 'error'
+    QUALIFY row_number() OVER (
+        PARTITION BY user_id, event_id % 5 ORDER BY epoch_us(ts) DESC, event_id DESC) = 1
+), tomb AS (
+    SELECT user_id::VARCHAR AS key, max(epoch_us(ts)) AS tomb_us
+    FROM events WHERE event_type = 'error' GROUP BY 1
+)
+SELECT i.key, i.attribute, i.stamp_ms
+FROM inst i LEFT JOIN tomb t ON i.key = t.key"""
+
+
+def _sql_daily_bins() -> str:
+    """CTE ``binned``: each event's UTC day and its value bin under
+    operators/rollup.py ``histogram_rollup`` with boundaries
+    [0, 100, 200, 300, 400] (bin 0 below the first, 5 from the last)."""
+    return """binned AS (
+    SELECT (epoch_ms(ts) // 86400000) * 86400000 AS day_ms,
+           event_type,
+           CASE WHEN value < 0.0 THEN 0
+                WHEN value < 100.0 THEN 1
+                WHEN value < 200.0 THEN 2
+                WHEN value < 300.0 THEN 3
+                WHEN value < 400.0 THEN 4
+                ELSE 5 END AS bin_id
+    FROM events
+)"""
+
+
+def _sql_copurchase_edges(small: bool = False) -> str:
+    """The body of the part co-purchase edge CTE the graph queries share:
+    distinct ``(u, v)`` part pairs (u < v) bought in one order; ``small``
+    keeps only lineitems of quantity <= 5."""
+    edges = """  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+  FROM lineitem a
+  JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey"""
+    if small:
+        edges += "\n  WHERE a.l_quantity <= 5 AND b.l_quantity <= 5"
+    return edges
+
+
+def _sql_triangle_nodes() -> str:
+    """``tri → nodes`` over the edge CTE ``e(u, v)`` (u < v): every
+    triangle once, then each of its three corners — functions/graph.py
+    ``triangle_counts``."""
+    return """tri AS (
+  SELECT e1.u AS a, e1.v AS b, e2.v AS c
+  FROM e e1
+  JOIN e e2 ON e2.u = e1.u AND e2.v > e1.v
+  JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v
+), nodes AS (
+  SELECT a AS node FROM tri
+  UNION ALL SELECT b FROM tri
+  UNION ALL SELECT c FROM tri
+)"""
+
+
+def _sql_hash_split_select() -> str:
+    """The split of functions/sampling.py ``hash_split`` over ``keyed(doc_id,
+    sk)``, sk in [0, 10^6): the cumulative ranges of its sorted split names,
+    test [0, 0.1) → train [0.1, 0.9) → validation."""
+    return """SELECT doc_id,
+       CASE WHEN sk < 100000 THEN 'test'
+            WHEN sk < 900000 THEN 'train'
+            ELSE 'validation' END AS split
+FROM keyed"""
 
 
 # ===========================================================================
@@ -255,20 +817,8 @@ def q_wildcard_tombstone_snapshot(spark, sf):
     return snap.select("key", "attribute", _stamp_ms().alias("stamp_ms"))
 
 
-SQL_WILDCARD_TOMBSTONE = """
-WITH inst AS (
-    SELECT user_id::VARCHAR AS key,
-           'device.' || (event_id % 5)::VARCHAR AS attribute,
-           epoch_us(ts) // 1000 AS stamp_ms, epoch_us(ts) AS stamp_us
-    FROM events WHERE event_type <> 'error'
-    QUALIFY row_number() OVER (
-        PARTITION BY user_id, event_id % 5 ORDER BY epoch_us(ts) DESC, event_id DESC) = 1
-), tomb AS (
-    SELECT user_id::VARCHAR AS key, max(epoch_us(ts)) AS tomb_us
-    FROM events WHERE event_type = 'error' GROUP BY 1
-)
-SELECT i.key, i.attribute, i.stamp_ms
-FROM inst i LEFT JOIN tomb t ON i.key = t.key
+SQL_WILDCARD_TOMBSTONE = f"""
+{_sql_device_snapshot()}
 WHERE t.tomb_us IS NULL OR i.stamp_us >= t.tomb_us
 """
 
@@ -330,20 +880,8 @@ def q_scan_wildcard(spark, sf):
     )
 
 
-SQL_SCAN_WILDCARD = """
-WITH inst AS (
-    SELECT user_id::VARCHAR AS key,
-           'device.' || (event_id % 5)::VARCHAR AS attribute,
-           epoch_us(ts) // 1000 AS stamp_ms, epoch_us(ts) AS stamp_us
-    FROM events WHERE event_type <> 'error'
-    QUALIFY row_number() OVER (
-        PARTITION BY user_id, event_id % 5 ORDER BY epoch_us(ts) DESC, event_id DESC) = 1
-), tomb AS (
-    SELECT user_id::VARCHAR AS key, max(epoch_us(ts)) AS tomb_us
-    FROM events WHERE event_type = 'error' GROUP BY 1
-)
-SELECT i.key, i.attribute, i.stamp_ms
-FROM inst i LEFT JOIN tomb t ON i.key = t.key
+SQL_SCAN_WILDCARD = f"""
+{_sql_device_snapshot()}
 WHERE (t.tomb_us IS NULL OR i.stamp_us >= t.tomb_us) AND i.key = '7'
 ORDER BY i.attribute LIMIT 3
 """
@@ -417,20 +955,8 @@ def q_proxy_attribute_read(spark, sf):
     return snap.select("key", "attribute", _stamp_ms().alias("stamp_ms"))
 
 
-SQL_PROXY_ATTRIBUTE_READ = """
-WITH inst AS (
-    SELECT user_id::VARCHAR AS key,
-           'dev.' || (event_id % 5)::VARCHAR AS attribute,
-           epoch_us(ts) // 1000 AS stamp_ms, epoch_us(ts) AS stamp_us
-    FROM events WHERE event_type <> 'error'
-    QUALIFY row_number() OVER (
-        PARTITION BY user_id, event_id % 5 ORDER BY epoch_us(ts) DESC, event_id DESC) = 1
-), tomb AS (
-    SELECT user_id::VARCHAR AS key, max(epoch_us(ts)) AS tomb_us
-    FROM events WHERE event_type = 'error' GROUP BY 1
-)
-SELECT i.key, i.attribute, i.stamp_ms
-FROM inst i LEFT JOIN tomb t ON i.key = t.key
+SQL_PROXY_ATTRIBUTE_READ = f"""
+{_sql_device_snapshot("dev.")}
 WHERE t.tomb_us IS NULL OR i.stamp_us >= t.tomb_us
 """
 
@@ -533,9 +1059,9 @@ def q_flatmap_tokens(spark, sf):
     )
 
 
-SQL_FLATMAP_TOKENS = r"""
+SQL_FLATMAP_TOKENS = rf"""
 SELECT doc_id,
-       unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS token
+       unnest({_sql_tokens()}) AS token
 FROM documents WHERE doc_id < 20
 """
 
@@ -2563,33 +3089,10 @@ def q_bm25_rank(spark, sf):
     return top.select("doc_id", F.round("score", 4).alias("score"))
 
 
-SQL_BM25_RANK = r"""
-WITH toks AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-    FROM documents
-), d AS (
-    SELECT doc_id, len(t) AS dl,
-           len(list_filter(t, x -> x = 'stream')) AS tf0,
-           len(list_filter(t, x -> x = 'data')) AS tf1,
-           len(list_filter(t, x -> x = 'query')) AS tf2
-    FROM toks
-), stats AS (
-    SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl,
-           sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df0,
-           sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df1,
-           sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df2
-    FROM d
-)
+SQL_BM25_RANK = rf"""
+{_sql_bm25_ctes()}
 SELECT doc_id,
-       round(
-           ln(1 + (n - df0 + 0.5) / (df0 + 0.5))
-             * (tf0::DOUBLE * 2.2) / (tf0::DOUBLE + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-         + ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
-             * (tf1::DOUBLE * 2.2) / (tf1::DOUBLE + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-         + ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
-             * (tf2::DOUBLE * 2.2) / (tf2::DOUBLE + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)),
-       4) AS score
+       {_sql_bm25_score()} AS score
 FROM d, stats
 ORDER BY score DESC, doc_id LIMIT 20
 """
@@ -2638,33 +3141,10 @@ def q_rrf_fusion(spark, sf):
     return rrf_fuse([lex_r, dense_r], id_col="doc_id", k=60, top=20)
 
 
-SQL_RRF_FUSION = r"""
-WITH toks AS (
+SQL_RRF_FUSION = rf"""
+{_sql_bm25_ctes()}, lex AS (
     SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-    FROM documents
-), d AS (
-    SELECT doc_id, len(t) AS dl,
-           len(list_filter(t, x -> x = 'stream')) AS tf0,
-           len(list_filter(t, x -> x = 'data')) AS tf1,
-           len(list_filter(t, x -> x = 'query')) AS tf2
-    FROM toks
-), stats AS (
-    SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl,
-           sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df0,
-           sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df1,
-           sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df2
-    FROM d
-), lex AS (
-    SELECT doc_id,
-           round(
-               ln(1 + (n - df0 + 0.5) / (df0 + 0.5))
-                 * (tf0::DOUBLE * 2.2) / (tf0::DOUBLE + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-             + ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
-                 * (tf1::DOUBLE * 2.2) / (tf1::DOUBLE + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-             + ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
-                 * (tf2::DOUBLE * 2.2) / (tf2::DOUBLE + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)),
-           4) AS s
+           {_sql_bm25_score(11)} AS s
     FROM d, stats
 ), lex_r AS (
     SELECT doc_id, rank FROM (
@@ -2730,33 +3210,10 @@ def q_ndcg_retrieval(spark, sf):
     )
 
 
-SQL_NDCG_RETRIEVAL = r"""
-WITH toks AS (
+SQL_NDCG_RETRIEVAL = rf"""
+{_sql_bm25_ctes()}, scored AS (
     SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-    FROM documents
-), d AS (
-    SELECT doc_id, len(t) AS dl,
-           len(list_filter(t, x -> x = 'stream')) AS tf0,
-           len(list_filter(t, x -> x = 'data')) AS tf1,
-           len(list_filter(t, x -> x = 'query')) AS tf2
-    FROM toks
-), stats AS (
-    SELECT count(*)::DOUBLE AS n, avg(dl) AS avgdl,
-           sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df0,
-           sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df1,
-           sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END)::DOUBLE AS df2
-    FROM d
-), scored AS (
-    SELECT doc_id,
-           round(
-               ln(1 + (n - df0 + 0.5) / (df0 + 0.5))
-                 * (tf0::DOUBLE * 2.2) / (tf0::DOUBLE + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-             + ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
-                 * (tf1::DOUBLE * 2.2) / (tf1::DOUBLE + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-             + ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
-                 * (tf2::DOUBLE * 2.2) / (tf2::DOUBLE + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)),
-           4) AS s,
+           {_sql_bm25_score(11)} AS s,
            (CASE WHEN tf0 > 0 THEN 1 ELSE 0 END
             + CASE WHEN tf1 > 0 THEN 1 ELSE 0 END
             + CASE WHEN tf2 > 0 THEN 1 ELSE 0 END)::BIGINT AS rel
@@ -2879,8 +3336,8 @@ def q_dedup_exact(spark, sf):
     )
 
 
-SQL_DEDUP_EXACT = r"""
-SELECT md5(substr(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), 1, 40)) AS fp,
+SQL_DEDUP_EXACT = rf"""
+SELECT md5(substr({_sql_normalize()}, 1, 40)) AS fp,
        count(*) AS n_docs, min(doc_id) AS min_doc
 FROM documents GROUP BY 1
 """
@@ -2961,7 +3418,7 @@ def _sql_kneser_ney(
     ctes = [
         rf"""t AS (
     SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
+           {_sql_tokens()} AS tk
     FROM {source}
 )""",
         f"""g AS (
@@ -3175,10 +3632,10 @@ def q_domain_jsd(spark, sf):
     return source_jsd(_load(spark, sf, "documents"))
 
 
-SQL_DOMAIN_JSD = r"""
+SQL_DOMAIN_JSD = rf"""
 WITH tok AS (
     SELECT source AS s,
-           unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
+           unnest({_sql_tokens()}) AS w
     FROM documents
 ), sw AS (
     SELECT s, w, count(*) AS cs FROM tok GROUP BY 1, 2
@@ -3245,15 +3702,15 @@ def q_unimax_mixture(spark, sf):
     return unimax_mixture(_load(spark, sf, "documents"), budget_factor=1.5)
 
 
-SQL_UNIMAX_MIXTURE = r"""
+SQL_UNIMAX_MIXTURE = rf"""
 WITH counts AS (
     SELECT source,
-           sum(len(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')))::BIGINT AS n_tokens
+           sum(len({_sql_tokens()}))::BIGINT AS n_tokens
     FROM documents GROUP BY source
 ), capped AS (
     SELECT source, n_tokens,
-           1 + (('0x' || substr(md5(source), 1, 15))::BIGINT % 3) AS epoch_cap,
-           (1 + (('0x' || substr(md5(source), 1, 15))::BIGINT % 3)) * n_tokens AS capacity
+           1 + ({_sql_md5_int('source')} % 3) AS epoch_cap,
+           (1 + ({_sql_md5_int('source')} % 3)) * n_tokens AS capacity
     FROM counts
 ), total AS (
     SELECT sum(n_tokens)::DOUBLE * 1.5 AS b, count(*) AS k FROM counts
@@ -3300,19 +3757,19 @@ def q_dedup_minhash_weighted(spark, sf):
 
 def _sql_dedup_minhash_weighted() -> str:
     us = ",\n           ".join(
-        "((('0x' || substr(md5(w || '|' || seed::VARCHAR || '|"
-        f"{j}'), 1, 15))::BIGINT % 1073741824) + 1) / 1073741826.0 AS u{j}"
+        "((" + _sql_md5_int(f"w || '|' || seed::VARCHAR || '|{j}'")
+        + f" % 1073741824) + 1) / 1073741826.0 AS u{j}"
         for j in (1, 2, 3, 4, 5)
     )
     wide = ",\n           ".join(
         f"min(CASE WHEN seed = {i} THEN w END) AS t{i}" for i in range(8)
     )
     bands = _sql_band_keys([f"md5(t{i})" for i in range(8)], 2, sep=",\n        ")
-    return r"""
+    return rf"""
 WITH tf AS (
     SELECT id, w, count(*) AS tf FROM (
         SELECT doc_id AS id,
-               unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
+               unnest({_sql_tokens()}) AS w
         FROM documents
     ) GROUP BY 1, 2
 ), seeded AS (
@@ -3363,45 +3820,11 @@ def q_naive_bayes_langid(spark, sf):
     )
 
 
-SQL_NAIVE_BAYES_LANGID = r"""
+SQL_NAIVE_BAYES_LANGID = rf"""
 WITH tr AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
 te AS (SELECT * FROM documents WHERE doc_id % 5 = 0),
-tr_tok AS (
-    SELECT lang AS c,
-           unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
-    FROM tr
-),
-cwc AS (SELECT c, w, count(*) AS cnt FROM tr_tok GROUP BY 1, 2),
-ctok AS (SELECT c, sum(cnt) AS tc FROM cwc GROUP BY 1),
-vocab AS (SELECT count(DISTINCT w) AS v FROM cwc),
-cdocs AS (SELECT lang AS c, count(*) AS nc FROM tr GROUP BY 1),
-nd AS (SELECT count(*) AS nd FROM tr),
-classes AS (
-    SELECT c, tc, v,
-           round(ln(nc / nd), 8)::DECIMAL(28,10) AS log_prior,
-           round(ln(1.0 / (tc + v)), 8)::DECIMAL(28,10) AS lp_unseen
-    FROM cdocs CROSS JOIN nd JOIN ctok USING (c) CROSS JOIN vocab
-),
-model AS (
-    SELECT c, w,
-           round(ln((cnt + 1) / (tc + v)), 8)::DECIMAL(28,10) AS lp
-    FROM cwc JOIN ctok USING (c) CROSS JOIN vocab
-),
-te_tok AS (
-    SELECT id, w, count(*) AS n FROM (
-        SELECT doc_id AS id,
-               unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
-        FROM te
-    ) GROUP BY 1, 2
-),
-ll AS (
-    SELECT t.id, cl.c,
-           sum(t.n * coalesce(m.lp, cl.lp_unseen)) AS ll
-    FROM te_tok t
-    CROSS JOIN classes cl
-    LEFT JOIN model m ON m.c = cl.c AND m.w = t.w
-    GROUP BY 1, 2
-),
+{_sql_nb_model_ctes()},
+{_sql_nb_loglik_ctes("te")},
 best AS (
     SELECT id, c AS pred, (ll + log_prior)::DOUBLE AS score,
            row_number() OVER (
@@ -3519,10 +3942,10 @@ def q_zipf_slope(spark, sf):
     return zipf_slope(_load(spark, sf, "documents"), top_r=100)
 
 
-SQL_ZIPF_SLOPE = r"""
+SQL_ZIPF_SLOPE = rf"""
 WITH counts AS (
     SELECT w, count(*) AS cnt FROM (
-        SELECT unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
+        SELECT unnest({_sql_tokens()}) AS w
         FROM documents
     ) GROUP BY 1
 ), top AS (
@@ -3556,7 +3979,7 @@ def _sql_dedup_minhash_oph() -> str:
     """Oracle: identical OPH pipeline — per-doc shingle hash list, list_min
     per (h % 8) bin (NULL when empty), rotation-densified coalesce chain,
     md5 band keys, banded self-join."""
-    base = "(('0x' || substr(md5(s), 1, 15))::BIGINT % 1073741824)"
+    base = _sql_shingle_hash("s")
     k, c = 8, 1073741824
     bm = ",\n           ".join(
         f"list_min([x for x in hh if x % {k} = {j}]) AS m{j}" for j in range(k)
@@ -3601,22 +4024,9 @@ def q_dedup_groups(spark, sf):
 
 def _sql_dedup_groups() -> str:
     """Oracle: same banded pairs, components via recursive min-label
-    reachability (a label l reaches node x through monotone frontier
-    l < next-node; min received label == component min)."""
+    reachability."""
     return f"""
-WITH RECURSIVE {_sql_minhash_ctes("documents")},
-pairs AS (
-{_sql_banded_pairs("    ")}
-), edges AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION
-    SELECT id_b AS u, id_a AS v FROM pairs
-), reach(node, label) AS (
-    SELECT DISTINCT u, u FROM edges
-    UNION
-    SELECT e.v, r.label FROM reach r JOIN edges e ON e.u = r.node
-    WHERE r.label < e.v
-)
+{_sql_minhash_components()}
 SELECT node AS id, min(label) AS group_id,
        (node = min(label)) AS is_representative
 FROM reach GROUP BY node
@@ -3675,19 +4085,7 @@ def q_dedup_cluster_keep_best(spark, sf):
 
 def _sql_dedup_cluster_keep_best() -> str:
     return f"""
-WITH RECURSIVE {_sql_minhash_ctes("documents")},
-pairs AS (
-{_sql_banded_pairs("    ")}
-), edges AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION
-    SELECT id_b AS u, id_a AS v FROM pairs
-), reach(node, label) AS (
-    SELECT DISTINCT u, u FROM edges
-    UNION
-    SELECT e.v, r.label FROM reach r JOIN edges e ON e.u = r.node
-    WHERE r.label < e.v
-), grp AS (
+{_sql_minhash_components()}, grp AS (
     SELECT node AS doc_id, min(label) AS group_id FROM reach GROUP BY node
 ), {_sql_quality_model_ctes()},
 scored AS (
@@ -3726,11 +4124,11 @@ def _sql_dedup_simhash() -> str:
 WITH tok AS (
     SELECT doc_id,
            unnest(list_distinct(
-               string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')
+               {_sql_tokens()}
            )) AS t
     FROM documents
 ), h AS (
-    SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT AS h FROM tok
+    SELECT doc_id, {_sql_md5_int('t')} AS h FROM tok
 ), v AS (
     SELECT doc_id,
            {votes}
@@ -3785,33 +4183,9 @@ def q_dedup_embedding(spark, sf):
     return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
-def _sql_lsh_bucket(n_planes: int, offset: int) -> str:
-    """DuckDB mirror of sign_lsh_buckets_arrow's integer-exact plane family:
-    fixed-point components floor(x·10⁶) (exact in doubles) against ±1 planes
-    (md5 top hex digit ≥ 8) — an *integer* projection, so summation order
-    can't matter and both engines agree bit-for-bit by construction."""
-    return f"""(list_sum(list_transform(range({n_planes}), p ->
-      CASE WHEN list_sum(list_transform(range(len(v)), d ->
-        floor(v[d+1] * 1000000.0)::BIGINT *
-        (CASE WHEN ('0x' || substr(md5((p + {offset})::VARCHAR || ',' || d::VARCHAR), 1, 1))::INT >= 8
-              THEN 1 ELSE -1 END)
-      )) > 0 THEN 2**p ELSE 0 END)))::BIGINT"""
-
-
 SQL_DEDUP_EMBEDDING = f"""
 WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-b AS (
-  SELECT vec_id, v,
-    {_sql_lsh_bucket(8, 0)} AS b0,
-    {_sql_lsh_bucket(8, 8)} AS b1
-  FROM base),
-cand AS (
-  SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.v AS va, c.v AS vb
-  FROM b a JOIN b c ON a.b0 = c.b0 AND a.vec_id < c.vec_id
-  UNION
-  SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.v AS va, c.v AS vb
-  FROM b a JOIN b c ON a.b1 = c.b1 AND a.vec_id < c.vec_id
-)
+{_sql_lsh_candidates()}
 SELECT DISTINCT id_a, id_b,
        round(
          list_dot_product(va, vb)
@@ -3897,18 +4271,7 @@ tru AS (
     FROM base a JOIN base c ON a.vec_id < c.vec_id)
   WHERE cos > 0.40
 ),
-b AS (
-  SELECT vec_id, v,
-    {_sql_lsh_bucket(8, 0)} AS b0,
-    {_sql_lsh_bucket(8, 8)} AS b1
-  FROM base),
-cand AS (
-  SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.v AS va, c.v AS vb
-  FROM b a JOIN b c ON a.b0 = c.b0 AND a.vec_id < c.vec_id
-  UNION
-  SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.v AS va, c.v AS vb
-  FROM b a JOIN b c ON a.b1 = c.b1 AND a.vec_id < c.vec_id
-),
+{_sql_lsh_candidates()},
 fnd AS (
   SELECT count(*) AS found_pairs FROM (
     SELECT DISTINCT id_a, id_b FROM cand
@@ -4022,13 +4385,13 @@ def q_jaccard_adjacent(spark, sf):
     )
 
 
-SQL_JACCARD_ADJACENT = r"""
+SQL_JACCARD_ADJACENT = rf"""
 WITH sh AS (
     SELECT doc_id,
            list_distinct([array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]) AS s
     FROM (
         SELECT doc_id,
-               string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
+               {_sql_tokens()} AS t
         FROM documents WHERE doc_id < 100
     )
 )
@@ -4077,13 +4440,13 @@ def q_ann_lsh_topk(spark, sf):
     )
 
 
-SQL_ANN_LSH_TOPK = """
+SQL_ANN_LSH_TOPK = f"""
 WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 b AS (
   SELECT vec_id, v,
     (list_sum(list_transform(range(6), p ->
       CASE WHEN list_sum(list_transform(range(len(v)), d ->
-        v[d+1] * (('0x' || substr(md5(p::VARCHAR || ',' || d::VARCHAR), 1, 8))::BIGINT
+        v[d+1] * ({_sql_md5_int("p::VARCHAR || ',' || d::VARCHAR", 8)}
                    / 4294967296.0 - 0.5)
       )) > 0 THEN 2**p ELSE 0 END)))::BIGINT AS bucket
   FROM base),
@@ -4131,7 +4494,7 @@ qp AS (
     list_transform(range(6), p ->
       list_sum(list_transform(range(len(v)), d ->
         floor(v[d+1] * 1000000.0)::BIGINT *
-        (CASE WHEN ('0x' || substr(md5(p::VARCHAR || ',' || d::VARCHAR), 1, 1))::INT >= 8
+        (CASE WHEN {_sql_md5_int("p::VARCHAR || ',' || d::VARCHAR", 1)} >= 8
               THEN 1 ELSE -1 END)))) AS projs
   FROM base WHERE vec_id < 5),
 qb AS (
@@ -4314,9 +4677,9 @@ def q_trigram_lm_score(spark, sf):
     return trigram_lm_scores(docs)
 
 
-SQL_TRIGRAM_LM_SCORE = r"""
+SQL_TRIGRAM_LM_SCORE = rf"""
 WITH norm AS (
-    SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS nt
+    SELECT doc_id, {_sql_normalize()} AS nt
     FROM documents
 ), grams AS (
     SELECT doc_id, unnest([substr(nt, i, 3)
@@ -4350,15 +4713,7 @@ def _sql_winnow_fingerprints(w: int = 4) -> str:
     )
 
     return rf"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
-    FROM documents
-), h AS (
-    SELECT doc_id,
-           [(('0x' || substr(md5(x), 1, 15))::BIGINT % 1073741824) for x in tk] AS th
-    FROM t
-), g AS (
+{_sql_token_hash_ctes()}, g AS (
     SELECT doc_id,
            [(th[i] * {ROLLING_B2} + th[i+1] * {ROLLING_B} + th[i+2]) % {ROLLING_P}
             for i in range(1, len(th) - 1)] AS gr
@@ -4401,18 +4756,9 @@ def _sql_dedup_winnow(w: int = 4) -> str:
     return rf"""
 WITH fpset AS (
     SELECT doc_id, pos, fp FROM ({_sql_winnow_fingerprints(w)})
-), t2 AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
-    FROM documents
-), counts AS (
+), {_sql_doc_tokens("t2")}, counts AS (
     SELECT doc_id, len(tk) AS n_tokens FROM t2
-), per_doc AS (
-    SELECT fp, doc_id, min(pos) AS mp FROM fpset GROUP BY 1, 2
-), winners AS (
-    SELECT fp, min(doc_id) AS wd, arg_min(mp, doc_id) AS wp
-    FROM per_doc GROUP BY fp HAVING count(*) >= 2
-), rem AS (
+), {_sql_winner_ctes("fpset")}, rem AS (
     SELECT DISTINCT f.doc_id, f.pos
     FROM fpset f JOIN winners USING (fp)
     WHERE NOT (f.doc_id = winners.wd AND f.pos = winners.wp)
@@ -4434,41 +4780,7 @@ WITH fpset AS (
 ), keptw AS (
     SELECT DISTINCT wd AS doc_id, unnest(range(wp, wp + 3)) AS rp
     FROM winners
-), cut AS (
-    SELECT r.doc_id, r.rp FROM removed r
-    WHERE NOT EXISTS (
-        SELECT 1 FROM keptw k WHERE k.doc_id = r.doc_id AND k.rp = r.rp
-    )
-), run_len AS (
-    SELECT doc_id, grp, count(*) AS rl FROM (
-        SELECT doc_id,
-               rp - row_number() OVER (PARTITION BY doc_id ORDER BY rp) AS grp
-        FROM cut
-    ) GROUP BY 1, 2
-), run_stats AS (
-    SELECT doc_id, count(*) AS n_runs_cut, max(rl) AS max_run_len
-    FROM run_len GROUP BY 1
-), tok AS (
-    SELECT doc_id, generate_subscripts(tk, 1) AS tp, unnest(tk) AS tok FROM t2
-), kept AS (
-    SELECT k.doc_id, k.tp, k.tok FROM tok k
-    WHERE NOT EXISTS (
-        SELECT 1 FROM cut c WHERE c.doc_id = k.doc_id AND c.rp = k.tp
-    )
-), reass AS (
-    SELECT doc_id, count(*) AS n_kept,
-           array_to_string(list(tok ORDER BY tp), ' ') AS text_dedup
-    FROM kept GROUP BY doc_id
-)
-SELECT c.doc_id, c.n_tokens,
-       coalesce(r.n_kept, 0) AS n_kept,
-       c.n_tokens - coalesce(r.n_kept, 0) AS n_removed,
-       coalesce(s.n_runs_cut, 0) AS n_runs_cut,
-       coalesce(s.max_run_len, 0) AS max_run_len,
-       coalesce(r.text_dedup, '') AS text_dedup
-FROM counts c
-LEFT JOIN reass r USING (doc_id)
-LEFT JOIN run_stats s USING (doc_id)
+), {_sql_cut_runs_tail("t2")}
 """
 
 
@@ -4521,19 +4833,8 @@ def q_decontaminate(spark, sf):
     )
 
 
-SQL_DECONTAMINATE = r"""
-WITH toks AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-    FROM documents
-), grams AS (
-    SELECT doc_id,
-           unnest(CASE WHEN len(t) >= 3
-                  THEN list_distinct([array_to_string(t[i:i+2], ' ')
-                                      for i in range(1, len(t) - 1)])
-                  ELSE [] END) AS g
-    FROM toks
-)
+SQL_DECONTAMINATE = rf"""
+{_sql_distinct_gram_ctes(3)}
 SELECT DISTINCT c.doc_id
 FROM grams c
 JOIN (SELECT DISTINCT g FROM grams WHERE doc_id < 5) e USING (g)
@@ -4613,19 +4914,8 @@ def q_ngram_novelty(spark, sf):
     )
 
 
-SQL_NGRAM_NOVELTY = r"""
-WITH toks AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-    FROM documents
-), grams AS (
-    SELECT doc_id,
-           unnest(CASE WHEN len(t) >= 3
-                  THEN list_distinct([array_to_string(t[i:i+2], ' ')
-                                      for i in range(1, len(t) - 1)])
-                  ELSE [] END) AS g
-    FROM toks
-), ref AS (
+SQL_NGRAM_NOVELTY = rf"""
+{_sql_distinct_gram_ctes(3)}, ref AS (
     SELECT DISTINCT g FROM grams WHERE doc_id < 100
 )
 SELECT c.doc_id,
@@ -4647,16 +4937,15 @@ def q_text_stats(spark, sf):
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
         F.length("text").alias("n_chars_actual"),
-        doc_fingerprint(F.col("text")).alias("fp"),
+        exact_dup_key(F.col("text")).alias("fp"),
     )
 
 
-SQL_TEXT_STATS = r"""
+SQL_TEXT_STATS = rf"""
 SELECT doc_id,
-       CASE WHEN length(trim(text)) = 0 THEN 0
-            ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens,
+       {_sql_token_count(indent=12)} AS n_tokens,
        length(text) AS n_chars_actual,
-       md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+       md5({_sql_normalize()}) AS fp
 FROM documents
 """
 
@@ -4701,10 +4990,8 @@ def _sql_scored_ctes() -> str:
          0.5 * (CASE WHEN length(text) > 0
                 THEN length(regexp_replace(text, '[^A-Za-z]', '', 'g'))::DOUBLE / length(text)
                 ELSE 0.0 END)
-       + 0.25 * (CASE WHEN (CASE WHEN length(trim(text)) = 0 THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '\s+')) END) > 0
-                  AND length(text)::DOUBLE / (CASE WHEN length(trim(text)) = 0 THEN 1
-                        ELSE len(regexp_split_to_array(trim(text), '\s+')) END) BETWEEN 3 AND 12
+       + 0.25 * (CASE WHEN ({_sql_token_count(indent=24)}) > 0
+                  AND length(text)::DOUBLE / ({_sql_token_count(indent=24, blank=1)}) BETWEEN 3 AND 12
                  THEN 1.0 ELSE 0.0 END)
        + 0.25 * least(length(text) / 200.0, 1.0), 6) AS quality,
        CASE WHEN g = 0 THEN 'und' {case} ELSE 'und' END AS lang_guess
@@ -4732,8 +5019,7 @@ def _sql_text_tokens_bpe() -> str:
     return rf"""
 SELECT doc_id,
        len(regexp_extract_all(text, '{pattern}')) AS n_bpe,
-       CASE WHEN length(trim(text)) = 0 THEN 0
-            ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_ws
+       {_sql_token_count(indent=12)} AS n_ws
 FROM documents
 """
 
@@ -4753,15 +5039,7 @@ def _sql_doc_rolling_fingerprint() -> str:
     )
 
     return rf"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
-    FROM documents
-), h AS (
-    SELECT doc_id,
-           [(('0x' || substr(md5(x), 1, 15))::BIGINT % 1073741824) for x in tk] AS th
-    FROM t
-)
+{_sql_token_hash_ctes()}
 SELECT doc_id,
        CASE WHEN len(th) >= 3 THEN list_min(
             [(th[i] * {ROLLING_B2} + th[i+1] * {ROLLING_B} + th[i+2]) % {ROLLING_P}
@@ -4791,8 +5069,7 @@ def _sql_text_quality_signals() -> str:
 WITH base AS (
     SELECT doc_id, text, ' ' || lower(text) || ' ' AS p,
            length(text)::DOUBLE AS n,
-           (CASE WHEN length(trim(text)) = 0 THEN 0
-                 ELSE len(regexp_split_to_array(trim(text), '\s+')) END)::DOUBLE AS toks
+           ({_sql_token_count(indent=17)})::DOUBLE AS toks
     FROM documents
 )
 SELECT doc_id,
@@ -4895,10 +5172,10 @@ def q_corpus_sample(spark, sf):
     return sampled.select("doc_id", "source")
 
 
-SQL_CORPUS_SAMPLE = """
+SQL_CORPUS_SAMPLE = f"""
 WITH keyed AS (
     SELECT doc_id, source,
-           ('0x' || substr(md5('corpus-v1' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+           {_sql_md5_int("'corpus-v1' || CAST(doc_id AS VARCHAR)")}
                % 1000000 AS sk
     FROM documents
 )
@@ -4931,18 +5208,14 @@ def q_corpus_split(spark, sf):
 
 # hash_split assigns cumulative ranges in sorted-name order:
 # test [0, 0.1) -> train [0.1, 0.9) -> validation (rest)
-SQL_CORPUS_SPLIT = """
+SQL_CORPUS_SPLIT = f"""
 WITH keyed AS (
     SELECT doc_id,
-           ('0x' || substr(md5('split-v1' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+           {_sql_md5_int("'split-v1' || CAST(doc_id AS VARCHAR)")}
                % 1000000 AS sk
     FROM documents
 )
-SELECT doc_id,
-       CASE WHEN sk < 100000 THEN 'test'
-            WHEN sk < 900000 THEN 'train'
-            ELSE 'validation' END AS split
-FROM keyed
+{_sql_hash_split_select()}
 """
 
 
@@ -4958,11 +5231,11 @@ def q_corpus_sample_topk(spark, sf):
     ).select("doc_id", "source")
 
 
-SQL_CORPUS_SAMPLE_TOPK = """
+SQL_CORPUS_SAMPLE_TOPK = f"""
 SELECT doc_id, source
 FROM (
     SELECT doc_id, source,
-           ('0x' || substr(md5('sample-v1' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+           {_sql_md5_int("'sample-v1' || CAST(doc_id AS VARCHAR)")}
                % 1000000 AS sk
     FROM documents
 )
@@ -5092,10 +5365,10 @@ def q_repetition_signals(spark, sf):
     )
 
 
-SQL_REPETITION_SIGNALS = r"""
+SQL_REPETITION_SIGNALS = rf"""
 WITH t AS (
     SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks,
+           {_sql_tokens()} AS toks,
            list_filter([trim(l) for l in string_split(text, chr(10))],
                        l -> len(l) > 0) AS lines
     FROM documents
@@ -5128,12 +5401,8 @@ def q_chunk_documents(spark, sf):
     return chunk_documents(docs, chunk_tokens=16, stride=12)
 
 
-SQL_CHUNK_DOCUMENTS = r"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-    FROM documents
-), s AS (
+SQL_CHUNK_DOCUMENTS = rf"""
+WITH {_sql_doc_tokens("t", "toks")}, s AS (
     SELECT doc_id, toks,
            unnest(range(0, greatest(len(toks), 1), 12)) AS st
     FROM t
@@ -5155,10 +5424,10 @@ def q_sequence_pack(spark, sf):
     return sequence_pack(docs, budget=256, n_shards=8)
 
 
-SQL_SEQUENCE_PACK = r"""
+SQL_SEQUENCE_PACK = rf"""
 WITH t AS (
     SELECT doc_id, doc_id % 8 AS shard,
-           len(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS n_tokens
+           len({_sql_tokens()}) AS n_tokens
     FROM documents
 )
 SELECT doc_id, shard,
@@ -5177,10 +5446,10 @@ def q_tfidf_top_terms(spark, sf):
     return tfidf_top_terms(docs, k=3)
 
 
-SQL_TFIDF_TOP_TERMS = r"""
+SQL_TFIDF_TOP_TERMS = rf"""
 WITH toks AS (
     SELECT doc_id,
-           unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS term
+           unnest({_sql_tokens()}) AS term
     FROM documents
 ), tf AS (
     SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term
@@ -5322,10 +5591,10 @@ def q_wordpiece_fertility(spark, sf):
     return wordpiece_fertility(docs, vocab)
 
 
-SQL_WORDPIECE_FERTILITY = r"""
+SQL_WORDPIECE_FERTILITY = rf"""
 WITH RECURSIVE tok AS (
     SELECT doc_id,
-           unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
+           unnest({_sql_tokens()}) AS w
     FROM documents
 ), occ AS (
     SELECT doc_id, w, count(*) AS n FROM tok WHERE len(w) > 0 GROUP BY 1, 2
@@ -5478,7 +5747,7 @@ def _sql_unigram_fertility(max_len: int = 16, max_piece: int = 4) -> str:
     return rf"""
 WITH tok AS (
     SELECT doc_id,
-           unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
+           unnest({_sql_tokens()}) AS w
     FROM documents
 ), occ AS MATERIALIZED (
     SELECT doc_id, w, count(*) AS n FROM tok WHERE len(w) > 0 GROUP BY 1, 2
@@ -5549,9 +5818,11 @@ def q_tokenizer_fertility(spark, sf):
     )
 
 
-def _sql_tokenizer_fertility() -> str:
+def _sql_tokenizer_fertility(bpe_ctes: str) -> str:
+    """Per-language fertility (tokens per word) of the BPE chain
+    ``bpe_ctes`` (``_sql_bpe_ctes`` or ``_sql_bpe_bytes_ctes``)."""
     return f"""
-WITH {_sql_bpe_ctes()},
+WITH {bpe_ctes},
 enc AS (
   SELECT doc_id,
          count(*) AS nw,
@@ -5964,18 +6235,8 @@ def q_rollup_histogram(spark, sf):
     )
 
 
-SQL_ROLLUP_HISTOGRAM = """
-WITH binned AS (
-    SELECT (epoch_ms(ts) // 86400000) * 86400000 AS day_ms,
-           event_type,
-           CASE WHEN value < 0.0 THEN 0
-                WHEN value < 100.0 THEN 1
-                WHEN value < 200.0 THEN 2
-                WHEN value < 300.0 THEN 3
-                WHEN value < 400.0 THEN 4
-                ELSE 5 END AS bin_id
-    FROM events
-), bins AS (
+SQL_ROLLUP_HISTOGRAM = f"""
+WITH {_sql_daily_bins()}, bins AS (
     SELECT DISTINCT day_ms, event_type FROM binned
 ), grid AS (
     SELECT day_ms, event_type, unnest(range(0, 6)) AS bin_id FROM bins
@@ -6223,19 +6484,8 @@ def q_bloom_decontaminate(spark, sf):
     return hits.select("doc_id").distinct()
 
 
-SQL_BLOOM_DECONTAMINATE = r"""
-WITH toks AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-    FROM documents
-), grams AS (
-    SELECT doc_id,
-           unnest(CASE WHEN len(t) >= 4
-                  THEN list_distinct([array_to_string(t[i:i+3], ' ')
-                                      for i in range(1, len(t) - 2)])
-                  ELSE [] END) AS g
-    FROM toks
-)
+SQL_BLOOM_DECONTAMINATE = rf"""
+{_sql_distinct_gram_ctes(4)}
 SELECT DISTINCT c.doc_id
 FROM grams c
 JOIN (SELECT DISTINCT g FROM grams WHERE doc_id < 5) e ON c.g = e.g
@@ -6330,12 +6580,12 @@ def q_source_quota_sample(spark, sf):
     ).select("doc_id", "source")
 
 
-SQL_SOURCE_QUOTA_SAMPLE = """
+SQL_SOURCE_QUOTA_SAMPLE = f"""
 SELECT doc_id, source FROM (
     SELECT doc_id, source,
            row_number() OVER (
                PARTITION BY source
-               ORDER BY ('0x' || substr(md5('quota-v1' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+               ORDER BY {_sql_md5_int("'quota-v1' || CAST(doc_id AS VARCHAR)")}
                         % 1000000, doc_id) AS rn
     FROM documents
 )
@@ -6400,7 +6650,7 @@ def q_domain_cap_sample(spark, sf):
     ).select("doc_id", "domain", "url_canon")
 
 
-SQL_DOMAIN_CAP_SAMPLE = r"""
+SQL_DOMAIN_CAP_SAMPLE = rf"""
 WITH parts AS (
   SELECT doc_id,
     CASE WHEN doc_id % 2 = 0 THEN 'http' ELSE 'https' END AS scheme,
@@ -6470,7 +6720,7 @@ WITH parts AS (
 SELECT doc_id, domain, url_canon FROM (
   SELECT doc_id, domain, url_canon,
     row_number() OVER (PARTITION BY domain ORDER BY
-      ('0x' || substr(md5('domain-cap-v1' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+      {_sql_md5_int("'domain-cap-v1' || CAST(doc_id AS VARCHAR)")}
         % 1000000, doc_id) AS rn
   FROM dom
 ) WHERE rn <= 20
@@ -6494,10 +6744,10 @@ def q_weighted_sample(spark, sf):
     ).select("doc_id", "source", "n_chars")
 
 
-SQL_WEIGHTED_SAMPLE = """
+SQL_WEIGHTED_SAMPLE = f"""
 SELECT doc_id, source, n_chars
 FROM documents
-WHERE ('0x' || substr(md5('weighted-v1' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+WHERE {_sql_md5_int("'weighted-v1' || CAST(doc_id AS VARCHAR)")}
       % 1000000
     < least(greatest(n_chars / 800.0, 0.0), 1.0) * 1000000.0
 """
@@ -6684,18 +6934,8 @@ def q_rollup_quantile(spark, sf):
     )
 
 
-SQL_ROLLUP_QUANTILE = """
-WITH binned AS (
-    SELECT (epoch_ms(ts) // 86400000) * 86400000 AS day_ms,
-           event_type,
-           CASE WHEN value < 0.0 THEN 0
-                WHEN value < 100.0 THEN 1
-                WHEN value < 200.0 THEN 2
-                WHEN value < 300.0 THEN 3
-                WHEN value < 400.0 THEN 4
-                ELSE 5 END AS bin_id
-    FROM events
-), c AS (
+SQL_ROLLUP_QUANTILE = f"""
+WITH {_sql_daily_bins()}, c AS (
     SELECT day_ms, event_type, bin_id, cnt,
            sum(cnt) OVER (PARTITION BY day_ms, event_type
                           ORDER BY bin_id) AS cum,
@@ -6746,11 +6986,11 @@ def q_incremental_dedup(spark, sf):
     return winners.select("doc_id", "fp")
 
 
-SQL_INCREMENTAL_DEDUP = r"""
+SQL_INCREMENTAL_DEDUP = rf"""
 WITH keyed AS (
     SELECT doc_id,
            md5(array_to_string(
-               (string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '))[1:8],
+               ({_sql_tokens()})[1:8],
                ' ')) AS fp
     FROM documents
 ), fresh AS (
@@ -6824,10 +7064,10 @@ def q_exact_decontaminate(spark, sf):
     )
 
 
-SQL_EXACT_DECONTAMINATE = r"""
+SQL_EXACT_DECONTAMINATE = rf"""
 WITH n AS (
     SELECT doc_id,
-           regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS ntext
+           {_sql_normalize()} AS ntext
     FROM documents
 ), needles AS (
     SELECT DISTINCT array_to_string((string_split(ntext, ' '))[1:3], ' ') AS needle
@@ -6867,19 +7107,7 @@ def q_dedup_best_of_cluster(spark, sf):
 
 def _sql_dedup_best_of_cluster() -> str:
     return f"""
-WITH RECURSIVE {_sql_minhash_ctes("documents")},
-pairs AS (
-{_sql_banded_pairs("    ")}
-), edges AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION
-    SELECT id_b AS u, id_a AS v FROM pairs
-), reach(node, label) AS (
-    SELECT DISTINCT u, u FROM edges
-    UNION
-    SELECT e.v, r.label FROM reach r JOIN edges e ON e.u = r.node
-    WHERE r.label < e.v
-), comp AS (
+{_sql_minhash_components()}, comp AS (
     SELECT node AS id, min(label) AS group_id FROM reach GROUP BY node
 ), {_sql_scored_ctes()}
 SELECT group_id, n_members, keeper_id, best_quality FROM (
@@ -6914,24 +7142,8 @@ def q_dedup_paragraphs(spark, sf):
     return dedup_paragraphs(seg)
 
 
-SQL_DEDUP_PARAGRAPHS = r"""
-WITH tk AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-    FROM documents
-), st AS (
-    SELECT doc_id, toks, unnest(range(0, greatest(len(toks), 1), 10)) AS s
-    FROM tk
-), seg AS (
-    SELECT doc_id, s // 10 AS pos, array_to_string(toks[s+1:s+10], ' ') AS para
-    FROM st
-), nz AS (
-    SELECT * FROM seg WHERE len(para) > 0
-), k AS (
-    SELECT doc_id, pos, para,
-           row_number() OVER (PARTITION BY md5(para) ORDER BY doc_id, pos) AS rn
-    FROM nz
-), kept AS (
+SQL_DEDUP_PARAGRAPHS = rf"""
+{_sql_paragraph_ctes("k")}, kept AS (
     SELECT doc_id, count(*) AS n_kept,
            string_agg(para, chr(10) ORDER BY pos) AS text_dedup
     FROM k WHERE rn = 1 GROUP BY doc_id
@@ -6974,11 +7186,7 @@ def q_dedup_paragraphs_near(spark, sf):
 
 def _sql_dedup_paragraphs_near() -> str:
     return rf"""
-WITH p0 AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-    FROM documents
-), p1 AS (
+WITH {_sql_doc_tokens("p0", "toks")}, p1 AS (
     SELECT doc_id, toks, unnest(range(0, greatest(len(toks), 1), 10)) AS s
     FROM p0
 ), paras AS (
@@ -7065,22 +7273,14 @@ def q_pretraining_prep(spark, sf):
 def _sql_pretraining_prep() -> str:
     return rf"""
 WITH {_sql_scored_ctes()},
-rep AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-    FROM documents
-), gated AS (
+{_sql_doc_tokens("rep", "toks")}, gated AS (
     SELECT s.doc_id, s.text
     FROM scored s JOIN rep r USING (doc_id)
     WHERE s.quality >= 0.5
       AND round(CASE WHEN len(r.toks) > 0
                 THEN 1.0 - len(list_distinct(r.toks))::DOUBLE / len(r.toks)
                 ELSE 0.0 END, 6) <= 0.8
-), t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-    FROM gated
-), ch AS (
+), {_sql_doc_tokens("t", "toks", "gated")}, ch AS (
     SELECT doc_id, st // 12 AS chunk_id, len(toks[st+1 : st+16]) AS n_tokens
     FROM (SELECT doc_id, toks, unnest(range(0, greatest(len(toks), 1), 12)) AS st FROM t)
 ), units AS (
@@ -7403,10 +7603,10 @@ def q_inverted_index(spark, sf):
     ).where(F.col("df") >= 5)
 
 
-SQL_INVERTED_INDEX = r"""
+SQL_INVERTED_INDEX = rf"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS term
+         unnest({_sql_tokens()}) AS term
   FROM documents)
 SELECT term, count(DISTINCT doc_id) AS df, count(*) AS tf,
        list_aggr(list_sort(list_distinct(list(doc_id))), 'string_agg', ',') AS postings_csv
@@ -7562,9 +7762,9 @@ def q_bpe_merge_candidates(spark, sf):
     )
 
 
-SQL_BPE_MERGE_CANDIDATES = r"""
+SQL_BPE_MERGE_CANDIDATES = rf"""
 WITH toks AS (
-  SELECT unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS tok
+  SELECT unnest({_sql_tokens()}) AS tok
   FROM documents
 ), pairs AS (
   SELECT substr(tok, i, 2) AS pair
@@ -7608,10 +7808,12 @@ def q_bpe_encode(spark, sf):
     return bpe_encode_docs(docs, BPE_MERGES_V1)
 
 
-def _sql_bpe_ctes() -> str:
-    """CTE chain ``words → vocab → e0 … eN → v`` replaying the merge folds
-    of ``BPE_MERGES_V1`` over the distinct vocabulary (shared by
-    `bpe_encode` and the composed `token_budget_pack`)."""
+def _sql_bpe_merge_ctes(merges: list[tuple[str, str]], seed: str) -> str:
+    """CTE chain ``words → vocab → <seed> → e1 … eN → v`` of
+    functions/bpe.py ``bpe_encode_docs``: the pre-tokenizer's words, the
+    distinct vocabulary, ``seed`` (CTEs ending in ``e0(word, enc)``, the
+    word's initial symbols joined by chr(31)), one fold per merge of
+    ``merges``, and each word's token count."""
     pattern = BPE_PATTERN.replace("'", "''")
 
     def step(a: str, b: str) -> str:
@@ -7625,23 +7827,28 @@ def _sql_bpe_ctes() -> str:
 
     levels = ",\n".join(
         f"e{i + 1} AS (SELECT word, {step(a, b)} AS enc FROM e{i})"
-        for i, (a, b) in enumerate(BPE_MERGES_V1)
+        for i, (a, b) in enumerate(merges)
     )
-    last = len(BPE_MERGES_V1)
     return f"""words AS (
   SELECT doc_id, unnest(l) AS word, generate_subscripts(l, 1) AS pos
   FROM (SELECT doc_id, regexp_extract_all(text, '{pattern}') AS l FROM documents)
 ),
 vocab AS (SELECT DISTINCT word FROM words),
-e0 AS (
+{seed},
+{levels},
+v AS (
+  SELECT word, enc, len(string_split(enc, chr(31))) AS n_tok FROM e{len(merges)}
+)"""
+
+
+def _sql_bpe_ctes() -> str:
+    """The merge folds of ``BPE_MERGES_V1`` over characters (shared by
+    `bpe_encode` and the composed `token_budget_pack`)."""
+    return _sql_bpe_merge_ctes(BPE_MERGES_V1, """e0 AS (
   SELECT word,
          array_to_string(regexp_extract_all(word, '.'), chr(31)) AS enc
   FROM vocab
-),
-{levels},
-v AS (
-  SELECT word, enc, len(string_split(enc, chr(31))) AS n_tok FROM e{last}
-)"""
+)""")
 
 
 def _sql_bpe_encode() -> str:
@@ -7766,7 +7973,7 @@ def q_temperature_mix(spark, sf):
     return out.select("doc_id", "lang")
 
 
-SQL_TEMPERATURE_MIX = """
+SQL_TEMPERATURE_MIX = f"""
 WITH c AS (SELECT lang, count(*) AS n_s FROM documents GROUP BY 1),
 w AS (SELECT lang, n_s, round(sqrt(n_s), 6) AS w_s FROM c),
 t AS (SELECT CAST(sum(CAST(w_s AS DECIMAL(28,6))) AS DOUBLE) AS sum_w FROM w),
@@ -7776,7 +7983,7 @@ r AS (SELECT lang,
       FROM w, t)
 SELECT doc_id, lang
 FROM documents d JOIN r USING (lang)
-WHERE ('0x' || substr(md5('tmix-v1' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+WHERE {_sql_md5_int("'tmix-v1' || CAST(doc_id AS VARCHAR)")}
       % 1000000 < r.thr
 """
 
@@ -8028,10 +8235,10 @@ def q_vocab_overlap(spark, sf):
     )
 
 
-SQL_VOCAB_OVERLAP = r"""
+SQL_VOCAB_OVERLAP = rf"""
 WITH terms AS (
   SELECT DISTINCT source,
-         unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS term
+         unnest({_sql_tokens()}) AS term
   FROM documents
 ), t AS (SELECT source, term FROM terms WHERE length(term) >= 3),
 sizes AS (SELECT source, count(*) AS n FROM t GROUP BY 1),
@@ -8136,15 +8343,15 @@ def q_span_corruption(spark, sf):
     )
 
 
-SQL_SPAN_CORRUPTION = r"""
+SQL_SPAN_CORRUPTION = rf"""
 WITH t AS (
   SELECT doc_id,
-         string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+         {_sql_tokens()} AS toks
   FROM documents
 ), base AS (
   SELECT doc_id, len(toks) AS n_tokens,
          list_filter(range(0, len(toks)),
-                     i -> ('0x' || substr(md5('span-v1' || CAST(doc_id * 1000000 + i AS VARCHAR)), 1, 15))::BIGINT
+                     i -> {_sql_md5_int("'span-v1' || CAST(doc_id * 1000000 + i AS VARCHAR)")}
                           % 1000000 < 50000) AS starts
   FROM t
 ), m AS (
@@ -8184,14 +8391,14 @@ def q_join_size_estimate(spark, sf):
     return cms_join_size_estimate(orders, li, ["k"], width=1024, depth=4)
 
 
-SQL_JOIN_SIZE_ESTIMATE = """
+SQL_JOIN_SIZE_ESTIMATE = f"""
 WITH a AS (
   SELECT cell, count(*) AS n FROM (
-    SELECT r * 1024 + ('0x' || substr(md5('cms-v1' || r || chr(31) || CAST(o_orderkey AS VARCHAR)), 1, 15))::BIGINT % 1024 AS cell
+    SELECT r * 1024 + {_sql_md5_int("'cms-v1' || r || chr(31) || CAST(o_orderkey AS VARCHAR)")} % 1024 AS cell
     FROM orders, range(4) t(r)) GROUP BY 1
 ), b AS (
   SELECT cell, count(*) AS n FROM (
-    SELECT r * 1024 + ('0x' || substr(md5('cms-v1' || r || chr(31) || CAST(l_orderkey AS VARCHAR)), 1, 15))::BIGINT % 1024 AS cell
+    SELECT r * 1024 + {_sql_md5_int("'cms-v1' || r || chr(31) || CAST(l_orderkey AS VARCHAR)")} % 1024 AS cell
     FROM lineitem, range(4) t(r)) GROUP BY 1
 ), per_row AS (
   SELECT rows.r AS row, coalesce(s.ip, 0) AS ip
@@ -8561,9 +8768,8 @@ def _sql_quality_model_ctes() -> str:
     return rf"""base AS (
     SELECT doc_id, text, ' ' || lower(text) || ' ' AS p,
            length(text)::DOUBLE AS n,
-           (CASE WHEN length(trim(text)) = 0 THEN 0
-                 ELSE len(regexp_split_to_array(trim(text), '\s+')) END)::DOUBLE AS toks,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
+           ({_sql_token_count(indent=17)})::DOUBLE AS toks,
+           {_sql_tokens()} AS tk
     FROM documents
 ), feat AS (
     SELECT doc_id,
@@ -8634,36 +8840,14 @@ def q_bpe_encode_bytes(spark, sf):
 
 
 def _sql_bpe_bytes_ctes() -> str:
-    """CTE chain ``words → vocab → bmap/b0/e0 → e1 … eN → v`` replaying
-    byte remap + merge folds of ``BPE_BYTE_MERGES_V1`` over the distinct
-    vocabulary."""
+    """Byte remap (``bmap/b0/e0``) then the merge folds of
+    ``BPE_BYTE_MERGES_V1``."""
     from proxima_platform_spark.functions.bpe import BYTE_HEX_CHARS
 
-    pattern = BPE_PATTERN.replace("'", "''")
     bmap_rows = ", ".join(
         f"('{hx}', chr({ord(ch)}))" for hx, ch in sorted(BYTE_HEX_CHARS.items())
     )
-
-    def step(a: str, b: str) -> str:
-        aq, bq = a.replace("'", "''"), b.replace("'", "''")
-        return (
-            "list_reduce(string_split(enc, chr(31)), (acc, x) -> "
-            f"CASE WHEN x = '{bq}' AND (acc = '{aq}' "
-            f"OR ends_with(acc, chr(31) || '{aq}')) "
-            f"THEN acc || '{bq}' ELSE acc || chr(31) || x END)"
-        )
-
-    levels = ",\n".join(
-        f"e{i + 1} AS (SELECT word, {step(a, b)} AS enc FROM e{i})"
-        for i, (a, b) in enumerate(BPE_BYTE_MERGES_V1)
-    )
-    last = len(BPE_BYTE_MERGES_V1)
-    return f"""words AS (
-  SELECT doc_id, unnest(l) AS word, generate_subscripts(l, 1) AS pos
-  FROM (SELECT doc_id, regexp_extract_all(text, '{pattern}') AS l FROM documents)
-),
-vocab AS (SELECT DISTINCT word FROM words),
-bmap(h, c) AS (VALUES {bmap_rows}),
+    return _sql_bpe_merge_ctes(BPE_BYTE_MERGES_V1, f"""bmap(h, c) AS (VALUES {bmap_rows}),
 b0 AS (
   SELECT word, unnest(hs) AS h, generate_subscripts(hs, 1) AS bpos
   FROM (SELECT word, regexp_extract_all(hex(encode(word)), '..') AS hs FROM vocab)
@@ -8672,11 +8856,7 @@ e0 AS (
   SELECT word, string_agg(c, chr(31) ORDER BY bpos) AS enc
   FROM b0 JOIN bmap USING (h)
   GROUP BY word
-),
-{levels},
-v AS (
-  SELECT word, enc, len(string_split(enc, chr(31))) AS n_tok FROM e{last}
-)"""
+)""")
 
 
 def _sql_bpe_encode_bytes() -> str:
@@ -8729,15 +8909,7 @@ av AS (
            / (sqrt(x.n2) * sqrt(y.n2)) AS cos
     FROM nn x JOIN nn y ON x.cid = y.cid AND x.vec_id < y.vec_id
     WHERE x.n2 > 0 AND y.n2 > 0
-), condemned AS (
-    SELECT id_b, count(*) AS n_near, max(cos) AS max_cos
-    FROM p WHERE cos > 0.40 GROUP BY 1
-)
-SELECT av.vec_id, av.cid AS cluster,
-       c.id_b IS NULL AS kept,
-       coalesce(c.n_near, 0) AS n_near,
-       round(coalesce(c.max_cos, -2.0), 6) AS max_cos
-FROM av LEFT JOIN condemned c ON av.vec_id = c.id_b
+), {_sql_semdedup_report()}
 """
 
 
@@ -8790,26 +8962,6 @@ def q_tokenizer_fertility_bytes(spark, sf):
     )
 
 
-def _sql_tokenizer_fertility_bytes() -> str:
-    return f"""
-WITH {_sql_bpe_bytes_ctes()},
-enc AS (
-  SELECT doc_id,
-         count(*) AS nw,
-         CAST(sum(n_tok) AS BIGINT) AS nt
-  FROM words JOIN v USING (word)
-  GROUP BY doc_id
-)
-SELECT lang,
-       count(*) AS n_docs,
-       CAST(sum(nw) AS BIGINT) AS n_words,
-       CAST(sum(nt) AS BIGINT) AS n_tokens,
-       round(CAST(sum(nt) AS DOUBLE) / CAST(sum(nw) AS DOUBLE), 6) AS fertility
-FROM enc JOIN documents USING (doc_id)
-GROUP BY lang
-"""
-
-
 def q_semantic_dedup_diverse(spark, sf):
     """semantic_dedup under the SemDeDup paper's keep policy — of each
     near-dup pair the member FARTHEST from its centroid survives
@@ -8843,15 +8995,7 @@ av AS (
       ON x.cid = y.cid
      AND (x.d2 > y.d2 OR (x.d2 = y.d2 AND x.vec_id < y.vec_id))
     WHERE x.n2 > 0 AND y.n2 > 0
-), condemned AS (
-    SELECT id_b, count(*) AS n_near, max(cos) AS max_cos
-    FROM p WHERE cos > 0.40 GROUP BY 1
-)
-SELECT av.vec_id, av.cid AS cluster,
-       c.id_b IS NULL AS kept,
-       coalesce(c.n_near, 0) AS n_near,
-       round(coalesce(c.max_cos, -2.0), 6) AS max_cos
-FROM av LEFT JOIN condemned c ON av.vec_id = c.id_b
+), {_sql_semdedup_report()}
 """
 
 
@@ -8887,27 +9031,13 @@ def _sql_self_dedup_spans(k: int = 2) -> str:
     return rf"""
 WITH t AS (
     SELECT doc_id, text,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+           {_sql_tokens()} AS toks
     FROM documents
-), sp AS (
-    SELECT doc_id, text, toks,
-           [array_to_string(toks[s+1:s+{k}], ' ')
-            for s in range(0, greatest(len(toks), 1), {k})] AS spans
-    FROM t
-), ex AS (
-    SELECT doc_id, unnest(spans) AS span, generate_subscripts(spans, 1) AS pos
-    FROM sp
-), kept AS (
-    SELECT doc_id, span, min(pos) AS pos FROM ex GROUP BY 1, 2
-), re AS (
-    SELECT doc_id, count(*) AS n_kept,
-           string_agg(span, ' ' ORDER BY pos) AS text_dedup
-    FROM kept GROUP BY 1
-), joined AS (
+), {_sql_span_dedup_ctes(k, "doc_id, text, toks")}, joined AS (
     SELECT sp.doc_id, len(sp.spans) AS n_spans, re.n_kept, re.text_dedup,
            sp.toks,
            CASE WHEN length(trim(re.text_dedup)) = 0 THEN ['']
-                ELSE string_split(regexp_replace(lower(trim(re.text_dedup)), '\s+', ' ', 'g'), ' ')
+                ELSE {_sql_tokens('re.text_dedup')}
            END AS toks_after
     FROM sp JOIN re USING (doc_id)
 )
@@ -8941,26 +9071,7 @@ def q_dup_ngram_coverage(spark, sf):
 
 def _sql_dup_ngram_coverage(n: int = 8) -> str:
     return rf"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
-    FROM documents
-), counts AS (
-    SELECT doc_id, len(tk) AS n_tokens FROM t
-), occ AS (
-    SELECT doc_id, pos, md5(gram) AS fp
-    FROM (
-        SELECT doc_id,
-               unnest(g) AS gram,
-               generate_subscripts(g, 1) AS pos
-        FROM (SELECT doc_id,
-                     CASE WHEN len(tk) >= {n}
-                          THEN [array_to_string(tk[i:i+{n}-1], ' ')
-                                for i in range(1, len(tk) - {n} + 2)]
-                          ELSE [] END AS g
-              FROM t)
-    )
-), per_doc AS (
+{_sql_ngram_occ_ctes(n)}, per_doc AS (
     SELECT fp, doc_id, count(*) AS o FROM occ GROUP BY 1, 2
 ), dup_fps AS (
     SELECT fp FROM per_doc GROUP BY fp HAVING count(*) >= 2
@@ -9010,51 +9121,7 @@ def q_dedup_substrings(spark, sf):
 
 def _sql_dedup_substrings(n: int = 8) -> str:
     return rf"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
-    FROM documents
-), counts AS (
-    SELECT doc_id, len(tk) AS n_tokens FROM t
-), occ AS (
-    SELECT doc_id, pos, md5(gram) AS fp
-    FROM (
-        SELECT doc_id,
-               unnest(g) AS gram,
-               generate_subscripts(g, 1) AS pos
-        FROM (SELECT doc_id,
-                     CASE WHEN len(tk) >= {n}
-                          THEN [array_to_string(tk[i:i+{n}-1], ' ')
-                                for i in range(1, len(tk) - {n} + 2)]
-                          ELSE [] END AS g
-              FROM t)
-    )
-), per_doc AS (
-    SELECT fp, doc_id, min(pos) AS mp FROM occ GROUP BY 1, 2
-), winners AS (
-    SELECT fp, min(doc_id) AS wd, arg_min(mp, doc_id) AS wp
-    FROM per_doc GROUP BY fp HAVING count(*) >= 2
-), rem AS (
-    SELECT occ.doc_id, occ.pos
-    FROM occ JOIN winners USING (fp)
-    WHERE NOT (occ.doc_id = winners.wd AND occ.pos = winners.wp)
-), removed AS (
-    SELECT DISTINCT doc_id, rp FROM (
-        SELECT doc_id, unnest([pos + i for i in range(0, {n})]) AS rp
-        FROM rem
-    )
-), tok AS (
-    SELECT doc_id, generate_subscripts(tk, 1) AS tp, unnest(tk) AS tok FROM t
-), kept AS (
-    SELECT k.doc_id, k.tp, k.tok FROM tok k
-    WHERE NOT EXISTS (
-        SELECT 1 FROM removed r WHERE r.doc_id = k.doc_id AND r.rp = k.tp
-    )
-), reass AS (
-    SELECT doc_id, count(*) AS n_kept,
-           array_to_string(list(tok ORDER BY tp), ' ') AS text_dedup
-    FROM kept GROUP BY doc_id
-)
+{_sql_ngram_occ_ctes(n)}, {_sql_winner_ctes("occ")}, {_sql_ngram_removed(n)}, {_sql_reassembly("t", "removed")}
 SELECT c.doc_id, c.n_tokens,
        coalesce(r.n_kept, 0) AS n_kept,
        c.n_tokens - coalesce(r.n_kept, 0) AS n_removed,
@@ -9082,79 +9149,12 @@ def q_dedup_substrings_maximal(spark, sf):
 
 def _sql_dedup_substrings_maximal(n: int = 8) -> str:
     return rf"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
-    FROM documents
-), counts AS (
-    SELECT doc_id, len(tk) AS n_tokens FROM t
-), occ AS (
-    SELECT doc_id, pos, md5(gram) AS fp
-    FROM (
-        SELECT doc_id,
-               unnest(g) AS gram,
-               generate_subscripts(g, 1) AS pos
-        FROM (SELECT doc_id,
-                     CASE WHEN len(tk) >= {n}
-                          THEN [array_to_string(tk[i:i+{n}-1], ' ')
-                                for i in range(1, len(tk) - {n} + 2)]
-                          ELSE [] END AS g
-              FROM t)
-    )
-), per_doc AS (
-    SELECT fp, doc_id, min(pos) AS mp FROM occ GROUP BY 1, 2
-), winners AS (
-    SELECT fp, min(doc_id) AS wd, arg_min(mp, doc_id) AS wp
-    FROM per_doc GROUP BY fp HAVING count(*) >= 2
-), rem AS (
-    SELECT occ.doc_id, occ.pos
-    FROM occ JOIN winners USING (fp)
-    WHERE NOT (occ.doc_id = winners.wd AND occ.pos = winners.wp)
-), removed AS (
-    SELECT DISTINCT doc_id, rp FROM (
-        SELECT doc_id, unnest([pos + i for i in range(0, {n})]) AS rp
-        FROM rem
-    )
-), keptw AS (
+{_sql_ngram_occ_ctes(n)}, {_sql_winner_ctes("occ")}, {_sql_ngram_removed(n)}, keptw AS (
     SELECT DISTINCT doc_id, rp FROM (
         SELECT wd AS doc_id, unnest([wp + i for i in range(0, {n})]) AS rp
         FROM winners
     )
-), cut AS (
-    SELECT r.doc_id, r.rp FROM removed r
-    WHERE NOT EXISTS (
-        SELECT 1 FROM keptw k WHERE k.doc_id = r.doc_id AND k.rp = r.rp
-    )
-), run_len AS (
-    SELECT doc_id, grp, count(*) AS rl FROM (
-        SELECT doc_id,
-               rp - row_number() OVER (PARTITION BY doc_id ORDER BY rp) AS grp
-        FROM cut
-    ) GROUP BY 1, 2
-), run_stats AS (
-    SELECT doc_id, count(*) AS n_runs_cut, max(rl) AS max_run_len
-    FROM run_len GROUP BY 1
-), tok AS (
-    SELECT doc_id, generate_subscripts(tk, 1) AS tp, unnest(tk) AS tok FROM t
-), kept AS (
-    SELECT k.doc_id, k.tp, k.tok FROM tok k
-    WHERE NOT EXISTS (
-        SELECT 1 FROM cut c WHERE c.doc_id = k.doc_id AND c.rp = k.tp
-    )
-), reass AS (
-    SELECT doc_id, count(*) AS n_kept,
-           array_to_string(list(tok ORDER BY tp), ' ') AS text_dedup
-    FROM kept GROUP BY doc_id
-)
-SELECT c.doc_id, c.n_tokens,
-       coalesce(r.n_kept, 0) AS n_kept,
-       c.n_tokens - coalesce(r.n_kept, 0) AS n_removed,
-       coalesce(s.n_runs_cut, 0) AS n_runs_cut,
-       coalesce(s.max_run_len, 0) AS max_run_len,
-       coalesce(r.text_dedup, '') AS text_dedup
-FROM counts c
-LEFT JOIN reass r USING (doc_id)
-LEFT JOIN run_stats s USING (doc_id)
+), {_sql_cut_runs_tail("t")}
 """
 
 
@@ -9175,35 +9175,7 @@ def q_ann_knn_join(spark, sf):
 
 
 SQL_ANN_KNN_JOIN = f"""
-WITH base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-  WHERE len(list_filter(embedding::DOUBLE[], x -> x <> 0)) > 0
-),
-b AS (
-  SELECT vec_id, v,
-    {_sql_lsh_bucket(8, 0)} AS b0,
-    {_sql_lsh_bucket(8, 8)} AS b1
-  FROM base),
-cand AS (
-  SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.v AS va, c.v AS vb
-  FROM b a JOIN b c ON a.b0 = c.b0 AND a.vec_id < c.vec_id
-  UNION
-  SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.v AS va, c.v AS vb
-  FROM b a JOIN b c ON a.b1 = c.b1 AND a.vec_id < c.vec_id
-),
-scored AS (
-  SELECT DISTINCT id_a, id_b,
-         list_dot_product(va, vb)
-         / (sqrt(list_dot_product(va, va)) * sqrt(list_dot_product(vb, vb))) AS cos
-  FROM cand
-  WHERE list_dot_product(va, vb)
-        / (sqrt(list_dot_product(va, va)) * sqrt(list_dot_product(vb, vb))) > -2.0
-),
-directed AS (
-  SELECT id_a, id_b, cos FROM scored
-  UNION ALL
-  SELECT id_b AS id_a, id_a AS id_b, cos FROM scored
-),
+{_sql_lsh_knn_ctes()},
 ranked AS (
   SELECT id_a, id_b, cos,
          row_number() OVER (PARTITION BY id_a ORDER BY cos DESC, id_b ASC) AS rank
@@ -9245,23 +9217,9 @@ gated AS (
     WHERE round(1.0 / (1.0 + exp(-z.logit)), 6) >= 0.65
 ), t AS (
     SELECT doc_id, source, score,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
+           {_sql_tokens()} AS toks
     FROM gated
-), sp AS (
-    SELECT doc_id, source, score,
-           [array_to_string(toks[s+1:s+{k}], ' ')
-            for s in range(0, greatest(len(toks), 1), {k})] AS spans
-    FROM t
-), ex AS (
-    SELECT doc_id, unnest(spans) AS span, generate_subscripts(spans, 1) AS pos
-    FROM sp
-), kept AS (
-    SELECT doc_id, span, min(pos) AS pos FROM ex GROUP BY 1, 2
-), re AS (
-    SELECT doc_id, count(*) AS n_kept,
-           string_agg(span, ' ' ORDER BY pos) AS text_dedup
-    FROM kept GROUP BY 1
-), joined AS (
+), {_sql_span_dedup_ctes(k, "doc_id, source, score")}, joined AS (
     SELECT sp.source, sp.score, len(sp.spans) AS n_spans, re.n_kept,
            re.text_dedup
     FROM sp JOIN re USING (doc_id)
@@ -9269,8 +9227,7 @@ gated AS (
 SELECT source,
        count(*) AS n_docs,
        CAST(sum(n_spans - n_kept) AS BIGINT) AS spans_dropped,
-       CAST(sum(CASE WHEN length(trim(text_dedup)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text_dedup), '\s+')) END)
+       CAST(sum({_sql_token_count('text_dedup', 16)})
             AS BIGINT) AS clean_tokens,
        round(sum(score::DECIMAL(18,6))::DOUBLE / count(*), 6) AS avg_score
 FROM joined GROUP BY source
@@ -9368,13 +9325,13 @@ def q_kmv_set_ops(spark, sf):
     return kmv_set_ops(a, b, k=256)
 
 
-SQL_KMV_SET_OPS = """
+SQL_KMV_SET_OPS = f"""
 WITH sa AS (
-  SELECT DISTINCT ('0x' || substr(md5('kmv-v1' || chr(31) || l_orderkey::VARCHAR), 1, 15))::BIGINT AS h
+  SELECT DISTINCT {_sql_md5_int("'kmv-v1' || chr(31) || l_orderkey::VARCHAR")} AS h
   FROM lineitem WHERE year(l_shipdate) = 1996),
 ka AS (SELECT h FROM sa ORDER BY h LIMIT 256),
 sb AS (
-  SELECT DISTINCT ('0x' || substr(md5('kmv-v1' || chr(31) || l_orderkey::VARCHAR), 1, 15))::BIGINT AS h
+  SELECT DISTINCT {_sql_md5_int("'kmv-v1' || chr(31) || l_orderkey::VARCHAR")} AS h
   FROM lineitem WHERE l_discount > 0.06),
 kb AS (SELECT h FROM sb ORDER BY h LIMIT 256),
 uk AS (SELECT h FROM (SELECT h FROM ka UNION SELECT h FROM kb) ORDER BY h LIMIT 256),
@@ -9422,11 +9379,13 @@ def q_quantile_sketch(spark, sf):
     return quantile_sketch_estimate(sk, [0.25, 0.5, 0.75, 0.95])
 
 
-SQL_QUANTILE_SKETCH = """
+_QSK_KEY = _sql_md5_int("""'qsk-v1' || chr(31) || l_orderkey::VARCHAR
+                || chr(31) || l_linenumber::VARCHAR""")
+
+SQL_QUANTILE_SKETCH = f"""
 WITH tagged AS (
     SELECT l_returnflag,
-           ('0x' || substr(md5('qsk-v1' || chr(31) || l_orderkey::VARCHAR
-                || chr(31) || l_linenumber::VARCHAR), 1, 15))::BIGINT AS h,
+           {_QSK_KEY} AS h,
            l_extendedprice AS v
     FROM lineitem
 ), sk AS (
@@ -9591,19 +9550,8 @@ def q_similarity_join_exact(spark, sf):
     return similarity_join_prefix(docs, "doc_id", "text", n=3, threshold=0.5)
 
 
-SQL_SIMILARITY_JOIN_EXACT = r"""
-WITH toks AS (
-  SELECT doc_id,
-         string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3
-              THEN list_distinct([array_to_string(t[i:i+2], ' ')
-                                  for i in range(1, len(t) - 1)])
-              ELSE [] END AS s
-  FROM toks
-), j AS (
+SQL_SIMILARITY_JOIN_EXACT = rf"""
+WITH {_sql_shingle_set_ctes()}, j AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          len(list_intersect(a.s, b.s)) AS n_inter,
          len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS n_union
@@ -9671,10 +9619,10 @@ def q_snm_dedup(spark, sf):
     )
 
 
-SQL_SNM_DEDUP = r"""
+SQL_SNM_DEDUP = rf"""
 WITH keyed AS (
   SELECT doc_id,
-         substr(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), 1, 40) AS k
+         substr({_sql_normalize()}, 1, 40) AS k
   FROM documents
 ), ranked AS (
   SELECT doc_id, k, row_number() OVER (ORDER BY k, doc_id) AS rnk FROM keyed
@@ -9682,18 +9630,7 @@ WITH keyed AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          a.rnk AS rank_a, b.rnk AS rank_b
   FROM ranked a JOIN ranked b ON b.rnk - a.rnk BETWEEN 1 AND 3
-), toks AS (
-  SELECT doc_id,
-         string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 3
-              THEN list_distinct([array_to_string(t[i:i+2], ' ')
-                                  for i in range(1, len(t) - 1)])
-              ELSE [] END AS s
-  FROM toks
-), j AS (
+), {_sql_shingle_set_ctes()}, j AS (
   SELECT id_a, id_b, rank_a, rank_b,
          CASE WHEN len(list_distinct(list_concat(a.s, b.s))) > 0
               THEN len(list_intersect(a.s, b.s))::DOUBLE
@@ -9782,21 +9719,10 @@ def q_triangle_counts(spark, sf):
     return triangle_counts(edges)
 
 
-SQL_TRIANGLE_COUNTS = """
+SQL_TRIANGLE_COUNTS = f"""
 WITH e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a
-  JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-), tri AS (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM e e1
-  JOIN e e2 ON e2.u = e1.u AND e2.v > e1.v
-  JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v
-), nodes AS (
-  SELECT a AS node FROM tri
-  UNION ALL SELECT b FROM tri
-  UNION ALL SELECT c FROM tri
-)
+{_sql_copurchase_edges()}
+), {_sql_triangle_nodes()}
 SELECT node, count(*) AS n_tri FROM nodes GROUP BY node
 """
 
@@ -9871,19 +9797,17 @@ def q_leakage_safe_split(spark, sf):
 
 # same cumulative ranges as hash_split, keyed by the dup-group md5:
 # sorted-name order => test [0, 0.1) -> train [0.1, 0.9) -> validation
-SQL_LEAKAGE_SAFE_SPLIT = r"""
+_LSPLIT_KEY = _sql_md5_int(f"""'lsplit-v1' ||
+               md5({_sql_normalize()})
+           """)
+
+SQL_LEAKAGE_SAFE_SPLIT = rf"""
 WITH keyed AS (
     SELECT doc_id,
-           ('0x' || substr(md5('lsplit-v1' ||
-               md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-           ), 1, 15))::BIGINT % 1000000 AS sk
+           {_LSPLIT_KEY} % 1000000 AS sk
     FROM documents
 )
-SELECT doc_id,
-       CASE WHEN sk < 100000 THEN 'test'
-            WHEN sk < 900000 THEN 'train'
-            ELSE 'validation' END AS split
-FROM keyed
+{_sql_hash_split_select()}
 """
 
 
@@ -9912,17 +9836,19 @@ def q_negative_sampling(spark, sf):
     )
 
 
-SQL_NEGATIVE_SAMPLING = r"""
+_NEG_PAIR_KEY = _sql_md5_int("""'neg-v1' || CAST(a.doc_id AS VARCHAR) || '|'
+                            || CAST(c.doc_id AS VARCHAR)""")
+
+SQL_NEGATIVE_SAMPLING = rf"""
 WITH b AS (
     SELECT doc_id,
-           (('0x' || substr(md5('neg-v1' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+           ({_sql_md5_int("'neg-v1' || CAST(doc_id AS VARCHAR)")}
                % 1000000) % 16 AS own,
-           md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS ex
+           md5({_sql_normalize()}) AS ex
     FROM documents
 ), pairs AS (
     SELECT a.doc_id AS anchor_id, c.doc_id AS negative_id,
-           ('0x' || substr(md5('neg-v1' || CAST(a.doc_id AS VARCHAR) || '|'
-                            || CAST(c.doc_id AS VARCHAR)), 1, 15))::BIGINT
+           {_NEG_PAIR_KEY}
                % 1000000 AS pk
     FROM b a JOIN b c ON (a.own + 1) % 16 = c.own AND a.ex <> c.ex
 ), r AS (
@@ -9969,10 +9895,10 @@ def q_record_linkage(spark, sf):
     )
 
 
-SQL_RECORD_LINKAGE = r"""
+SQL_RECORD_LINKAGE = rf"""
 WITH recs AS (
     SELECT doc_id,
-           substr(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), 1, 48)
+           substr({_sql_normalize()}, 1, 48)
                AS prefix,
            lang, source
     FROM documents
@@ -10032,10 +9958,13 @@ def q_dsir_resample(spark, sf):
     return out.select(F.col("id").alias("doc_id"), "n_grams", "score")
 
 
-SQL_DSIR_RESAMPLE = r"""
+_DSIR_GUMBEL_KEY = _sql_md5_int("""'dsir-v1' ||
+                     CAST(doc_id AS VARCHAR)""")
+
+SQL_DSIR_RESAMPLE = rf"""
 WITH toks AS (
     SELECT doc_id, source,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
+           {_sql_tokens()} AS t
     FROM documents
 ), grams AS (
     SELECT doc_id, source,
@@ -10045,7 +9974,7 @@ WITH toks AS (
     FROM toks
 ), keyed AS (
     SELECT doc_id, source,
-           ('0x' || substr(md5(g), 1, 15))::BIGINT % 512 AS b
+           {_sql_md5_int("g")} % 512 AS b
     FROM grams
 ), cr AS (
     SELECT b, count(*) AS n_raw FROM keyed GROUP BY b
@@ -10075,8 +10004,7 @@ WITH toks AS (
 ), gum AS (
     SELECT doc_id, n_grams,
            round(logw +
-                 round(-ln(-ln(((('0x' || substr(md5('dsir-v1' ||
-                     CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000000)
+                 round(-ln(-ln((({_DSIR_GUMBEL_KEY} % 1000000)
                      + 1)::DOUBLE / 1000001.0)), 8)::DECIMAL(28,10),
                  6)::DECIMAL(28,6) AS score
     FROM per_doc
@@ -10111,12 +10039,9 @@ def _sql_k_core(k: int = 3, rounds: int = 8) -> str:
     # MATERIALIZED: each round references its predecessor 3x (the edge
     # frame + both degree sides); inlined CTEs would re-expand the chain
     # 3^rounds times and re-open the parquet thousands of times
-    head = """
+    head = f"""
 WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a
-  JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity <= 5 AND b.l_quantity <= 5
+{_sql_copurchase_edges(small=True)}
 ), s0 AS MATERIALIZED (SELECT u AS a, v AS b FROM e0 UNION ALL SELECT v, u FROM e0)"""
     parts = [head]
     for i in range(rounds):
@@ -10160,12 +10085,9 @@ def q_label_propagation(spark, sf):
 def _sql_label_propagation(rounds: int = 8) -> str:
     # MATERIALIZED for the same reason as _sql_k_core: each round
     # references its predecessor multiple times
-    head = """
+    head = f"""
 WITH e0 AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a
-  JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity <= 5 AND b.l_quantity <= 5
+{_sql_copurchase_edges(small=True)}
 ), s0 AS MATERIALIZED (SELECT u AS n, v AS m FROM e0 UNION ALL SELECT v, u FROM e0),
 l0 AS MATERIALIZED (SELECT DISTINCT n AS node, n AS lab FROM s0)"""
     parts = [head]
@@ -10523,7 +10445,7 @@ def q_contamination_report(spark, sf):
     )
 
 
-SQL_CONTAMINATION_REPORT = r"""
+SQL_CONTAMINATION_REPORT = rf"""
 WITH sh AS (
     SELECT doc_id,
            list_distinct(CASE WHEN len(t) >= 3
@@ -10531,8 +10453,7 @@ WITH sh AS (
                        for i in range(1, len(t) - 1)]
                  ELSE [] END) AS g
     FROM (SELECT doc_id,
-                 string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
-                              ' ') AS t
+                 {_sql_tokens(indent=30)} AS t
           FROM documents)
 ), ev AS (
     SELECT doc_id AS eval_id, len(g) AS n_eval, unnest(g) AS s
@@ -10587,26 +10508,14 @@ def q_clustering_coefficient(spark, sf):
     )
 
 
-SQL_CLUSTERING_COEFFICIENT = """
+SQL_CLUSTERING_COEFFICIENT = f"""
 WITH e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a
-  JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_quantity <= 5 AND b.l_quantity <= 5
+{_sql_copurchase_edges(small=True)}
 ), deg AS (
   SELECT node, count(*) AS deg FROM (
     SELECT u AS node FROM e UNION ALL SELECT v FROM e
   ) GROUP BY node
-), tri AS (
-  SELECT e1.u AS a, e1.v AS b, e2.v AS c
-  FROM e e1
-  JOIN e e2 ON e2.u = e1.u AND e2.v > e1.v
-  JOIN e e3 ON e3.u = e1.v AND e3.v = e2.v
-), nodes AS (
-  SELECT a AS node FROM tri
-  UNION ALL SELECT b FROM tri
-  UNION ALL SELECT c FROM tri
-), ntri AS (
+), {_sql_triangle_nodes()}, ntri AS (
   SELECT node, count(*) AS n_tri FROM nodes GROUP BY node
 )
 SELECT d.node, d.deg, coalesce(t.n_tri, 0) AS n_tri,
@@ -10787,10 +10696,10 @@ def q_vocab_growth(spark, sf):
     return vocab_growth(docs, "doc_id", "text", every=50)
 
 
-SQL_VOCAB_GROWTH = r"""
+SQL_VOCAB_GROWTH = rf"""
 WITH t AS (
     SELECT doc_id - doc_id % 50 AS b,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
+           {_sql_tokens()} AS tk
     FROM documents
 ), per_bucket AS (
     SELECT b, count(*) AS docs, sum(len(tk)) AS toks FROM t GROUP BY b
@@ -10854,9 +10763,9 @@ def q_pmi_bigrams(spark, sf):
     return pmi_bigrams(docs, min_count=5, top_k=50)
 
 
-SQL_PMI_BIGRAMS = r"""
+SQL_PMI_BIGRAMS = rf"""
 WITH t AS (
-    SELECT string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
+    SELECT {_sql_tokens()} AS tk
     FROM documents
 ), big AS (
     SELECT tk[i] AS v, tk[i+1] AS w
@@ -10897,10 +10806,10 @@ def q_random_projection(spark, sf):
     return random_projection(emb, dim=dim, out_dim=16)
 
 
-SQL_RANDOM_PROJECTION = """
+SQL_RANDOM_PROJECTION = f"""
 WITH r AS (
     SELECT j, i,
-           CASE (('0x' || substr(md5('rp-v1|' || i || '|' || j), 1, 15))::BIGINT % 6)
+           CASE ({_sql_md5_int("'rp-v1|' || i || '|' || j")} % 6)
                 WHEN 0 THEN 1 WHEN 1 THEN -1 ELSE 0 END AS s
     FROM range(16) t1(j), range(64) t2(i)
 ), v AS (
@@ -10966,35 +10875,7 @@ def q_hard_negative_mining(spark, sf):
 
 def _sql_hard_negative_mining() -> str:
     return f"""
-WITH base AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-  WHERE len(list_filter(embedding::DOUBLE[], x -> x <> 0)) > 0
-),
-b AS (
-  SELECT vec_id, v,
-    {_sql_lsh_bucket(8, 0)} AS b0,
-    {_sql_lsh_bucket(8, 8)} AS b1
-  FROM base),
-cand AS (
-  SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.v AS va, c.v AS vb
-  FROM b a JOIN b c ON a.b0 = c.b0 AND a.vec_id < c.vec_id
-  UNION
-  SELECT a.vec_id AS id_a, c.vec_id AS id_b, a.v AS va, c.v AS vb
-  FROM b a JOIN b c ON a.b1 = c.b1 AND a.vec_id < c.vec_id
-),
-scored AS (
-  SELECT DISTINCT id_a, id_b,
-         list_dot_product(va, vb)
-         / (sqrt(list_dot_product(va, va)) * sqrt(list_dot_product(vb, vb))) AS cos
-  FROM cand
-  WHERE list_dot_product(va, vb)
-        / (sqrt(list_dot_product(va, va)) * sqrt(list_dot_product(vb, vb))) > -2.0
-),
-directed AS (
-  SELECT id_a, id_b, cos FROM scored
-  UNION ALL
-  SELECT id_b AS id_a, id_a AS id_b, cos FROM scored
-),
+{_sql_lsh_knn_ctes()},
 labeled AS (
   SELECT d.id_a, d.id_b, d.cos,
          la.label AS anchor_label, lb.label AS negative_label
@@ -11099,12 +10980,8 @@ def q_containment_pairs(spark, sf):
     )
 
 
-SQL_CONTAINMENT_PAIRS = r"""
-WITH t AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS tk
-    FROM documents
-), sh AS (
+SQL_CONTAINMENT_PAIRS = rf"""
+WITH {_sql_doc_tokens()}, sh AS (
     SELECT DISTINCT doc_id,
            unnest(CASE WHEN len(tk) >= 4
                   THEN [array_to_string(tk[i:i+3], ' ') for i in range(1, len(tk) - 2)]
@@ -11157,65 +11034,15 @@ def q_ccnet_pipeline(spark, sf):
 
 def _sql_ccnet_pipeline() -> str:
     return rf"""
-WITH tk AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-    FROM documents
-), st AS (
-    SELECT doc_id, toks, unnest(range(0, greatest(len(toks), 1), 10)) AS s
-    FROM tk
-), seg AS (
-    SELECT doc_id, s // 10 AS pos, array_to_string(toks[s+1:s+10], ' ') AS para
-    FROM st
-), nz AS (
-    SELECT * FROM seg WHERE len(para) > 0
-), kkeep AS (
-    SELECT doc_id, pos, para,
-           row_number() OVER (PARTITION BY md5(para) ORDER BY doc_id, pos) AS rn
-    FROM nz
-), dd AS MATERIALIZED (
+{_sql_paragraph_ctes("kkeep")}, dd AS MATERIALIZED (
     -- deduped + reassembled text; docs with zero kept paragraphs drop out
     SELECT doc_id, string_agg(para, chr(10) ORDER BY pos) AS text
     FROM kkeep WHERE rn = 1 GROUP BY doc_id
 ),
 -- NB language model trained on the ORIGINAL labeled corpus (train split)
 tr AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
-tr_tok AS (
-    SELECT lang AS c,
-           unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
-    FROM tr
-),
-cwc AS (SELECT c, w, count(*) AS cnt FROM tr_tok GROUP BY 1, 2),
-ctok AS (SELECT c, sum(cnt) AS tc FROM cwc GROUP BY 1),
-vocab AS (SELECT count(DISTINCT w) AS v FROM cwc),
-cdocs AS (SELECT lang AS c, count(*) AS nc FROM tr GROUP BY 1),
-nd AS (SELECT count(*) AS nd FROM tr),
-classes AS (
-    SELECT c, tc, v,
-           round(ln(nc / nd), 8)::DECIMAL(28,10) AS log_prior,
-           round(ln(1.0 / (tc + v)), 8)::DECIMAL(28,10) AS lp_unseen
-    FROM cdocs CROSS JOIN nd JOIN ctok USING (c) CROSS JOIN vocab
-),
-model AS (
-    SELECT c, w,
-           round(ln((cnt + 1) / (tc + v)), 8)::DECIMAL(28,10) AS lp
-    FROM cwc JOIN ctok USING (c) CROSS JOIN vocab
-),
-te_tok AS (
-    SELECT id, w, count(*) AS n FROM (
-        SELECT doc_id AS id,
-               unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
-        FROM dd
-    ) GROUP BY 1, 2
-),
-ll AS (
-    SELECT t.id, cl.c,
-           sum(t.n * coalesce(m.lp, cl.lp_unseen)) AS ll
-    FROM te_tok t
-    CROSS JOIN classes cl
-    LEFT JOIN model m ON m.c = cl.c AND m.w = t.w
-    GROUP BY 1, 2
-),
+{_sql_nb_model_ctes()},
+{_sql_nb_loglik_ctes("dd")},
 best AS (
     SELECT id, c AS pred,
            row_number() OVER (
@@ -11247,8 +11074,7 @@ m5 AS (
     FROM m5, bounds
 ), ntok AS (
     SELECT doc_id,
-           CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tok
+           {_sql_token_count(indent=16)} AS n_tok
     FROM dd
 )
 SELECT b.pred AS pred_lang, bk.bucket,
@@ -11563,75 +11389,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
-def _sql_shingle_ctes(src: str = "documents") -> str:
-    """CTEs ``toks → sh`` over ``src``: the normalized token list ``t``
-    and the word-3-gram list ``shingles`` per doc (functions/dedup.py
-    ``tokens`` / ``shingles_from_tokens``)."""
-    return rf"""toks AS (
-    SELECT doc_id,
-           string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-    FROM {src}
-), sh AS (
-    SELECT doc_id,
-           CASE WHEN len(t) >= 3
-                THEN [array_to_string(t[i:i+2], ' ') for i in range(1, len(t) - 1)]
-                ELSE [] END AS shingles
-    FROM toks
-)"""
-
-
-def _sql_band_keys(items: list[str], bands: int, sep: str = ",\n               ") -> str:
-    """The md5 band-key list of functions/dedup.py ``_band_keys``: key b
-    is ``md5('b|' || v[b·r] || '|' || …)`` over the SQL value ``items``."""
-    rows = len(items) // bands
-    return sep.join(
-        f"md5('{b}|' || " + " || '|' || ".join(items[b * rows:(b + 1) * rows]) + ")"
-        for b in range(bands)
-    )
-
-
-def _sql_banded_from(id_col: str = "doc_id") -> str:
-    return f"FROM banded a JOIN banded b ON a.band = b.band AND a.{id_col} < b.{id_col}"
-
-
-def _sql_banded_pairs(indent: str = "", id_col: str = "doc_id") -> str:
-    """The banded self-join tail: distinct ``(id_a, id_b)``, id_a < id_b,
-    of the docs sharing a band key (functions/dedup.py
-    ``_banded_self_join``)."""
-    return (
-        f"{indent}SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b\n"
-        f"{indent}{_sql_banded_from(id_col)}"
-    )
-
-
-def _sql_minhash_ctes(
-    src: str = "documents", *, bits: int | None = None, bands: int = 4
-) -> str:
-    """CTE chain ``toks → sh → sig → banded`` computing MinHash+LSH band
-    keys over ``src``, mirroring functions/dedup.py: base hash h = (60-bit
-    int of md5(shingle)) % 2^30; sig[i] = min((A[i]*h + B[i]) % P), kept
-    to its low ``bits`` bits for b-bit MinHash; ``bands`` md5 band keys."""
-    from proxima_platform_spark.functions.dedup import (
-        MINHASH_A, MINHASH_B, MINHASH_PRIME,
-    )
-
-    base = "(('0x' || substr(md5(s), 1, 15))::BIGINT % 1073741824)"
-    trunc = "" if bits is None else f" % {2**bits}"
-    sig_items = ",\n               ".join(
-        f"list_min([({MINHASH_A[i]} * {base} + {MINHASH_B[i]}) % {MINHASH_PRIME}"
-        f" for s in shingles]){trunc}"
-        for i in range(8)
-    )
-    band_items = _sql_band_keys([f"sg[{i + 1}]::VARCHAR" for i in range(8)], bands)
-    return rf"""{_sql_shingle_ctes(src)}, sig AS (
-    SELECT doc_id,
-           [{sig_items}] AS sg
-    FROM sh WHERE len(shingles) > 0
-), banded AS (
-    SELECT doc_id, unnest([{band_items}]) AS band FROM sig
-)"""
-
-
 def _sql_dedup_minhash() -> str:
     return f"""
 WITH {_sql_minhash_ctes("documents")}
@@ -11648,7 +11405,7 @@ WITH {_sql_scored_ctes()},
 gated AS (
     SELECT * FROM scored WHERE quality >= 0.8 AND lang_guess = 'en'
 ), exact AS (
-    SELECT *, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+    SELECT *, md5({_sql_normalize()}) AS fp
     FROM gated
 ), kept AS (
     SELECT doc_id, source, text, quality FROM exact
@@ -11673,7 +11430,7 @@ def oracle_sql() -> dict[str, str]:
         "self_dedup_spans": _sql_self_dedup_spans(),
         "bpe_encode_bytes": _sql_bpe_encode_bytes(),
         "semantic_dedup": SQL_SEMANTIC_DEDUP,
-        "tokenizer_fertility_bytes": _sql_tokenizer_fertility_bytes(),
+        "tokenizer_fertility_bytes": _sql_tokenizer_fertility(_sql_bpe_bytes_ctes()),
         "dup_ngram_coverage": _sql_dup_ngram_coverage(),
         "dedup_substrings": _sql_dedup_substrings(),
         "dedup_substrings_maximal": _sql_dedup_substrings_maximal(),
@@ -11725,7 +11482,7 @@ def oracle_sql() -> dict[str, str]:
         "bpe_merge_candidates": SQL_BPE_MERGE_CANDIDATES,
         "bpe_encode": _sql_bpe_encode(),
         "token_budget_pack": _sql_token_budget_pack(),
-        "tokenizer_fertility": _sql_tokenizer_fertility(),
+        "tokenizer_fertility": _sql_tokenizer_fertility(_sql_bpe_ctes()),
         "embedding_covariance": SQL_EMBEDDING_COVARIANCE,
         "topk_per_group": SQL_TOPK_PER_GROUP,
         "ohlc_bars": SQL_OHLC_BARS,

@@ -11,7 +11,6 @@ from proxima_platform_spark.functions.core import (
 )
 from proxima_platform_spark.functions.text import (
     chunk_documents,
-    doc_fingerprint,
     language_id,
     quality_lang_arrow,
     quality_score,
@@ -73,7 +72,6 @@ __all__ = [
     "cohort_retention",
     "cosine_similarity",
     "distinct_ladder",
-    "doc_fingerprint",
     "dot",
     "epoch_ms",
     "exact_dup_key",

@@ -177,14 +177,6 @@ def _quality_model_score_build(text: Column) -> Column:
     return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
 
 
-def doc_fingerprint(text: Column) -> Column:
-    """Deterministic content fingerprint: md5 of the
-    lowercased/whitespace-collapsed text. (The rolling-hash fingerprint for
-    shingle windows lives in functions.dedup.)"""
-    normalized = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    return F.md5(normalized)
-
-
 # GPT-2-style pre-tokenizer pattern (public BPE recipes): contractions,
 # space-prefixed letter runs, digit runs, punctuation runs. RE2-compatible
 # (no lookarounds) so Spark and DuckDB evaluate it identically.

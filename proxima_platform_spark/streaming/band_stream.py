@@ -34,20 +34,18 @@ documented on their ``ingest``.
 At scale: state is O(docs · bands) rows — the smallest per-doc state of
 any maintainer family; the per-batch probe is one equi-join ON the band
 key (batch side small — AQE broadcasts it) and one distinct. Storage is
-the ``GenerationStore`` inherited from ``ContinuousWinnowIndex``.
+a ``GenerationStore`` of distinct state rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from proxima_platform_spark.functions import dedup
-from proxima_platform_spark.streaming.winnow_stream import (
-    ContinuousWinnowIndex,
-)
+from proxima_platform_spark.streaming.store import GenerationStore
 
 
-class ContinuousBandIndex(ContinuousWinnowIndex):
+class ContinuousBandIndex(GenerationStore):
     """Append-only band-key index. Band-key instances implement
     :meth:`_band_rows` with the batch operator's own banding stage and
     store ``(doc_id, fp)`` rows; an instance banding on other columns
@@ -57,6 +55,24 @@ class ContinuousBandIndex(ContinuousWinnowIndex):
 
     #: the state-row columns two documents must share to pair
     _keys: tuple[str, ...] = ("fp",)
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        *,
+        id_col: str = "doc_id",
+        text_col: str = "text",
+        sink=None,
+        compact_every: int = 4,
+    ) -> None:
+        super().__init__(spark, path, compact_every=compact_every)
+        self.id_col = id_col
+        self.text_col = text_col
+        self.sink = sink
+
+    def _merged(self, gens: list[str]) -> DataFrame:
+        return self._union(gens).distinct()
 
     def _band_rows(self, batch_df: DataFrame) -> DataFrame:
         """``(id, band)`` rows for the batch — the batch operator's
@@ -79,7 +95,7 @@ class ContinuousBandIndex(ContinuousWinnowIndex):
 
     def band_rows(self) -> DataFrame | None:
         """The maintained distinct index rows."""
-        return self.fingerprints()
+        return self._state()
 
     def ingest(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         """One online step: band the batch, report every (id_a, id_b)
@@ -104,7 +120,7 @@ class ContinuousBandIndex(ContinuousWinnowIndex):
         rows_b = (
             self._state_rows(batch_df).distinct().localCheckpoint(eager=False)
         )
-        idx = self.fingerprints()
+        idx = self._state()
         if idx is None:
             fresh = probe = rows_b
         else:

@@ -987,7 +987,8 @@ class TestStreamingCorpusIngest:
         dropDuplicatesWithinWatermark on the fingerprint. Cross-micro-batch
         duplicates inside the watermark are dropped online; the gate runs
         before the stateful stage so junk never enters the dedup state."""
-        from proxima_platform_spark.functions.text import doc_fingerprint, quality_score
+        from proxima_platform_spark.functions.dedup import exact_dup_key
+        from proxima_platform_spark.functions.text import quality_score
         from proxima_platform_spark.streaming.stateful import distinct_within_watermark
 
         good = (
@@ -1014,7 +1015,7 @@ class TestStreamingCorpusIngest:
             .parquet(f"{src}/f*")
         )
         gated = stream.where(quality_score(F.col("text")) >= 0.5).withColumn(
-            "fp", doc_fingerprint(F.col("text"))
+            "fp", exact_dup_key(F.col("text"))
         )
         dedup = distinct_within_watermark(
             gated, stamp="ts", delay="10 minutes", subset=["fp"]

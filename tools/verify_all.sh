@@ -46,5 +46,5 @@ case "$stage" in
   plans) run_plans ;;
   bench) run_bench ;;
   all)   run_sweep && run_tests && run_plans && run_bench ;;
-  *) echo "usage: $0 [sweep|tests|bench|all]" >&2; exit 2 ;;
+  *) echo "usage: $0 [sweep|tests|plans|bench|all]" >&2; exit 2 ;;
 esac
